@@ -331,7 +331,7 @@ object Main {
         resolve
       case None => baseSources
     }
-    val outs = Runner(Materializer(wh), runSources, cfg.fullRefresh,
+    Runner(Materializer(wh), runSources, cfg.fullRefresh,
         threads = cfg.threads,
         // intent commits at MODEL START — after a crash it marks
         // exactly the in-flight (possibly written-but-unjournaled)
@@ -360,7 +360,7 @@ object Main {
     ManifestState.save(wh, ManifestState.of(graph))
     Retry.commit(wh, Map.empty)
     Retry.commit(wh, Map.empty, Retry.intentArtifact)
-    val counts = persisted.map(m => m.name -> outs(m.name).count()).toMap
+    val counts = persisted.map(m => m.name -> wh.rowCount(m.targetSchema, m.name)).toMap
     import scala.jdk.CollectionConverters._
     RunReport(order, counts, secs.asScala.toMap, wall)
   }
@@ -394,7 +394,7 @@ object Main {
     val counts = graph.models.collect {
       case m if m.materialization != Materialization.View &&
           ran.contains(m.name) =>
-        m.name -> wh.read(m.targetSchema, m.name).count()
+        m.name -> wh.rowCount(m.targetSchema, m.name)
     }.toMap
     RetryReport(ran, skipped, counts)
   }
@@ -552,11 +552,11 @@ object Main {
       else m))
     val order = ciGraph.topoOrder.filter(sel.closure.contains)
     val resolve = deferResolve(graph, wh, sources(spark, cfg))
-    val outs = Runner(Materializer(Warehouse(spark, cfg.warehouseRoot)), resolve,
-      cfg.fullRefresh, threads = cfg.threads).runSelected(ciGraph, order)
+    Runner(Materializer(wh), resolve, cfg.fullRefresh, threads = cfg.threads)
+      .runSelected(ciGraph, order)
     val counts = order.collect {
       case n if ciGraph.byName(n).materialization != Materialization.View =>
-        n -> outs(n).count()
+        n -> wh.rowCount(ciGraph.byName(n).targetSchema, n)
     }.toMap
     CiReport(sel, copies, order, counts, ciSchema)
   }

@@ -42,11 +42,13 @@ final case class TableCopier(wh: Warehouse, parallelism: Int = 4) {
     if (!wh.exists(sourceSchema, table))
       CopyResult(table, sourceSchema, tgt, 0L, dryRun, "missing_source")
     else {
-      val df = wh.read(sourceSchema, table)
-      if (dryRun) CopyResult(table, sourceSchema, tgt, df.count(), dryRun, "would_copy")
+      // row counts come from the parquet footers: no count() job
+      if (dryRun)
+        CopyResult(table, sourceSchema, tgt, wh.rowCount(sourceSchema, table),
+          dryRun, "would_copy")
       else {
-        wh.write(df, tgt, table)
-        CopyResult(table, sourceSchema, tgt, wh.read(tgt, table).count(), dryRun, "copied")
+        wh.write(wh.read(sourceSchema, table), tgt, table)
+        CopyResult(table, sourceSchema, tgt, wh.rowCount(tgt, table), dryRun, "copied")
       }
     }
   }

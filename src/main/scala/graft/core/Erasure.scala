@@ -58,12 +58,12 @@ object Erasure {
       keys: DataFrame): Report = {
     val kc = keys.columns.head
     val before = wh.read(schema, table)
-    val nBefore = before.count()
+    val nBefore = wh.rowCount(schema, table)
     val kept = before.join(
       broadcast(keys.select(col(kc).as(keyCol)).distinct()),
       Seq(keyCol), "left_anti")
     wh.overwriteStaged(kept, schema, table)
-    val nAfter = wh.read(schema, table).count()
+    val nAfter = wh.rowCount(schema, table)
     Report(s"$schema.$table", nBefore, nBefore - nAfter, nAfter)
   }
 
@@ -78,10 +78,9 @@ object Erasure {
       purge(wh, schema, table, keyCol, keys)
     }
     val rebuilt = subject.rebuilds.map { case (schema, table, build) =>
-      val before = if (wh.exists(schema, table))
-        wh.read(schema, table).count() else 0L
+      val before = if (wh.exists(schema, table)) wh.rowCount(schema, table) else 0L
       wh.overwriteStaged(build(wh), schema, table)
-      val after = wh.read(schema, table).count()
+      val after = wh.rowCount(schema, table)
       Report(s"$schema.$table", before, before - after, after)
     }
     val all = purged ++ rebuilt

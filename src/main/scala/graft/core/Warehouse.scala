@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooters
 
 /** A parquet "warehouse": `root/<schema>/<table>` directories play the
   * role of the reference's Postgres schemas/tables
@@ -8,6 +9,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the `raw_edu` schema). At cluster scale the root would be an
   * object-store prefix; nothing here assumes a local filesystem —
   * all IO goes through Spark's Hadoop FS layer.
+  *
+  * Table metadata comes from parquet footers on the driver: [[read]]
+  * takes its schema from one footer and [[rowCount]] sums row-group
+  * counts over every footer, so neither launches a Spark job.
   */
 final case class Warehouse(spark: SparkSession, root: String) {
   def path(schema: String, table: String): String = s"$root/$schema/$table"
@@ -35,9 +40,24 @@ final case class Warehouse(spark: SparkSession, root: String) {
 
   def exists(schema: String, table: String): Boolean = heal(schema, table)
 
+  /** The table as a DataFrame. Its data schema comes from one parquet
+    * footer read on the driver (the file Spark's own inference would
+    * pick), so resolving the read launches no Spark job; partition
+    * columns are discovered from the paths as before. A table with no
+    * data file fails as `spark.read.parquet` does.
+    */
   def read(schema: String, table: String): DataFrame = {
     heal(schema, table)
-    spark.read.parquet(path(schema, table))
+    ParquetFooters.read(spark, path(schema, table))
+  }
+
+  /** Rows in the table, summed from its parquet footers' row-group
+    * counts on the driver: the value `read(schema, table).count()`
+    * returns, without the job. 0 for a table with no data file.
+    */
+  def rowCount(schema: String, table: String): Long = {
+    heal(schema, table)
+    ParquetFooters.rowCount(spark, path(schema, table))
   }
 
   def write(df: DataFrame, schema: String, table: String,

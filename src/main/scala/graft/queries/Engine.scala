@@ -1417,7 +1417,7 @@ object Engine {
         when(col("o_orderkey") % 5 === 0, lit(null).cast(LongType))
           .otherwise(col("o_orderkey")))
     val (ok2, r2) = Wap.publish(wh, "analytics", "orders_wap", bad, checks)
-    val finalRows = wh.read("analytics", "orders_wap").count()
+    val finalRows = wh.rowCount("analytics", "orders_wap")
     spark.createDataFrame(
         r1.map(a => (1, a.check, a.violations, ok1)) ++
         r2.map(a => (2, a.check, a.violations, ok2)) :+
@@ -2388,7 +2388,7 @@ object Engine {
           })),
         postHooks = Seq(Hook("audit_mart", "audit mart row count", () =>
           audit("__hook:post:mart_era_revenue", () =>
-            wh.read("analytics", "mart_era_revenue").count().toDouble))))))
+            wh.rowCount("analytics", "mart_era_revenue").toDouble))))))
     val sources: String => DataFrame = {
       case "year_dim" => wh.read("raw", "year_dim") // pre-hook-created
       case n => c.table(n)

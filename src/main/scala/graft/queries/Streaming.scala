@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooters
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -60,16 +61,14 @@ object Streaming {
     val model = Model("events_inc", Seq("events"),
       Materialization.Incremental(IncrementalStrategy.Append("ts")),
       ctx => ctx.source("events"))
-    // the file-stream source requires a DIRECTORY; expose the single
-    // parquet file through a temp dir (at scale this is the landing
+    // the file-stream source requires a DIRECTORY; expose the events
+    // files through a temp dir (at scale this is the landing
     // directory new files drop into). The stream schema is PROBED from
     // the batch relation — never hard-coded — so whatever ts encoding
     // the landing files carry, Catalog.normalizeEventTs (the one
     // events-time chokepoint) yields the canonical TIMESTAMP_NTZ.
     val srcDir = Scratch.dir("e03_src")
-    java.nio.file.Files.createSymbolicLink(
-      srcDir.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
+    linkLanding(spark, dir, "events", srcDir)
     val stream = Catalog.normalizeEventTs(
       spark.readStream.schema(Catalog(spark, dir).eventsRawSchema)
         .parquet(srcDir.toString))
@@ -262,11 +261,51 @@ object Streaming {
     */
   private def withStreamShufflePartitions[A](
       spark: org.apache.spark.sql.SparkSession, landing: String*)(
-      f: => A): A = {
-    val k = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(k)
-    spark.conf.set(k, streamShufflePartitions(spark, landing: _*).toString)
-    try f finally spark.conf.set(k, prev)
+      f: => A): A =
+    withConfs(spark, "spark.sql.shuffle.partitions" ->
+      streamShufflePartitions(spark, landing: _*).toString)(f)
+
+  /** Run `f` with `confs` set on the session, then restore each
+    * previous value (or unset it): the way an entry pins a conf its
+    * result depends on without leaking it into later queries.
+    */
+  private def withConfs[A](spark: org.apache.spark.sql.SparkSession,
+      confs: (String, String)*)(f: => A): A = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Land catalog `table` in the file-stream source directory
+    * `srcDir`: one symlink per data file, so a single-file table and a
+    * directory of part files feed the stream the same rows (a link to
+    * the directory itself is a source entry the stream reads nothing
+    * from). The single-file form keeps the link name
+    * `<prefix><table>.parquet`; part files land as
+    * `<prefix><table>-<part name>`. Data files are found by the
+    * warehouse's footer listing, so `_`/`.` entries are skipped the way
+    * Spark skips them. Returns the links.
+    */
+  private def linkLanding(spark: org.apache.spark.sql.SparkSession,
+      dir: String, table: String, srcDir: java.nio.file.Path,
+      prefix: String = ""): Seq[java.nio.file.Path] = {
+    val root = java.nio.file.Paths.get(s"$dir/$table.parquet").toAbsolutePath.normalize
+    val files = ParquetFooters.dataFiles(spark.sparkContext.hadoopConfiguration,
+      root.toString).map(f => java.nio.file.Paths.get(f.getPath.toUri)).toSeq
+    require(files.nonEmpty, s"no data file to land under $root")
+    files.map { f =>
+      val name =
+        if (f == root) s"$prefix$table.parquet"
+        else {
+          require(f.getParent == root,
+            s"$root is partitioned; a flat stream source cannot carry $f")
+          s"$prefix$table-${f.getFileName}"
+        }
+      java.nio.file.Files.createSymbolicLink(srcDir.resolve(name), f)
+    }
   }
 
   /** Run `f` with the state-store provider chosen for the
@@ -311,19 +350,13 @@ object Streaming {
     // happen in background maintenance) — the documented production
     // setting for frequent-commit stateful jobs; without it every
     // micro-batch re-snapshots all 2×partitions join stores
-    val confs = Seq(
+    try withConfs(spark,
       "spark.sql.streaming.stateStore.providerClass" ->
         ("org.apache.spark.sql.execution.streaming.state." +
           "RocksDBStateStoreProvider"),
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally {
-      prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+        "true")(f)
+    finally {
       // drop the terminated query's providers NOW — left to the lazy
       // maintenance cycle, the RocksDB natives + background threads
       // ride along into whatever runs next in this session (measured
@@ -423,14 +456,12 @@ object Streaming {
     val (srcDir, outDir, ckpt) = e08Dirs.computeIfAbsent(fxKey(spark, dir),
         _ => Phase.timed("e08_stream_stream_join") {
       val src = Scratch.dir("e08_src")
-      java.nio.file.Files.createSymbolicLink(
-        src.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$dir/events.parquet"))
+      linkLanding(spark, dir, "events", src)
       // per-leg sentinels (shared helper, see writeWatermarkSentinels)
       // so BOTH legs' watermarks advance and join state gets evicted;
       // sentinels carry distinct negative user_ids so the inner join
       // can never emit them
-      writeWatermarkSentinels(spark.read.parquet(s"$dir/events.parquet"),
+      writeWatermarkSentinels(Catalog(spark, dir).table("events"),
         src, Seq("view", "purchase"), "e08")
       (src.toString, Scratch.dir("e08_out").toString,
         Scratch.dir("e08_ckpt").toString)
@@ -496,9 +527,7 @@ object Streaming {
         IncrementalStrategy.Merge(Seq("user_id"), Some("last_ts"))),
       ctx => ctx.source("events"))
     val srcDir = Scratch.dir("e09_src")
-    java.nio.file.Files.createSymbolicLink(
-      srcDir.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
+    linkLanding(spark, dir, "events", srcDir)
     val ckpt = Scratch.dir("e09_ckpt")
     try withStreamShufflePartitions(spark, srcDir.toString) {
       // schema probed + ts normalized through the chokepoint (see e03)
@@ -581,7 +610,7 @@ object Streaming {
     val (whRoot, srcDir, ckpt) = e11State.computeIfAbsent(fxKey(spark, dir),
         _ => Phase.timed("e11_stream_ingest_dedup") {
       val wh = Warehouse.scratch(spark, "e11")
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = Catalog(spark, dir).documents
       val bucket = substring(md5(col("doc_id").cast("string").cast("binary")), 1, 1)
       wh.write(docs.filter(bucket < "c")
         .select(col("doc_id"), digest.as("content_hash")),
@@ -615,7 +644,7 @@ object Streaming {
     })
     val wh = Warehouse(spark, whRoot)
     withStreamShufflePartitions(spark, srcDir.toString) {
-      val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+      val schema = Catalog(spark, dir).documents.schema
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(srcDir.toString)
@@ -659,9 +688,7 @@ object Streaming {
           lastWriteWins = true, tiebreak = Seq("last_event_id"))),
       ctx => ctx.source("events"))
     val srcDir = Scratch.dir("e12_src")
-    java.nio.file.Files.createSymbolicLink(
-      srcDir.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
+    linkLanding(spark, dir, "events", srcDir)
     val ckpt = Scratch.dir("e12_ckpt")
     try withStreamShufflePartitions(spark, srcDir.toString) {
       val stream = Catalog.normalizeEventTs(
@@ -757,18 +784,16 @@ object Streaming {
     val (srcDir, outDir, ckpt) = e14Dirs.computeIfAbsent(fxKey(spark, dir),
         _ => Phase.timed("e14_stream_join_outer") {
       val src = Scratch.dir("e14_src")
-      java.nio.file.Files.createSymbolicLink(
-        src.resolve("a_events.parquet"),
-        java.nio.file.Paths.get(s"$dir/events.parquet"))
-      require(src.resolve("a_events.parquet").toFile
-        .setLastModified(1700000000000L), "cannot order e14 landing files")
+      linkLanding(spark, dir, "events", src, prefix = "a_").foreach(l =>
+        require(l.toFile.setLastModified(1700000000000L),
+          "cannot order e14 landing files"))
       // Per-leg sentinels (view AND purchase typed — shared helper).
       // The r10 failure mode: view-only sentinels advanced just the
       // left leg's watermark, the purchases leg (filtered before
       // withWatermark) never saw one, and the MIN-policy global
       // watermark stalled — the last ~2.5h of unmatched left rows
       // never emitted their null-extended rows (7990 vs 8019).
-      writeWatermarkSentinels(spark.read.parquet(s"$dir/events.parquet"),
+      writeWatermarkSentinels(Catalog(spark, dir).table("events"),
         src, Seq("view", "purchase"), "e14")
       (src, Scratch.dir("e14_out"), Scratch.dir("e14_ckpt"))
     })
@@ -778,7 +803,7 @@ object Streaming {
       // in ONE data batch, which emits every inner match
       // (watermark-independent); the sentinels' far-future event time
       // then advances the watermark, and the engine's NO-DATA
-      // micro-batches (noDataMicroBatches, on by default — AvailableNow
+      // micro-batches (noDataMicroBatches, pinned on below — AvailableNow
       // keeps running them while the watermark moves) evict the join
       // state and emit every unmatched left row's null-extended form.
       // Outer-row emission only needs SOME later batch to run with an
@@ -801,14 +826,16 @@ object Streaming {
           col("ts") >= col("p_ts") &&
           col("ts") <= col("p_ts") + expr("interval 30 minutes"),
         "left_outer")
-      withStreamShufflePartitions(spark, srcDir.toString) {
-        withRocksDbState(spark, default = false) {
-          val query = joined.writeStream
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.AvailableNow())
-            .format("parquet").option("path", outDir.toString)
-            .start()
-          query.awaitTermination()
+      withConfs(spark, "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") {
+        withStreamShufflePartitions(spark, srcDir.toString) {
+          withRocksDbState(spark, default = false) {
+            val query = joined.writeStream
+              .option("checkpointLocation", ckpt.toString)
+              .trigger(Trigger.AvailableNow())
+              .format("parquet").option("path", outDir.toString)
+              .start()
+            query.awaitTermination()
+          }
         }
       }
       spark.read.parquet(outDir.toString)
@@ -853,7 +880,7 @@ object Streaming {
     val (srcDir, outDir, ckpt) = e15Dirs.computeIfAbsent(fxKey(spark, dir),
         _ => Phase.timed("e15_late_data_drop") {
       val src = Scratch.dir("e15_src")
-      val raw = spark.read.parquet(s"$dir/events.parquet")
+      val raw = Catalog(spark, dir).table("events")
       // land a filtered slice as ONE parquet file with a pinned mtime
       // (e11's ordered-mtime discipline drives micro-batch order)
       def land(slice: org.apache.spark.sql.DataFrame, name: String,
@@ -1137,9 +1164,7 @@ object Streaming {
         _ => Phase.timed("e18_stream_trending") {
       val wh = Warehouse.scratch(spark, "e18")
       val src = Scratch.dir("e18_src")
-      java.nio.file.Files.createSymbolicLink(
-        src.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$dir/events.parquet"))
+      linkLanding(spark, dir, "events", src)
       (wh.root, src, Scratch.dir("e18_ckpt"))
     })
     val wh = Warehouse(spark, whRoot)

@@ -364,13 +364,16 @@ object WebQueries extends QDsl {
     * block bytes — well under the 8 GB relation cap, and what the old
     * 2²⁰-row gate came to on these narrow host-keyed schemas); above
     * it the hint is withheld and the planner shuffles both sides.
-    * Caller must pass an eagerly-checkpointed frame.
+    * The gate fails closed: a frame with no registered checkpoint
+    * blocks has an unknown size and gets no hint.
     */
-  private def maybeBroadcastCheckpointed(df: DataFrame): DataFrame = {
+  private[graft] def maybeBroadcastCheckpointed(df: DataFrame): DataFrame = {
     val cap = df.sparkSession.conf.getOption("spark.graft.broadcast.maxBytes")
       .map(_.toLong).getOrElse(64L << 20)
-    val bytes = org.apache.spark.sql.graftbridge.RddBridge.checkpointBytes(df)
-    if (bytes <= cap) broadcast(df) else df
+    org.apache.spark.sql.graftbridge.RddBridge.checkpointBytes(df) match {
+      case Some(bytes) if bytes <= cap => broadcast(df)
+      case _ => df
+    }
   }
 
   // ---------------------------------------------------------------

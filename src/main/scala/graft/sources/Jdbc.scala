@@ -263,6 +263,6 @@ final case class JdbcCopier(jdbc: JdbcWarehouse, ciSchema: String,
     val tgt = targetSchema(sourceSchema)
     wh.write(jdbc.read(sourceSchema, table, partitionColumn, numPartitions),
       tgt, table)
-    wh.read(tgt, table).count()
+    wh.rowCount(tgt, table)
   }
 }

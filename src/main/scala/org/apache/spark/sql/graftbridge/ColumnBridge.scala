@@ -8,7 +8,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * conversions behind `private[sql]` (the Column API is backed by
   * ColumnNodes now); libraries that ship custom Catalyst expressions
   * conventionally expose them through a shim in an `o.a.s.sql`
-  * subpackage. This is the only file outside the `graft` namespace.
+  * subpackage. The other file outside the `graft` namespace is
+  * `execution.datasources.parquet.ParquetFooters`, for the same reason.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -57,19 +58,18 @@ object RddBridge {
     * reading their sizes from the storage registry costs nothing,
     * where a `df.count()` over the same frame is one more Spark job
     * per query (measured r18: w05's gate count was most of its 1×
-    * regression). Returns 0 for a frame with no checkpointed RDD —
-    * callers treat that as "unknown, do not broadcast-hint" only if
-    * they pass it to a gate that fails open; the graft gates fail
-    * CLOSED on 0 by construction (0 ≤ cap ⇒ broadcast) because a
-    * frame this is called on is always an already-frozen one.
+    * regression). None when the frame has no registered blocks (not
+    * checkpointed, not yet materialized, or already unpersisted): the
+    * size is UNKNOWN, and a gate must treat it as too big to
+    * broadcast, never as 0 bytes.
     */
-  def checkpointBytes(df: org.apache.spark.sql.DataFrame): Long = {
+  def checkpointBytes(df: org.apache.spark.sql.DataFrame): Option[Long] = {
     val ids = df.queryExecution.analyzed.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
     }.toSet
-    df.sparkSession.sparkContext.getRDDStorageInfo
+    val infos = df.sparkSession.sparkContext.getRDDStorageInfo
       .filter(i => ids.contains(i.id))
-      .map(i => i.memSize + i.diskSize).sum
+    if (infos.isEmpty) None else Some(infos.map(i => i.memSize + i.diskSize).sum)
   }
 }
 

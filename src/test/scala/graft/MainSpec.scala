@@ -208,6 +208,16 @@ class MainSpec extends SparkSpec {
       "int_spend_all", "mart_segment_spend", "mart_nation_spend",
       "mart_recent_buyers"))
 
+    // ---- row counts come from parquet footers: each equals count()
+    assert(rep.ciCounts.keySet == wh.tables("analytics_ci").toSet)
+    rep.ciCounts.foreach { case (t, n) =>
+      assert(n == wh.read("analytics_ci", t).count(), s"ciCounts($t)")
+    }
+    (dry.copies ++ rep.copies).foreach { r =>
+      assert(r.rows == wh.read("analytics", r.table).count(),
+        s"${r.status} ${r.table}: rows must be the prod count")
+    }
+
     // ---- defer semantics, verified independently: slice 3 rebuilt from
     // the FULL source, every other slice read from prod's cutoff state
     val c = Catalog(spark, sfDir)

@@ -507,6 +507,23 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.count(_._2 == -1L) == batch.count(_._2 == -1L))
   }
 
+  test("e08 and e14 read a directory-form events table like the single-file form") {
+    // the same sf0.01 events, rewritten as a directory of part files
+    // (plus Spark's _SUCCESS and .crc side files)
+    val single = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.01").toString
+    val dirForm = graft.core.Scratch.dir("events_dir_form")
+    spark.read.parquet(s"$single/events.parquet").repartition(3)
+      .write.parquet(dirForm.resolve("events.parquet").toString)
+    def rows(q: graft.queries.Q, dir: String): Seq[String] =
+      q.run(spark, dir).collect().map(_.toString).toSeq.sorted
+    try Seq(graft.queries.Streaming.e08, graft.queries.Streaming.e14).foreach { q =>
+      val fromFile = rows(q, single)
+      assert(fromFile.nonEmpty, s"${q.name} must emit rows on sf0.01")
+      assert(rows(q, dirForm.toString) == fromFile,
+        s"${q.name}: directory-form events changed the output")
+    } finally graft.core.Scratch.remove(dirForm)
+  }
+
   test("e15 late slice is discriminating: aggregating it would change the result") {
     // guards the e15 oracle against degenerating — if the delayed
     // partition stopped overlapping the on-time windows, "drops late
@@ -1101,15 +1118,31 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("RddBridge.checkpointBytes: frozen blocks report bytes, unfrozen report 0") {
+  test("RddBridge.checkpointBytes: frozen blocks report bytes, unfrozen report unknown") {
     import org.apache.spark.sql.graftbridge.RddBridge
     val df = spark.range(10000L).toDF("id")
-    assert(RddBridge.checkpointBytes(df) == 0L,
+    assert(RddBridge.checkpointBytes(df).isEmpty,
       "an unfrozen plan has no checkpoint blocks to measure")
     val frozen = df.localCheckpoint(true)
     val bytes = RddBridge.checkpointBytes(frozen)
-    assert(bytes > 0L, "eager localCheckpoint blocks must be visible " +
+    assert(bytes.exists(_ > 0L), "eager localCheckpoint blocks must be visible " +
       "to the storage registry (the zero-job broadcast gate reads them)")
     RddBridge.unpersistCheckpoint(frozen, blocking = true)
+  }
+
+  test("broadcast gate fails closed: a frame with no registered blocks gets no hint") {
+    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+    import org.apache.spark.sql.graftbridge.RddBridge
+    def hinted(df: org.apache.spark.sql.DataFrame): Boolean =
+      graft.queries.WebQueries.maybeBroadcastCheckpointed(df)
+        .queryExecution.analyzed.exists(_.isInstanceOf[ResolvedHint])
+    val frozen = spark.range(1000L).toDF("id").localCheckpoint(true)
+    assert(hinted(frozen), "a small frozen frame is under the cap")
+    // the same plan with its blocks gone: the size is unknown, not 0
+    RddBridge.unpersistCheckpoint(frozen, blocking = true)
+    assert(RddBridge.checkpointBytes(frozen).isEmpty)
+    assert(!hinted(frozen), "an unknown size must withhold the hint")
+    assert(!hinted(spark.range(10L).toDF("id")),
+      "a frame that was never frozen has no blocks and gets no hint")
   }
 }
