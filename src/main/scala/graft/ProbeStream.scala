@@ -20,8 +20,10 @@ object ProbeStream {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-    // A/B aid: extra session confs as k=v;k=v (e.g. the state-store
-    // provider), so provider/config experiments need no recompile
+    // A/B aid: extra session confs as k=v;k=v, so config experiments
+    // need no recompile. The r19 state-store provider A/B sets
+    // spark.sql.streaming.stateStore.providerClass=org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider;spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled=true
+    // against the default HDFS-backed provider
     sys.env.get("SPARK_GRAFT_PROBE_CONF").foreach(_.split(";").foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       builder.config(k, v)

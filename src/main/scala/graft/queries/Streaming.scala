@@ -1,8 +1,12 @@
 package graft.queries
 
+import java.nio.file.{Files, Path}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFooters
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.graftbridge.StateStoreBridge
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
 
 import scala.jdk.CollectionConverters._
@@ -73,16 +77,11 @@ object Streaming {
       spark.readStream.schema(Catalog(spark, dir).eventsRawSchema)
         .parquet(srcDir.toString))
     val ckpt = Scratch.dir("e03_ckpt")
-    try withStreamShufflePartitions(spark, srcDir.toString) {
-      val query = stream.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          mat.run(model, _ => batch); ()
-        }
-        .start()
-      query.awaitTermination()
-    } finally {
+    try runAvailableNow(spark, srcDir.toString, ckpt)(
+      stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+        mat.run(model, _ => batch); ()
+      })
+    finally {
       // the stream is finished once awaitTermination returns and the
       // returned DataFrame reads the WAREHOUSE, not these dirs — drop
       // them now instead of accruing one symlink + checkpoint dir per
@@ -183,41 +182,41 @@ object Streaming {
       .orderBy("event_id", "purchase_id")
   }
 
-  // e08 — STREAM-STREAM time-bound join, run through the real
-  // Structured Streaming machinery (two file streams over the same
-  // landing dir, watermarks on both sides, event-time range condition
-  // so the join state is cleanly bounded): the streaming counterpart
-  // of e07's batch attribution window, and the oracle IS that plain
-  // inequality join — the stateful streaming execution must reproduce
-  // the batch result exactly.
-  // Session-scoped e08 harness: ONE landing/checkpoint/output trio per
-  // source dir, reused across invocations. A re-invocation is then a
-  // RESTART of the same streaming query — Structured Streaming's
-  // exactly-once recovery contract: the checkpoint says every source
-  // file is committed, nothing reprocesses, and the durable sink
-  // output is (provably, per that contract) unchanged. Repeated bench
-  // passes therefore measure query startup + the join machinery
-  // instead of re-paying directory churn and a from-zero rebuild each
-  // pass — the production shape, where the stream is long-lived and a
-  // driver bounce resumes it. Dirs live under the Scratch session
-  // root, swept at JVM exit.
-  private val e08Dirs =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String, String)]()
-
-  /** Streaming fixture memo key: the source dir SCOPED TO the live
-    * SparkContext. Within one session a re-invocation is a checkpoint
-    * RESTART (the exactly-once recovery contract the restart specs
-    * exercise); across sessions the fixture rebuilds from zero. The
-    * bench recycles its session per pass (the r15 hermeticity fix),
-    * so with dir-only keys passes 2+ were restarts whose state-store
-    * reload on a cold session cost 5-12× the warm-session restart —
-    * BENCH_r16's e-family medians measured that artifact, not the
-    * operator. App-scoped keys make every bench pass the same cold
-    * from-scratch run: median/min lands in the batch entries' 1.0-1.3×
-    * band and round-over-round diffs mean something again.
+  /** A streaming entry's fixture: the landing dir its file stream
+    * reads, the query's checkpoint, and its sink — a parquet output dir
+    * or a warehouse ROOT (never a Warehouse object, which would pin the
+    * first invocation's SparkSession and run a later restart's merges
+    * on a stopped context).
     */
-  private def fxKey(spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    s"${spark.sparkContext.applicationId}|$dir"
+  private final case class Fixture(landing: Path, ckpt: Path, sink: String)
+
+  private val fixtures =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, String), Fixture]()
+
+  /** `entry`'s fixture for source `dir`, staged once per (live
+    * SparkContext, dir, entry): `stage` fills a fresh landing dir and
+    * returns the sink, and its seconds go to [[Phase]] under `entry`.
+    * A re-invocation in the same session is then a RESTART of the
+    * committed query — Structured Streaming's exactly-once recovery
+    * contract: the checkpoint says every landed file is committed,
+    * nothing reprocesses, and the sink is unchanged — the production
+    * shape, where the stream is long-lived and a restarted application
+    * resumes it. Keying on the application makes a new session rebuild
+    * from zero: the bench recycles its session per pass, and a restart
+    * whose state-store reload runs on a cold session cost 5-12× the
+    * warm restart (BENCH_r16), so every pass times the same cold run.
+    * The entry name keeps entries that share `dir` on their own
+    * checkpoints. Dirs live under the Scratch session root, swept at
+    * JVM exit.
+    */
+  private def fixture(spark: SparkSession, dir: String, entry: String)(
+      stage: Path => String): Fixture =
+    fixtures.computeIfAbsent((spark.sparkContext.applicationId, dir, entry),
+      _ => Phase.timed(entry) {
+        val landing = Scratch.dir(s"${entry}_src")
+        val sink = stage(landing)
+        Fixture(landing, Scratch.dir(s"${entry}_ckpt"), sink)
+      })
 
   /** Scale-adaptive shuffle-partition count for a STREAMING query,
     * derived from the landing window's bytes (guide §2: derive
@@ -252,18 +251,37 @@ object Streaming {
       (bytes + perPart - 1) / perPart).toInt)
   }
 
-  /** Run `f` with `spark.sql.shuffle.partitions` set to the derived
-    * streaming value (restored after): scopes the state-partition
-    * count — and the per-micro-batch foreachBatch jobs — to the
-    * landing window's size. Checkpoint restarts are consistent
-    * twice over: the derivation is deterministic AND Spark itself
-    * replays the checkpointed value for stateful plans.
+  /** Run `writer` to completion as an AvailableNow query checkpointed at
+    * `ckpt`, with `spark.sql.shuffle.partitions` set to
+    * [[streamShufflePartitions]] of `landing` until it terminates, then
+    * unload the state-store providers. The derived count sizes the
+    * state partitions and, because foreachBatch runs while the scope is
+    * open, the per-micro-batch batch jobs too. Restarts of a memoized
+    * checkpoint stay consistent twice over: the derivation is
+    * deterministic, and Spark replays the checkpointed value for
+    * stateful plans.
+    *
+    * State lives in Spark's default HDFS-backed provider. r18 measured
+    * RocksDB ahead at 32 state partitions, where the HDFS provider's
+    * whole-map rewrite per commit dominated (e14 heavy batch 18.5 s →
+    * 5.6 s); r19 re-measured at the derived count, back to back, and
+    * HDFS won both joins (e14 10.7 s vs 14.4 s, e08 8.9 s vs 11.8 s):
+    * RocksDB's per-batch native open/close is pure overhead once the
+    * store count fits the window. A deployment whose per-store state is
+    * large sets `spark.sql.streaming.stateStore.providerClass` itself;
+    * results do not depend on the provider. Unloading drops the
+    * terminated query's providers now instead of leaving them to the
+    * lazy maintenance cycle (measured ~0.5-1 s stolen from later
+    * queries); the registry re-inits lazily for the next query.
     */
-  private def withStreamShufflePartitions[A](
-      spark: org.apache.spark.sql.SparkSession, landing: String*)(
-      f: => A): A =
+  private def runAvailableNow[T](spark: SparkSession, landing: String,
+      ckpt: Path)(writer: DataStreamWriter[T]): Unit =
     withConfs(spark, "spark.sql.shuffle.partitions" ->
-      streamShufflePartitions(spark, landing: _*).toString)(f)
+        streamShufflePartitions(spark, landing).toString) {
+      try writer.option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      finally StateStoreBridge.unloadAll()
+    }
 
   /** Run `f` with `confs` set on the session, then restore each
     * previous value (or unset it): the way an entry pins a conf its
@@ -308,107 +326,43 @@ object Streaming {
     }
   }
 
-  /** Run `f` with the state-store provider chosen for the
-    * stream-stream JOIN entries (e08/e14). History of the dial: r18
-    * flipped both to RocksDB, measured at 32 state partitions where
-    * the HDFS-backed provider's whole-map-rewrite commit dominated
-    * (e14 heavy batch 18.5s → 5.6s). r19 derives the state-partition
-    * count from the landing window ([[streamShufflePartitions]]),
-    * which moves each store's state ABOVE the per-store fixed costs —
-    * re-measured A/B at the derived count (ProbeStream, same harness,
-    * back to back): HDFS wins BOTH entries (e14 10.7s vs 14.4s,
-    * e08 8.9s vs 11.8s — RocksDB's per-batch native instance
-    * open/close is pure overhead once the store count is right). So
-    * the default here is the HDFS provider; `spark.graft.stream.
-    * rocksdb=true` is the production dial for deployments whose
-    * PER-STORE join state is large (the regime RocksDB is documented
-    * for — at 100 TB with partitions capped at cluster parallelism,
-    * per-store state grows with the window and the r18 measurement
-    * applies again). Results are provider-independent — state CONTENT
-    * is identical — and the provider is captured per query START, so
-    * memoized-checkpoint restarts see a consistent provider.
+  /** Land `slice` as the single file `<landing>/<name>.parquet` with
+    * modification time `mtime`. The file source admits files
+    * oldest-first, so the mtimes fix the micro-batch order the
+    * ordered-arrival entries (e11, e15, e16, e17) depend on for oracle
+    * equivalence — fail loudly on a filesystem that cannot set them
+    * rather than let the stream take the files in an arbitrary order.
     */
-  private def withRocksDbState[A](
-      spark: org.apache.spark.sql.SparkSession, default: Boolean = true)(
-      f: => A): A = {
-    // A/B dial (r18 verdict item #2): `spark.graft.stream.rocksdb`
-    // overrides the per-entry default so ProbeStream's PROBE_CONF can
-    // flip providers without a recompile. The per-entry default is the
-    // MEASURED winner for that entry's state size.
-    val use = spark.conf.getOption("spark.graft.stream.rocksdb")
-      .map(_.toBoolean).getOrElse(default)
-    if (!use) {
-      try f finally
-        org.apache.spark.sql.graftbridge.StateStoreBridge.unloadAll()
-    } else withRocksDbStateAlways(spark)(f)
+  private def landFile(slice: DataFrame, landing: Path, name: String,
+      mtime: Long): Unit = {
+    val stage = Scratch.dir(s"stage_$name")
+    slice.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+    val part = Files.list(stage).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    val dst = landing.resolve(s"$name.parquet")
+    Files.move(part, dst)
+    require(dst.toFile.setLastModified(mtime),
+      s"could not set mtime on $dst; the stream needs ordered file arrival")
+    Scratch.remove(stage)
   }
 
-  private def withRocksDbStateAlways[A](
-      spark: org.apache.spark.sql.SparkSession)(f: => A): A = {
-    // changelog checkpointing: commit uploads the per-batch CHANGELOG
-    // instead of a full snapshot per store per batch (snapshots then
-    // happen in background maintenance) — the documented production
-    // setting for frequent-commit stateful jobs; without it every
-    // micro-batch re-snapshots all 2×partitions join stores
-    try withConfs(spark,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        ("org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider"),
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")(f)
-    finally {
-      // drop the terminated query's providers NOW — left to the lazy
-      // maintenance cycle, the RocksDB natives + background threads
-      // ride along into whatever runs next in this session (measured
-      // ~0.5-1s stolen from later queries); the registry re-inits
-      // lazily for the next streaming query
-      org.apache.spark.sql.graftbridge.StateStoreBridge.unloadAll()
-    }
-  }
-
-  /** e14/e15's memoized (landing, sink, checkpoint) triples and
-    * e16's (warehouse, landing, checkpoint) — same restart discipline
-    * as [[e08Dirs]], see the e14 entry.
+  /** Watermark-flush sentinel rows for the i-th far-future batch (i ≥ 1,
+    * event time `maxTs` + 10·i days, `maxTs` being `max(ts)` of `raw`),
+    * ONE ROW PER JOIN LEG. Spark's global watermark for a stateful
+    * two-stream join is the MIN over both watermarked inputs
+    * (`multipleWatermarkPolicy=min`), so a sentinel that survives only
+    * one leg's pre-watermark filter advances that leg alone and the
+    * global watermark stalls — tail state (the last ~watermark-delay of
+    * null-extended outer rows) then never flushes before AvailableNow
+    * terminates. Every leg therefore gets its own sentinel row, keyed
+    * by the event_type its filter keeps, carried in the SAME file so one
+    * extra micro-batch advances both legs together. Sentinels can never
+    * join: each leg gets a distinct negative user_id (no real user, no
+    * cross-leg match either), and negative event_ids let output filters
+    * drop the left leg's null-extended sentinel rows.
     */
-  private val e14Dirs = new java.util.concurrent.ConcurrentHashMap[
-    String, (java.nio.file.Path, java.nio.file.Path, java.nio.file.Path)]()
-  private val e15Dirs = new java.util.concurrent.ConcurrentHashMap[
-    String, (java.nio.file.Path, java.nio.file.Path, java.nio.file.Path)]()
-  // e16 memoizes the warehouse ROOT (a path), never the Warehouse
-  // object — a cached Warehouse would pin the first invocation's
-  // SparkSession, and a restart from a later session would run its
-  // merge/read on a stopped context
-  private val e16State = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, java.nio.file.Path, java.nio.file.Path)]()
-  // e11 memoizes the same triple (warehouse ROOT + landing + ckpt)
-  // for the same reason
-  private val e11State = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, java.nio.file.Path, java.nio.file.Path)]()
-
-  /** Watermark-flush sentinels for stream-stream joins — one landing
-    * file per far-future batch, with ONE ROW PER JOIN LEG. Spark's
-    * global watermark for a stateful two-stream join is the MIN over
-    * both watermarked inputs (`multipleWatermarkPolicy=min`), so a
-    * sentinel that survives only one leg's pre-watermark filter
-    * advances that leg alone and the global watermark stalls — tail
-    * state (the last ~watermark-delay of null-extended outer rows)
-    * then never flushes before AvailableNow terminates. Every leg
-    * therefore gets its own sentinel row, keyed by the event_type its
-    * filter keeps, carried in the SAME file so one extra micro-batch
-    * advances both legs together. Sentinels can never join: each leg
-    * gets a distinct negative user_id (no real user, no cross-leg
-    * match either), and negative event_ids let output filters drop
-    * the left leg's null-extended sentinel rows.
-    */
-  /** The sentinel ROWS of [[writeWatermarkSentinels]]'s i-th batch as
-    * a frame — exposed so a fixture can UNION sentinel 1 into an
-    * earlier landing file instead of paying it a micro-batch of its
-    * own (e15's r19 shape; the batch-lag analysis lives there).
-    */
-  private def sentinelFrame(
-      raw: org.apache.spark.sql.DataFrame,
-      legTypes: Seq[String], i: Int): org.apache.spark.sql.DataFrame = {
-    val maxTs = raw.agg(max(col("ts"))).head.get(0)
+  private def sentinelFrame(raw: DataFrame, maxTs: Any,
+      legTypes: Seq[String], i: Int): DataFrame = {
     // built FROM the raw relation so the sentinel carries whatever
     // ts encoding the landing files use (INT64 nanos or timestamp)
     val ts = maxTs match {
@@ -429,49 +383,41 @@ object Streaming {
     }.reduce(_ unionByName _)
   }
 
-  private def writeWatermarkSentinels(
-      raw: org.apache.spark.sql.DataFrame,
-      srcDir: java.nio.file.Path,
-      legTypes: Seq[String],
-      tag: String,
-      nBatches: Int = 2): Unit = {
-    for (i <- 1 to nBatches) {
-      val s = sentinelFrame(raw, legTypes, i)
-      val tmp = Scratch.dir(s"${tag}_s$i")
-      s.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = java.nio.file.Files.list(tmp).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      val dst = srcDir.resolve(s"b_sentinel$i.parquet")
-      java.nio.file.Files.move(part, dst)
-      require(dst.toFile.setLastModified(1700000000000L + i * 60000L),
-        "cannot order streaming landing files")
-      Scratch.remove(tmp)
-    }
+  /** The two view/purchase sentinel batches of a stream-stream join
+    * fixture (e08, e14), landed after the events: one `max(ts)` scan
+    * for both. */
+  private def landJoinSentinels(raw: DataFrame, landing: Path): Unit = {
+    val maxTs = raw.agg(max(col("ts"))).head.get(0)
+    for (i <- 1 to 2)
+      landFile(sentinelFrame(raw, maxTs, Seq("view", "purchase"), i), landing,
+        s"b_sentinel$i", 1700000000000L + i * 60000L)
   }
 
+  // e08 — STREAM-STREAM time-bound join, run through the real
+  // Structured Streaming machinery (two file streams over the same
+  // landing dir, watermarks on both sides, event-time range condition
+  // so the join state is cleanly bounded): the streaming counterpart
+  // of e07's batch attribution window, and the oracle IS that plain
+  // inequality join — the stateful streaming execution must reproduce
+  // the batch result exactly.
   val e08: Q = Q("e08_stream_stream_join", (spark, dir) => {
     // schema probed from the batch relation + normalized through the
     // one events-time chokepoint (see e03)
     val rawSchema = Catalog(spark, dir).eventsRawSchema
-    val (srcDir, outDir, ckpt) = e08Dirs.computeIfAbsent(fxKey(spark, dir),
-        _ => Phase.timed("e08_stream_stream_join") {
-      val src = Scratch.dir("e08_src")
-      linkLanding(spark, dir, "events", src)
-      // per-leg sentinels (shared helper, see writeWatermarkSentinels)
-      // so BOTH legs' watermarks advance and join state gets evicted;
-      // sentinels carry distinct negative user_ids so the inner join
-      // can never emit them
-      writeWatermarkSentinels(Catalog(spark, dir).table("events"),
-        src, Seq("view", "purchase"), "e08")
-      (src.toString, Scratch.dir("e08_out").toString,
-        Scratch.dir("e08_ckpt").toString)
-    })
+    val fx = fixture(spark, dir, "e08_stream_stream_join") { landing =>
+      linkLanding(spark, dir, "events", landing)
+      // per-leg sentinels so BOTH legs' watermarks advance and join
+      // state gets evicted; their distinct negative user_ids keep the
+      // inner join from ever emitting them
+      landJoinSentinels(Catalog(spark, dir).table("events"), landing)
+      Scratch.dir("e08_out").toString
+    }
     // Watermarks (EventTimeWatermark) accept only TIMESTAMP_LTZ, so
     // the canonical NTZ ts rides through the streaming join as LTZ —
     // under the pinned UTC session the cast is wall-clock identity —
     // and the output casts back to NTZ below.
     def stream = Catalog.normalizeEventTs(
-        spark.readStream.schema(rawSchema).parquet(srcDir))
+        spark.readStream.schema(rawSchema).parquet(fx.landing.toString))
       .withColumn("ts", col("ts").cast(TimestampType))
     val others = stream.filter(col("event_type") =!= "purchase")
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
@@ -484,17 +430,9 @@ object Streaming {
       col("user_id") === col("p_user_id") &&
         col("ts") >= col("p_ts") &&
         col("ts") <= col("p_ts") + expr("interval 30 minutes"))
-    withStreamShufflePartitions(spark, srcDir) {
-      withRocksDbState(spark, default = false) {
-        val query = joined.writeStream
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .format("parquet").option("path", outDir)
-          .start()
-        query.awaitTermination()
-      }
-    }
-    spark.read.parquet(outDir)
+    runAvailableNow(spark, fx.landing.toString, fx.ckpt)(
+      joined.writeStream.format("parquet").option("path", fx.sink))
+    spark.read.parquet(fx.sink)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("p_event_id").as("purchase_id"),
         col("p_ts").cast(TimestampNTZType).as("range_ts"))
@@ -529,19 +467,15 @@ object Streaming {
     val srcDir = Scratch.dir("e09_src")
     linkLanding(spark, dir, "events", srcDir)
     val ckpt = Scratch.dir("e09_ckpt")
-    try withStreamShufflePartitions(spark, srcDir.toString) {
+    try {
       // schema probed + ts normalized through the chokepoint (see e03)
       val stream = Catalog.normalizeEventTs(
         spark.readStream.schema(Catalog(spark, dir).eventsRawSchema)
           .parquet(srcDir.toString))
-      val query = stream.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+      runAvailableNow(spark, srcDir.toString, ckpt)(
+        stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
           mat.run(model, _ => EventStream.latestPerUser(batch)); ()
-        }
-        .start()
-      query.awaitTermination()
+        })
     } finally {
       Scratch.remove(ckpt); Scratch.remove(srcDir)
     }
@@ -600,15 +534,13 @@ object Streaming {
   // sequential first-wins equal the oracle's global min-doc_id rule.
   val e11: Q = Q("e11_stream_ingest_dedup", (spark, dir) => {
     val digest = md5(substring(col("text"), 1, 64).cast("binary"))
-    // e16's restart discipline: seeding, tercile staging, and the
-    // 3-micro-batch dedup ingest all belong to the committed stream —
-    // memoized per source dir, so a re-invocation restarts against
-    // the same checkpoint (no new files, no IngestDedup step fires)
-    // and pays only startup + the digests-table read (the r12 shape
-    // re-seeded and re-ingested from zero every pass, 4.66 s driver
-    // median).
-    val (whRoot, srcDir, ckpt) = e11State.computeIfAbsent(fxKey(spark, dir),
-        _ => Phase.timed("e11_stream_ingest_dedup") {
+    // seeding, tercile staging and the 3-micro-batch dedup ingest all
+    // belong to the fixture (see `fixture`), so a re-invocation
+    // restarts against the same checkpoint (no new files, no
+    // IngestDedup step fires) and pays only startup + the
+    // digests-table read (the r12 shape re-seeded and re-ingested from
+    // zero every pass, 4.66 s board median).
+    val fx = fixture(spark, dir, "e11_stream_ingest_dedup") { landing =>
       val wh = Warehouse.scratch(spark, "e11")
       val docs = Catalog(spark, dir).documents
       val bucket = substring(md5(col("doc_id").cast("string").cast("binary")), 1, 1)
@@ -619,44 +551,24 @@ object Streaming {
       val bounds = batch
         .agg(expr("percentile_approx(doc_id, array(0.34, 0.67), 100000)"))
         .head.getSeq[Long](0)
-      val src = Scratch.dir("e11_src")
+      // arrival order == slice order: the oracle equivalence (global
+      // min-doc_id == sequential first-batch-wins) depends on it
       Seq(batch.filter(col("doc_id") <= bounds(0)),
           batch.filter(col("doc_id") > bounds(0) && col("doc_id") <= bounds(1)),
           batch.filter(col("doc_id") > bounds(1)))
         .zipWithIndex.foreach { case (s, i) =>
-          val tmp = Scratch.dir(s"e11_stage$i")
-          s.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = java.nio.file.Files.list(tmp).iterator().asScala
-            .find(_.getFileName.toString.endsWith(".parquet")).get
-          val dst = src.resolve(s"b$i.parquet")
-          java.nio.file.Files.move(part, dst)
-          // arrival order == slice order (file source is oldest-first).
-          // The oracle equivalence (global min-doc_id == sequential
-          // first-batch-wins) DEPENDS on this ordering — fail loudly
-          // on a filesystem that cannot set mtimes rather than let the
-          // source process slices in an arbitrary order and diverge
-          // nondeterministically at the driver gate.
-          require(dst.toFile.setLastModified(1700000000000L + i * 60000L),
-            s"could not set mtime on $dst; e11 requires ordered file arrival")
-          Scratch.remove(tmp)
+          landFile(s, landing, s"b$i", 1700000000000L + i * 60000L)
         }
-      (wh.root, src, Scratch.dir("e11_ckpt"))
-    })
-    val wh = Warehouse(spark, whRoot)
-    withStreamShufflePartitions(spark, srcDir.toString) {
-      val schema = Catalog(spark, dir).documents.schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir.toString)
-      val query = stream.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          IngestDedup.step(wh, "analytics", "corpus_digests", b, digest); ()
-        }
-        .start()
-      query.awaitTermination()
+      wh.root
     }
+    val wh = Warehouse(spark, fx.sink)
+    val stream = spark.readStream.schema(Catalog(spark, dir).documents.schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(fx.landing.toString)
+    runAvailableNow(spark, fx.landing.toString, fx.ckpt)(
+      stream.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
+        IngestDedup.step(wh, "analytics", "corpus_digests", b, digest); ()
+      })
     wh.read("analytics", "corpus_digests").orderBy("doc_id")
   }, Some(
     """WITH h AS (SELECT doc_id, md5(substr(text, 1, 64)) AS content_hash,
@@ -690,18 +602,14 @@ object Streaming {
     val srcDir = Scratch.dir("e12_src")
     linkLanding(spark, dir, "events", srcDir)
     val ckpt = Scratch.dir("e12_ckpt")
-    try withStreamShufflePartitions(spark, srcDir.toString) {
+    try {
       val stream = Catalog.normalizeEventTs(
         spark.readStream.schema(Catalog(spark, dir).eventsRawSchema)
           .parquet(srcDir.toString))
-      val query = stream.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+      runAvailableNow(spark, srcDir.toString, ckpt)(
+        stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
           mat.run(model, _ => EventStream.latestPerUserCdc(batch)); ()
-        }
-        .start()
-      query.awaitTermination()
+        })
     } finally {
       Scratch.remove(ckpt); Scratch.remove(srcDir)
     }
@@ -774,77 +682,59 @@ object Streaming {
   // rows — nulls included — must reproduce it exactly.
   val e14: Q = Q("e14_stream_join_outer", (spark, dir) => {
     val rawSchema = Catalog(spark, dir).eventsRawSchema
-    // e08's restart discipline: the landing dir, checkpoint, and sink
-    // are memoized per source dir, so a re-invocation is a RESTART of
-    // the committed stream (exactly-once recovery: nothing
-    // reprocesses, the sink provably unchanged) instead of a from-
-    // zero rebuild — r11's bench paid the full multi-micro-batch
-    // outer-join rebuild (15.7 s, the board's slowest entry) on every
-    // pass; a restart times query startup + recovery only.
-    val (srcDir, outDir, ckpt) = e14Dirs.computeIfAbsent(fxKey(spark, dir),
-        _ => Phase.timed("e14_stream_join_outer") {
-      val src = Scratch.dir("e14_src")
-      linkLanding(spark, dir, "events", src, prefix = "a_").foreach(l =>
+    // memoized (see `fixture`): r11's bench paid the full
+    // multi-micro-batch outer-join rebuild (15.7 s, the board's slowest
+    // entry) on every pass; a restart times query startup + recovery
+    val fx = fixture(spark, dir, "e14_stream_join_outer") { landing =>
+      linkLanding(spark, dir, "events", landing, prefix = "a_").foreach(l =>
         require(l.toFile.setLastModified(1700000000000L),
           "cannot order e14 landing files"))
-      // Per-leg sentinels (view AND purchase typed — shared helper).
-      // The r10 failure mode: view-only sentinels advanced just the
-      // left leg's watermark, the purchases leg (filtered before
-      // withWatermark) never saw one, and the MIN-policy global
-      // watermark stalled — the last ~2.5h of unmatched left rows
-      // never emitted their null-extended rows (7990 vs 8019).
-      writeWatermarkSentinels(Catalog(spark, dir).table("events"),
-        src, Seq("view", "purchase"), "e14")
-      (src, Scratch.dir("e14_out"), Scratch.dir("e14_ckpt"))
-    })
-    locally {
-      // NO per-trigger file limit (r19 — the r18 shape paid one
-      // stateful micro-batch per landing file): all three files land
-      // in ONE data batch, which emits every inner match
-      // (watermark-independent); the sentinels' far-future event time
-      // then advances the watermark, and the engine's NO-DATA
-      // micro-batches (noDataMicroBatches, pinned on below — AvailableNow
-      // keeps running them while the watermark moves) evict the join
-      // state and emit every unmatched left row's null-extended form.
-      // Outer-row emission only needs SOME later batch to run with an
-      // advanced watermark — which batch emits a row changes nothing
-      // about the set (guide §1.2-1: fewer stateful passes before
-      // per-pass cost). Oracle re-verified this round: 8019 rows,
-      // hash-identical, nulls included.
-      def stream = Catalog.normalizeEventTs(
-          spark.readStream.schema(rawSchema).parquet(srcDir.toString))
-        .withColumn("ts", col("ts").cast(TimestampType))
-      val others = stream.filter(col("event_type") =!= "purchase")
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-        .withWatermark("ts", "2 hours")
-      val purchases = stream.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_event_id"), col("ts").as("p_ts"),
-          col("user_id").as("p_user_id"))
-        .withWatermark("p_ts", "2 hours")
-      val joined = others.join(purchases,
-        col("user_id") === col("p_user_id") &&
-          col("ts") >= col("p_ts") &&
-          col("ts") <= col("p_ts") + expr("interval 30 minutes"),
-        "left_outer")
-      withConfs(spark, "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") {
-        withStreamShufflePartitions(spark, srcDir.toString) {
-          withRocksDbState(spark, default = false) {
-            val query = joined.writeStream
-              .option("checkpointLocation", ckpt.toString)
-              .trigger(Trigger.AvailableNow())
-              .format("parquet").option("path", outDir.toString)
-              .start()
-            query.awaitTermination()
-          }
-        }
-      }
-      spark.read.parquet(outDir.toString)
-        .filter(col("event_id") >= 0) // drop the watermark sentinels
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("p_event_id").as("purchase_id"),
-          col("p_ts").cast(TimestampNTZType).as("range_ts"))
-        .orderBy("event_id", "purchase_id")
+      // Per-leg sentinels (view AND purchase typed). The r10 failure
+      // mode: view-only sentinels advanced just the left leg's
+      // watermark, the purchases leg (filtered before withWatermark)
+      // never saw one, and the MIN-policy global watermark stalled —
+      // the last ~2.5h of unmatched left rows never emitted their
+      // null-extended rows (7990 vs 8019).
+      landJoinSentinels(Catalog(spark, dir).table("events"), landing)
+      Scratch.dir("e14_out").toString
     }
+    // NO per-trigger file limit (r19 — the r18 shape paid one stateful
+    // micro-batch per landing file): all three files land in ONE data
+    // batch, which emits every inner match (watermark-independent); the
+    // sentinels' far-future event time then advances the watermark, and
+    // the engine's NO-DATA micro-batches (noDataMicroBatches, pinned on
+    // below — AvailableNow keeps running them while the watermark
+    // moves) evict the join state and emit every unmatched left row's
+    // null-extended form. Outer-row emission only needs SOME later
+    // batch to run with an advanced watermark — which batch emits a row
+    // changes nothing about the set (guide §1.2-1: fewer stateful
+    // passes before per-pass cost). Oracle: 8019 rows, hash-identical,
+    // nulls included.
+    def stream = Catalog.normalizeEventTs(
+        spark.readStream.schema(rawSchema).parquet(fx.landing.toString))
+      .withColumn("ts", col("ts").cast(TimestampType))
+    val others = stream.filter(col("event_type") =!= "purchase")
+      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
+      .withWatermark("ts", "2 hours")
+    val purchases = stream.filter(col("event_type") === "purchase")
+      .select(col("event_id").as("p_event_id"), col("ts").as("p_ts"),
+        col("user_id").as("p_user_id"))
+      .withWatermark("p_ts", "2 hours")
+    val joined = others.join(purchases,
+      col("user_id") === col("p_user_id") &&
+        col("ts") >= col("p_ts") &&
+        col("ts") <= col("p_ts") + expr("interval 30 minutes"),
+      "left_outer")
+    withConfs(spark, "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") {
+      runAvailableNow(spark, fx.landing.toString, fx.ckpt)(
+        joined.writeStream.format("parquet").option("path", fx.sink))
+    }
+    spark.read.parquet(fx.sink)
+      .filter(col("event_id") >= 0) // drop the watermark sentinels
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        col("p_event_id").as("purchase_id"),
+        col("p_ts").cast(TimestampNTZType).as("range_ts"))
+      .orderBy("event_id", "purchase_id")
   }, Some(
     """WITH p AS (SELECT event_id, ts, user_id FROM events
       |           WHERE event_type = 'purchase'),
@@ -872,86 +762,57 @@ object Streaming {
   // its SLA on: bounded state BECAUSE late data is provably excluded.
   val e15: Q = Q("e15_late_data_drop", (spark, dir) => {
     val rawSchema = Catalog(spark, dir).eventsRawSchema
-    // e08/e14's restart discipline: the landing files are a fixed,
-    // fully-committed set, so a re-invocation restarts the stream
-    // (exactly-once recovery, sink unchanged) instead of re-paying
-    // the 5-micro-batch from-zero build (5.9 s/pass in r12's bench —
-    // the board's slowest entry after e14 adopted the same fix)
-    val (srcDir, outDir, ckpt) = e15Dirs.computeIfAbsent(fxKey(spark, dir),
-        _ => Phase.timed("e15_late_data_drop") {
-      val src = Scratch.dir("e15_src")
+    // memoized (see `fixture`): r12's bench re-paid the
+    // 5-micro-batch from-zero build (5.9 s/pass) on every pass
+    val fx = fixture(spark, dir, "e15_late_data_drop") { landing =>
       val raw = Catalog(spark, dir).table("events")
-      // land a filtered slice as ONE parquet file with a pinned mtime
-      // (e11's ordered-mtime discipline drives micro-batch order)
-      def land(slice: org.apache.spark.sql.DataFrame, name: String,
-          mtime: Long): Unit = {
-        val stage = Scratch.dir(s"e15_$name")
-        slice.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = java.nio.file.Files.list(stage).iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet")).get
-        val dst = src.resolve(s"$name.parquet")
-        java.nio.file.Files.move(part, dst)
-        require(dst.toFile.setLastModified(mtime),
-          "cannot order e15 landing files")
-        Scratch.remove(stage)
-      }
+      val maxTs = raw.agg(max(col("ts"))).head.get(0)
       // THREE landing files (r19, one fewer micro-batch than the r18
       // four-file shape): the watermark a batch FILTERS with lags its
-      // own arrival by TWO batches (re-measured this round: a late
-      // file landing one batch after the far-future stats is filtered
-      // with the PRE-sentinel watermark and absorbed — the r18
-      // two-sentinel rationale). So sentinel 1 rides IN the on-time
-      // file (batch 0 — a sentinel is input data; which batch carries
-      // it changes nothing it aggregates into, and its window is
-      // filtered at the sink read), sentinel 2 is its own batch 1,
-      // and the late file (batch 2) filters against batch 0's
-      // far-future stats (+10 days − 1 h) — every late row's window
-      // closed long ago, the same provable drop set as before.
-      land(raw.filter(col("event_id") % 3 =!= 0)
-          .unionByName(sentinelFrame(raw, Seq("sentinel"), 1)),
-        "a_events", 1700000000000L)
-      land(sentinelFrame(raw, Seq("sentinel"), 2), "b_sentinel2",
-        1700000120000L)
-      land(raw.filter(col("event_id") % 3 === 0), "d_late",
+      // own arrival by TWO batches (a late file landing one batch after
+      // the far-future stats is filtered with the PRE-sentinel
+      // watermark and absorbed — the r18 two-sentinel rationale). So
+      // sentinel 1 rides IN the on-time file (batch 0 — a sentinel is
+      // input data; which batch carries it changes nothing it
+      // aggregates into, and its window is filtered at the sink read),
+      // sentinel 2 is its own batch 1, and the late file (batch 2)
+      // filters against batch 0's far-future stats (+10 days − 1 h) —
+      // every late row's window closed long ago, the same provable drop
+      // set as before.
+      landFile(raw.filter(col("event_id") % 3 =!= 0)
+          .unionByName(sentinelFrame(raw, maxTs, Seq("sentinel"), 1)),
+        landing, "a_events", 1700000000000L)
+      landFile(sentinelFrame(raw, maxTs, Seq("sentinel"), 2), landing,
+        "b_sentinel2", 1700000120000L)
+      landFile(raw.filter(col("event_id") % 3 === 0), landing, "d_late",
         1700000150000L)
-      (src, Scratch.dir("e15_out"), Scratch.dir("e15_ckpt"))
-    })
-    locally {
-      // one file per trigger over the THREE landing files (sentinel 1
-      // rides in the on-time file — see the fixture comment for the
-      // two-batch watermark lag that pins this grouping): batch 2's
-      // late rows filter against batch 0's far-future stats, the same
-      // provable drop set as the r18 four-file shape, one fewer
-      // micro-batch (guide §1.2-1). A 2-files-per-trigger grouping was
-      // MEASURED WRONG this round: [s2, late] in one batch filters
-      // late rows with the pre-sentinel watermark and absorbs them
-      // (3385 vs 3068 oracle rows) — do not regroup without re-running
-      // the oracle.
-      def stream = Catalog.normalizeEventTs(
-          spark.readStream.schema(rawSchema)
-            .option("maxFilesPerTrigger", "1").parquet(srcDir.toString))
-        .withColumn("ts", col("ts").cast(TimestampType))
-      val agg = stream
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast(DecimalType(18, 6))).cast(DoubleType)
-            .as("total_value"))
-      withStreamShufflePartitions(spark, srcDir.toString) {
-        val query = agg.writeStream
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .outputMode("append")
-          .format("parquet").option("path", outDir.toString)
-          .start()
-        query.awaitTermination()
-      }
-      spark.read.parquet(outDir.toString)
-        .filter(col("event_type") =!= "sentinel")
-        .select(col("window.start").cast(TimestampNTZType).as("window_start"),
-          col("event_type"), col("n_events"), col("total_value"))
-        .orderBy("window_start", "event_type")
+      Scratch.dir("e15_out").toString
     }
+    // one file per trigger over the THREE landing files (sentinel 1
+    // rides in the on-time file — see the fixture comment for the
+    // two-batch watermark lag that pins this grouping): batch 2's late
+    // rows filter against batch 0's far-future stats. A
+    // 2-files-per-trigger grouping was MEASURED WRONG: [s2, late] in
+    // one batch filters late rows with the pre-sentinel watermark and
+    // absorbs them (3385 vs 3068 oracle rows) — do not regroup without
+    // re-running the oracle.
+    val agg = Catalog.normalizeEventTs(
+        spark.readStream.schema(rawSchema)
+          .option("maxFilesPerTrigger", "1").parquet(fx.landing.toString))
+      .withColumn("ts", col("ts").cast(TimestampType))
+      .withWatermark("ts", "1 hour")
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n_events"),
+        sum(col("value").cast(DecimalType(18, 6))).cast(DoubleType)
+          .as("total_value"))
+    runAvailableNow(spark, fx.landing.toString, fx.ckpt)(
+      agg.writeStream.outputMode("append")
+        .format("parquet").option("path", fx.sink))
+    spark.read.parquet(fx.sink)
+      .filter(col("event_type") =!= "sentinel")
+      .select(col("window.start").cast(TimestampNTZType).as("window_start"),
+        col("event_type"), col("n_events"), col("total_value"))
+      .orderBy("window_start", "event_type")
   }, Some(
     """SELECT date_trunc('hour', ts) AS window_start, event_type,
       |  COUNT(*) AS n_events,
@@ -970,17 +831,12 @@ object Streaming {
   // final logged read must reproduce the batch oracle exactly —
   // tombstoned users absent, everyone else at their latest value.
   val e16: Q = Q("e16_stream_mor_ingest", (spark, dir) => {
-    // restart discipline with the WAREHOUSE inside the memo: the
-    // landing files and MOR base/logs belong to the committed stream,
-    // so a re-invocation restarts against the same checkpoint — no
-    // new files, no new merge commits, the logged read unchanged.
-    // Re-initializing the MOR table per invocation (the r12-and-
-    // earlier shape) paid the full 3-commit ingest every bench pass.
-    val (whRoot, srcDir, ckpt) = e16State.computeIfAbsent(fxKey(spark, dir),
-        _ => Phase.timed("e16_stream_mor_ingest") {
+    // the WAREHOUSE is part of the fixture (see `fixture`): the MOR
+    // base/logs belong to the committed stream, so a restart adds no
+    // merge commits and the logged read is unchanged
+    val fx = fixture(spark, dir, "e16_stream_mor_ingest") { landing =>
       val wh = Warehouse.scratch(spark, "e16")
       val norm = Catalog(spark, dir).events
-      val srcDir = Scratch.dir("e16_src")
       // event-time terciles, landed as three files with ascending
       // mtimes (e11's ordered-mtime discipline → deterministic
       // micro-batch order that FOLLOWS event time)
@@ -989,43 +845,25 @@ object Streaming {
         .select(expr(
           "percentile(unix_micros(cast(ts as timestamp)), array(0.34D, 0.67D))"))
         .first().getSeq[Double](0)
-      def land(slice: org.apache.spark.sql.DataFrame, name: String,
-          mtime: Long): Unit = {
-        val stage = Scratch.dir(s"e16_$name")
-        slice.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = java.nio.file.Files.list(stage).iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet")).get
-        val dst = srcDir.resolve(s"$name.parquet")
-        java.nio.file.Files.move(part, dst)
-        require(dst.toFile.setLastModified(mtime),
-          "cannot order e16 landing files")
-        Scratch.remove(stage)
-      }
-      land(norm.filter(em < b(0)), "b1", 1700000000000L)
-      land(norm.filter(em >= b(0) && em < b(1)), "b2", 1700000001000L)
-      land(norm.filter(em >= b(1)), "b3", 1700000002000L)
+      landFile(norm.filter(em < b(0)), landing, "b1", 1700000000000L)
+      landFile(norm.filter(em >= b(0) && em < b(1)), landing, "b2",
+        1700000001000L)
+      landFile(norm.filter(em >= b(1)), landing, "b3", 1700000002000L)
       MergeOnRead.init(wh, "analytics", "user_mor",
         EventStream.latestPerUserCdc(norm.limit(0)).drop("op"))
-      (wh.root, srcDir, Scratch.dir("e16_ckpt"))
-    })
-    val wh = Warehouse(spark, whRoot)
-    withStreamShufflePartitions(spark, srcDir.toString) {
-      val norm = Catalog(spark, dir).events
-      val stream = spark.readStream.schema(norm.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      val query = stream.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          MergeOnRead.merge(wh, "analytics", "user_mor",
-            EventStream.latestPerUserCdc(batch)
-              .withColumn("__del", col("op") === "D").drop("op"),
-            "user_id", deleteCol = Some("__del"))
-          ()
-        }
-        .start()
-      query.awaitTermination()
+      wh.root
     }
+    val wh = Warehouse(spark, fx.sink)
+    val stream = spark.readStream.schema(Catalog(spark, dir).events.schema)
+      .option("maxFilesPerTrigger", "1").parquet(fx.landing.toString)
+    runAvailableNow(spark, fx.landing.toString, fx.ckpt)(
+      stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+        MergeOnRead.merge(wh, "analytics", "user_mor",
+          EventStream.latestPerUserCdc(batch)
+            .withColumn("__del", col("op") === "D").drop("op"),
+          "user_id", deleteCol = Some("__del"))
+        ()
+      })
     MergeOnRead.read(wh, "analytics", "user_mor", "user_id")
       .orderBy("user_id")
   }, Some(
@@ -1035,10 +873,6 @@ object Streaming {
       |        PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
       |      FROM events)
       |WHERE rn = 1 AND event_type <> 'error' ORDER BY user_id""".stripMargin.trim))
-
-  // e17 memoizes like e16: warehouse ROOT + landing + checkpoint
-  private val e17State = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, java.nio.file.Path, java.nio.file.Path)]()
 
   // e17 — STREAMING GDPR ERASURE (streaming/ErasureStream.scala +
   // core/Erasure.scala): tombstones arrive IN the stream, interleaved
@@ -1057,23 +891,9 @@ object Streaming {
   // total. Restart discipline per e16: re-invocation restarts the
   // committed stream, sink provably unchanged.
   val e17: Q = Q("e17_stream_erasure", (spark, dir) => {
-    val (whRoot, srcDir, ckpt) = e17State.computeIfAbsent(fxKey(spark, dir),
-        _ => Phase.timed("e17_stream_erasure") {
+    val fx = fixture(spark, dir, "e17_stream_erasure") { landing =>
       val wh = Warehouse.scratch(spark, "e17")
       val norm = Catalog(spark, dir).events
-      val srcDir = Scratch.dir("e17_src")
-      def land(slice: org.apache.spark.sql.DataFrame, name: String,
-          mtime: Long): Unit = {
-        val stage = Scratch.dir(s"e17_$name")
-        slice.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = java.nio.file.Files.list(stage).iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet")).get
-        val dst = srcDir.resolve(s"$name.parquet")
-        java.nio.file.Files.move(part, dst)
-        require(dst.toFile.setLastModified(mtime),
-          "cannot order e17 landing files")
-        Scratch.remove(stage)
-      }
       val rec = norm.select(col("event_id"), col("user_id"),
         lit("event").as("kind"),
         coalesce((col("value").cast(DecimalType(18, 6)) * 1000000)
@@ -1082,52 +902,45 @@ object Streaming {
         .select(col("user_id")).distinct()
         .select(lit(-1L).as("event_id"), col("user_id"),
           lit("erase").as("kind"), lit(0L).as("vmicros"))
-      land(rec.filter(col("event_id") % 2 === 0).drop("event_id"),
-        "a_events", 1700000000000L)
-      land(tomb.drop("event_id"), "b_tombstones", 1700000001000L)
-      land(rec.filter(col("event_id") % 2 =!= 0).drop("event_id"),
-        "c_events", 1700000002000L)
-      (wh.root, srcDir, Scratch.dir("e17_ckpt"))
-    })
-    val wh = Warehouse(spark, whRoot)
+      landFile(rec.filter(col("event_id") % 2 === 0).drop("event_id"),
+        landing, "a_events", 1700000000000L)
+      landFile(tomb.drop("event_id"), landing, "b_tombstones", 1700000001000L)
+      landFile(rec.filter(col("event_id") % 2 =!= 0).drop("event_id"),
+        landing, "c_events", 1700000002000L)
+      wh.root
+    }
+    val wh = Warehouse(spark, fx.sink)
     val mat = Materializer(wh)
     val model = Model("user_counts", Seq("events"),
       Materialization.Incremental(
         IncrementalStrategy.Merge(Seq("user_id"), None)),
       ctx => ctx.source("events"))
-    withStreamShufflePartitions(spark, srcDir.toString) {
-      import spark.implicits._
-      val stream = spark.readStream.schema(StructType(Seq(
-          StructField("user_id", LongType),
-          StructField("kind", StringType),
-          StructField("vmicros", LongType))))
-        .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      val out = graft.streaming.ErasureStream(
-        stream.as[graft.streaming.ErasureStream.Rec])
-      val query = out.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .outputMode("update")
-        .foreachBatch {
-          (b: org.apache.spark.sql.Dataset[graft.streaming.ErasureStream.Out],
-              _: Long) =>
-            val cached = b.persist()
-            try {
-              val ups = cached.filter(!col("erased"))
-                .select("user_id", "n_events", "total_micros")
-              if (!ups.isEmpty) { mat.run(model, _ => ups); () }
-              val purges = cached.filter(col("erased")).select("user_id")
-              if (wh.exists("analytics", "user_counts") && !purges.isEmpty) {
-                graft.core.Erasure.purge(
-                  wh, "analytics", "user_counts", "user_id", purges)
-                ()
-              }
-            } finally { cached.unpersist(); () }
-            ()
-        }
-        .start()
-      query.awaitTermination()
-    }
+    import spark.implicits._
+    val stream = spark.readStream.schema(StructType(Seq(
+        StructField("user_id", LongType),
+        StructField("kind", StringType),
+        StructField("vmicros", LongType))))
+      .option("maxFilesPerTrigger", "1").parquet(fx.landing.toString)
+    val out = graft.streaming.ErasureStream(
+      stream.as[graft.streaming.ErasureStream.Rec])
+    runAvailableNow(spark, fx.landing.toString, fx.ckpt)(
+      out.writeStream.outputMode("update").foreachBatch {
+        (b: org.apache.spark.sql.Dataset[graft.streaming.ErasureStream.Out],
+            _: Long) =>
+          val cached = b.persist()
+          try {
+            val ups = cached.filter(!col("erased"))
+              .select("user_id", "n_events", "total_micros")
+            if (!ups.isEmpty) { mat.run(model, _ => ups); () }
+            val purges = cached.filter(col("erased")).select("user_id")
+            if (wh.exists("analytics", "user_counts") && !purges.isEmpty) {
+              graft.core.Erasure.purge(
+                wh, "analytics", "user_counts", "user_id", purges)
+              ()
+            }
+          } finally { cached.unpersist(); () }
+          ()
+      })
     wh.read("analytics", "user_counts").orderBy("user_id")
   }, Some(
     """SELECT user_id, COUNT(*) AS n_events,
@@ -1135,10 +948,6 @@ object Streaming {
       |    AS total_micros
       |FROM events WHERE user_id % 13 <> 5
       |GROUP BY user_id ORDER BY user_id""".stripMargin.trim))
-
-  // e18 memoizes like e16: warehouse ROOT + landing + checkpoint
-  private val e18State = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, java.nio.file.Path, java.nio.file.Path)]()
 
   // e18 — streaming TRENDING top-k (the continuous dashboard: which
   // event types are hot in each hour). The stream maintains WINDOWED
@@ -1153,47 +962,35 @@ object Streaming {
   // same sink over a two-batch MemoryStream with cross-batch count
   // updates and pins parity with the batch form.
   val e18: Q = Q("e18_stream_trending", (spark, dir) => {
-    // e16's restart discipline (warehouse ROOT in the memo): the
-    // landing symlink and the merged counts table belong to the
-    // committed stream, so a re-invocation restarts against the same
-    // checkpoint — no new files, no merge fires, only the top-k read
-    // runs. The r12 shape paid the full from-zero AvailableNow build
-    // + merge every pass (7.84 s driver median — the slowest board
-    // entry); a restart times startup + the rank over the table.
-    val (whRoot, srcDir, ckpt) = e18State.computeIfAbsent(fxKey(spark, dir),
-        _ => Phase.timed("e18_stream_trending") {
-      val wh = Warehouse.scratch(spark, "e18")
-      val src = Scratch.dir("e18_src")
-      linkLanding(spark, dir, "events", src)
-      (wh.root, src, Scratch.dir("e18_ckpt"))
-    })
-    val wh = Warehouse(spark, whRoot)
+    // the merged counts table is part of the fixture (see `fixture`),
+    // so a restart fires no merge and only the top-k read runs; the
+    // r12 shape paid the full from-zero build + merge every pass
+    // (7.84 s board median — the slowest entry)
+    val fx = fixture(spark, dir, "e18_stream_trending") { landing =>
+      linkLanding(spark, dir, "events", landing)
+      Warehouse.scratch(spark, "e18").root
+    }
+    val wh = Warehouse(spark, fx.sink)
     val mat = Materializer(wh)
     val model = Model("trending_counts", Seq("events"),
       Materialization.Incremental(
         IncrementalStrategy.Merge(Seq("window_start", "event_type"), None)),
       ctx => ctx.source("events"))
-    withStreamShufflePartitions(spark, srcDir.toString) {
-      // schema probed + ts normalized through the chokepoint (see
-      // e03); the watermark needs LTZ, so the canonical NTZ ts rides
-      // the stream as LTZ (wall-clock identity under the pinned UTC
-      // session) and window_start casts back to NTZ at the sink
-      val stream = Catalog.normalizeEventTs(
-        spark.readStream.schema(Catalog(spark, dir).eventsRawSchema)
-          .parquet(srcDir.toString))
-        .withColumn("ts", col("ts").cast(TimestampType))
-      val query = graft.streaming.EventStream.trendingCountsStream(stream)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
+    // schema probed + ts normalized through the chokepoint (see e03);
+    // the watermark needs LTZ, so the canonical NTZ ts rides the stream
+    // as LTZ (wall-clock identity under the pinned UTC session) and
+    // window_start casts back to NTZ at the sink
+    val stream = Catalog.normalizeEventTs(
+      spark.readStream.schema(Catalog(spark, dir).eventsRawSchema)
+        .parquet(fx.landing.toString))
+      .withColumn("ts", col("ts").cast(TimestampType))
+    runAvailableNow(spark, fx.landing.toString, fx.ckpt)(
+      graft.streaming.EventStream.trendingCountsStream(stream).writeStream
         .outputMode("update")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        .foreachBatch { (batch: DataFrame, _: Long) =>
           mat.run(model, _ => batch.withColumn("window_start",
             col("window_start").cast(TimestampNTZType))); ()
-        }
-        .start()
-      query.awaitTermination()
-    }
+        })
     graft.streaming.EventStream
       .topK(wh.read("analytics", "trending_counts"), k = 3)
       .orderBy("window_start", "rnk")
@@ -1250,9 +1047,6 @@ object Streaming {
       .orderBy("event_id")
   }
 
-  private val e20State = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, java.nio.file.Path, java.nio.file.Path)]()
-
   // e20 — KAPPA BACKFILL (the batch→stream migration seam every
   // production pipeline crosses: Kreps' "Questioning the Lambda
   // Architecture" shape): ONE unified table fed by a batch backfill
@@ -1273,57 +1067,38 @@ object Streaming {
   val e20: Q = Q("e20_stream_backfill", (spark, dir) => {
     val histEnd = lit("2024-01-25 00:00:00").cast(TimestampNTZType)
     val streamStart = lit("2024-01-22 00:00:00").cast(TimestampNTZType)
-    val (whRoot, srcDir, ckpt) = e20State.computeIfAbsent(fxKey(spark, dir),
-        _ => Phase.timed("e20_stream_backfill") {
+    val fx = fixture(spark, dir, "e20_stream_backfill") { landing =>
       val wh = Warehouse.scratch(spark, "e20")
       val norm = Catalog(spark, dir).events
       wh.write(norm.filter(col("ts") < histEnd), "analytics", "events_unified")
       val live = norm.filter(col("ts") >= streamStart)
-      val srcDir = Scratch.dir("e20_src")
-      def land(slice: org.apache.spark.sql.DataFrame, name: String,
-          mtime: Long): Unit = {
-        val stage = Scratch.dir(s"e20_$name")
-        slice.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = java.nio.file.Files.list(stage).iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet")).get
-        val dst = srcDir.resolve(s"$name.parquet")
-        java.nio.file.Files.move(part, dst)
-        require(dst.toFile.setLastModified(mtime),
-          "cannot order e20 landing files")
-        Scratch.remove(stage)
-      }
-      land(live.filter(col("event_id") % 3 === 0), "a_stripe", 1700000000000L)
-      land(live.filter(col("event_id") % 3 === 1), "b_stripe", 1700000001000L)
-      land(live.filter(col("event_id") % 3 === 2), "c_stripe", 1700000002000L)
-      (wh.root, srcDir, Scratch.dir("e20_ckpt"))
-    })
-    val wh = Warehouse(spark, whRoot)
-    locally {
-      val schema = Catalog(spark, dir).events.schema
-      // no per-trigger file limit: the reconciliation is ORDER-FREE
-      // across micro-batches by construction (each batch left-anti
-      // joins the table's own event_ids — the docstring's point), so
-      // forcing one stripe per batch bought determinism the anti-join
-      // already guarantees while paying 3× the per-batch fixed cost
-      // (state-free, but each batch is a full table read + append).
-      // One AvailableNow batch reconciles all landed stripes at once;
-      // the appended row set is identical (guide §1.2-1).
-      val stream = spark.readStream.schema(schema).parquet(srcDir.toString)
-      withStreamShufflePartitions(spark, srcDir.toString) {
-        val query = stream.writeStream
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            val seen = wh.read("analytics", "events_unified").select("event_id")
-            val fresh = batch.join(seen, Seq("event_id"), "left_anti")
-              .localCheckpoint(true)
-            wh.write(fresh, "analytics", "events_unified", mode = "append")
-            ()
-          }
-          .start()
-        query.awaitTermination()
-      }
+      landFile(live.filter(col("event_id") % 3 === 0), landing, "a_stripe",
+        1700000000000L)
+      landFile(live.filter(col("event_id") % 3 === 1), landing, "b_stripe",
+        1700000001000L)
+      landFile(live.filter(col("event_id") % 3 === 2), landing, "c_stripe",
+        1700000002000L)
+      wh.root
     }
+    val wh = Warehouse(spark, fx.sink)
+    // no per-trigger file limit: the reconciliation is ORDER-FREE across
+    // micro-batches by construction (each batch left-anti joins the
+    // table's own event_ids — the docstring's point), so forcing one
+    // stripe per batch bought determinism the anti-join already
+    // guarantees while paying 3× the per-batch fixed cost (state-free,
+    // but each batch is a full table read + append). One AvailableNow
+    // batch reconciles all landed stripes at once; the appended row set
+    // is identical (guide §1.2-1).
+    val stream = spark.readStream.schema(Catalog(spark, dir).events.schema)
+      .parquet(fx.landing.toString)
+    runAvailableNow(spark, fx.landing.toString, fx.ckpt)(
+      stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+        val seen = wh.read("analytics", "events_unified").select("event_id")
+        val fresh = batch.join(seen, Seq("event_id"), "left_anti")
+          .localCheckpoint(true)
+        wh.write(fresh, "analytics", "events_unified", mode = "append")
+        ()
+      })
     wh.read("analytics", "events_unified")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
@@ -1500,7 +1275,7 @@ object Streaming {
     val landing = WebQueries.wetFixtureDir(c)
     val wh = Warehouse.scratch(spark, "e25")
     val ckpt = Scratch.dir("e25_ckpt")
-    try withStreamShufflePartitions(spark, landing) {
+    try {
       val recs = graft.sources.Warc.parse(
         spark.readStream
           .option("lineSep", graft.sources.Warc.RecordBoundary)
@@ -1509,10 +1284,8 @@ object Streaming {
         .select(col("url"), col("rec_type"), col("warc_date"),
           col("content_length"),
           md5(col("payload").cast("binary")).as("payload_md5"))
-      val query = recs.writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
+      runAvailableNow(spark, landing, ckpt)(
+        recs.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
           // idempotent per-batchId overwrite (the documented
           // foreachBatch exactly-once recipe): a batch REPLAYED after
           // a crash-before-checkpoint-commit lands in the same
@@ -1523,9 +1296,7 @@ object Streaming {
           batch.write.mode("overwrite")
             .parquet(s"${wh.path("crawl", "wet_records")}/batch=$bid")
           ()
-        }
-        .start()
-      query.awaitTermination()
+        })
     } finally Scratch.remove(ckpt)
     // project the record columns back out (partition discovery adds
     // the batch=N provenance column — useful lineage, not output)

@@ -709,8 +709,12 @@ class StreamingSpec extends SparkSpec {
     // the memoized path (same landing dir, same checkpoint, no new
     // files) and must read back the SAME committed state the first
     // pass built — a restart that re-ingested or dropped state would
-    // diverge here before it ever reached the driver's oracle
-    for (q <- Seq(graft.queries.Streaming.e11, graft.queries.Streaming.e18)) {
+    // diverge here before it ever reached the DuckDB oracle. All
+    // eight memoized entries run over the same dir in one session, so
+    // a fixture memo that handed one entry another's checkpoint or
+    // sink fails here too.
+    import graft.queries.Streaming._
+    for (q <- Seq(e08, e11, e14, e15, e16, e17, e18, e20)) {
       val first = q.run(spark, sfDir).collect().map(_.toString).toSeq
       val again = q.run(spark, sfDir).collect().map(_.toString).toSeq
       assert(first.nonEmpty, s"${q.name}: empty first result")
@@ -938,8 +942,12 @@ class StreamingSpec extends SparkSpec {
       QEv(7, at(2, 9, 30), 2), QEv(8, at(2, 10, 0), 2))
     val f3 = Seq(QEv(90, at(3, 6, 0), 9))
     val f4 = Seq(QEv(91, at(4, 6, 0), 9))
+    // one file per feed: the live query polls its source dir while a
+    // feed is written, and a multi-file feed could reach it split over
+    // two micro-batches, turning the reference run's arrival order
+    // into a race
     def feed(dir: String, rows: Seq[QEv]): Unit =
-      rows.toDF().write.mode("append").parquet(dir)
+      rows.toDF().coalesce(1).write.mode("append").parquet(dir)
     def stream(srcDir: String) = spark.readStream
       .schema(org.apache.spark.sql.Encoders.product[QEv].schema)
       .parquet(srcDir).as[QEv].withWatermark("ts", "1 hour")
