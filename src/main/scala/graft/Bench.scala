@@ -28,17 +28,14 @@ object Bench {
       (name, secs, err)
     }
 
-  private def timed(spark: SparkSession, dir: String,
+  private[graft] def timed(spark: SparkSession, dir: String,
       fn: (SparkSession, String) => DataFrame): (Double, Option[String]) = {
     val t0 = System.nanoTime()
     // noop sink: materializes every column of the full plan (count()
     // would let Catalyst prune projections + the final sort).
     val err =
       try { fn(spark, dir).write.format("noop").mode("overwrite").save(); None }
-      catch { case e: Throwable =>
-        Some(Option(e.getMessage).getOrElse(e.getClass.getName)
-          .takeWhile(_ != '\n').take(200))
-      }
+      catch { case e: Throwable => Some(firstLine(e)) }
     val secs = (System.nanoTime() - t0) / 1e9
     // Drop this query's persisted blocks before the next one runs.
     // The iterative operators pin frames with eager localCheckpoint;
@@ -46,7 +43,7 @@ object Bench {
     // BlockManager for the whole session and the tail of the bench
     // (the scale probes) times GC pressure instead of the operator —
     // r10 measured d10_semdedup_auto at 40.3 s here vs 3.7 s in an
-    // uncontended session (ProbeAudit). Cleanup runs OUTSIDE the
+    // uncontended session (graft.Probe). Cleanup runs OUTSIDE the
     // timed window: the frame is fully consumed by the noop sink, so
     // nothing downstream re-reads the dropped blocks.
     spark.sharedState.cacheManager.clearCache()
@@ -377,24 +374,44 @@ object Bench {
 
   // ----------------------------------------------------------------
 
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  /** JSON string literal for Bench's line and Verify's
+    * oracle_sql.json: escapes backslash, quote and ALL control chars
+    * (<0x20) — a tab or CR in hand-written oracle SQL would otherwise
+    * make `json.load` of oracle_sql.json fail, and the DuckDB compare
+    * with it.
+    */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** An error's first message line, capped, for the JSON errors map. */
+  private def firstLine(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.getClass.getName)
+      .takeWhile(_ != '\n').take(200)
+
+  /** Best-effort recursive delete of a staged probe corpus. */
+  private def deleteDir(spark: SparkSession, dir: String): Unit =
+    try {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      ()
+    } catch { case _: Throwable => () }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
     val doScale = sys.env.getOrElse("SPARK_GRAFT_SCALE10X", "1") != "0"
     // local-iteration aid: comma-separated query-name filter (the
     // driver never sets it — full board). Filtered runs intersect the
     // probe tail with the filter: naming a probed op runs ITS probe
     // (and its dial sibling, for the bases that have one) and nothing
-    // else — the uncontended per-op probe the ProbeAudit compares
+    // else — the uncontended per-op probe graft.Probe compares
     // driver-shaped numbers against.
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
@@ -406,20 +423,7 @@ object Bench {
     // hard wall for the optional scale10x tail so a contended sandbox
     // can never push the bench past the driver's patience
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "2400").toDouble
-    def mkSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.warehouse.dir",
-          s"${System.getProperty("java.io.tmpdir")}/graft_spark_warehouse")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    var spark = mkSession()
+    var spark = GraftSession()
     val benchStart = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - benchStart) / 1e9
     def sweepScratch(): Unit = locally {
@@ -469,10 +473,7 @@ object Bench {
       scala.collection.mutable.ArrayBuffer.empty[Map[String, Double]]
     val passes = (1 to iters).map { p =>
       if (p > 1) {
-        spark.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-        spark = mkSession()
+        spark = GraftSession.restart(spark)
         warmup()
         try graft.queries.Relational.stageQ34(spark, sfDir)
         catch { case _: Throwable => () }
@@ -534,12 +535,9 @@ object Bench {
         //    timed()'s clearCache+unpersist does not reach.
         // The tail therefore runs on a FRESH SparkSession over an
         // emptied scratch root — the same isolation an uncontended
-        // ProbeAudit run has, so the artifact grades the operators.
+        // graft.Probe run has, so the artifact grades the operators.
         sweepScratch()
-        spark.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-        val sp = mkSession()
+        val sp = GraftSession.restart(spark)
         // absorb the fresh session's executor/BlockManager setup
         // outside the first probe's timing (head-warmup discipline)
         sp.read.parquet(s"$sfDir/nation.parquet")
@@ -549,10 +547,7 @@ object Bench {
         // take the whole bench line — and all 75 medians — with it
         val staged =
           try { stageScaled(sp, sfDir, scaleDir); None }
-          catch { case e: Throwable =>
-            Some(Option(e.getMessage).getOrElse(e.getClass.getName)
-              .takeWhile(_ != '\n').take(200))
-          }
+          catch { case e: Throwable => Some(firstLine(e)) }
         if (staged.isDefined)
           probeOps.map(n =>
             (n, -1.0, medians(n), Some(s"staging_failed: ${staged.get}")))
@@ -757,10 +752,7 @@ object Bench {
             val dir100 = graft.core.Scratch.dir("scale100x").toString
             val staged100 =
               try { stageEmbeddings100x(sp, sfDir, dir100); None }
-              catch { case e: Throwable =>
-                Some(Option(e.getMessage).getOrElse(e.getClass.getName)
-                  .takeWhile(_ != '\n').take(200))
-              }
+              catch { case e: Throwable => Some(firstLine(e)) }
             val rs100 =
               if (staged100.isDefined)
                 (Seq("d10_semdedup_auto_100x", "s05_knn_graph_auto_100x") ++
@@ -817,11 +809,7 @@ object Bench {
                   (n, secs, base, err)
                 }
               }
-            try {
-              val p = new org.apache.hadoop.fs.Path(dir100)
-              p.getFileSystem(sp.sparkContext.hadoopConfiguration).delete(p, true)
-              ()
-            } catch { case _: Throwable => () }
+            deleteDir(sp, dir100)
             rs100
           }
         } ++ {
@@ -837,10 +825,7 @@ object Bench {
             val dir100d = graft.core.Scratch.dir("scale100xdocs").toString
             val stagedD =
               try { stageDocuments100x(sp, sfDir, dir100d); None }
-              catch { case e: Throwable =>
-                Some(Option(e.getMessage).getOrElse(e.getClass.getName)
-                  .takeWhile(_ != '\n').take(200))
-              }
+              catch { case e: Throwable => Some(firstLine(e)) }
             val rsD =
               if (stagedD.isDefined)
                 Seq(
@@ -1003,10 +988,7 @@ object Bench {
                     val dir1m = graft.core.Scratch.dir("scale1m").toString
                     val staged1m =
                       try { stageDocuments1m(sp, sfDir, dir1m); None }
-                      catch { case e: Throwable =>
-                        Some(Option(e.getMessage).getOrElse(e.getClass.getName)
-                          .takeWhile(_ != '\n').take(200))
-                      }
+                      catch { case e: Throwable => Some(firstLine(e)) }
                     val out =
                       if (staged1m.isDefined)
                         Seq("d02_dedup_minhash_1m",
@@ -1062,12 +1044,7 @@ object Bench {
                           ("d18_increment_1mcorpus", s18m,
                             medians("d18_incremental_lsh"), e18m))
                       }
-                    try {
-                      val p = new org.apache.hadoop.fs.Path(dir1m)
-                      p.getFileSystem(sp.sparkContext.hadoopConfiguration)
-                        .delete(p, true)
-                      ()
-                    } catch { case _: Throwable => () }
+                    deleteDir(sp, dir1m)
                     out
                   }
                 Seq(
@@ -1076,20 +1053,11 @@ object Bench {
                   ("d06_dedup_groups_100x", secs6,
                     medians("d06_dedup_groups"), err6)) ++ rsD04 ++ rsD14 ++ rsD17 ++ rsD18 ++ rs1m
               }
-            try {
-              val p = new org.apache.hadoop.fs.Path(dir100d)
-              p.getFileSystem(sp.sparkContext.hadoopConfiguration).delete(p, true)
-              ()
-            } catch { case _: Throwable => () }
+            deleteDir(sp, dir100d)
             rsD
           }
         }
-        // best-effort scratch cleanup; the data lives under /tmp anyway
-        try {
-          val p = new org.apache.hadoop.fs.Path(scaleDir)
-          p.getFileSystem(sp.sparkContext.hadoopConfiguration).delete(p, true)
-          ()
-        } catch { case _: Throwable => () }
+        deleteDir(sp, scaleDir)
         rs
         }
       }

@@ -17,7 +17,7 @@ import graft.plans.{DotProduct, KmvDistinct, MisraGries, NfcNormalize, WindowHas
   *
   * Wire up any of the three ways Spark supports:
   * {{{
-  *   SparkSession.builder.withExtensions(new GraftExtensions) ...
+  *   builder.withExtensions(new GraftExtensions)   // a session being built
   *   // cluster-wide, no code change:
   *   //   --conf spark.sql.extensions=graft.GraftExtensions
   *   GraftExtensions.install(spark)   // a session that already exists

@@ -470,12 +470,7 @@ object Main {
     val wh = Warehouse(spark, cfg.warehouseRoot)
     val base = baseSchemaOf(wh, cfg)
     val graph = DemoProject.graph(cfg.slices, schema = base, vars = cfg.vars)
-    val targets = graph.models.collect {
-      case m if (m.materialization match {
-        case Materialization.Incremental(_) | Materialization.Snapshot(_, _) => true
-        case _ => false
-      }) => m.name
-    }
+    val targets = graph.models.filter(IncrementalCI.isCloneTarget).map(_.name)
     cfg.jdbcUrl match {
       case Some(url) =>
         val jdbc = graft.sources.JdbcWarehouse(spark, url)
@@ -590,17 +585,9 @@ object Main {
       case Left(err) => System.err.println(err); sys.exit(2)
       case Right(c) => c
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .appName(s"graft-${cfg.command}")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_spark_warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(if (cfg.verbose) "INFO" else "WARN")
+    val spark = GraftSession(shufflePartitions = Some(32),
+      master = sys.env.get("SPARK_GRAFT_MASTER"))
+    if (cfg.verbose) spark.sparkContext.setLogLevel("INFO")
     val bar = "=" * 60
     try cfg.command match {
       case "run" if cfg.empty =>

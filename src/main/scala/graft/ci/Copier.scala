@@ -97,7 +97,7 @@ object IncrementalCI {
     Selection(modified, closure, targets)
   }
 
-  private def isCloneTarget(m: Model): Boolean = m.materialization match {
+  private[graft] def isCloneTarget(m: Model): Boolean = m.materialization match {
     case Materialization.Incremental(_) => true
     case Materialization.Snapshot(_, _) => true
     case _ => false

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates queries/MmOracles.scala — the literal VALUES oracles
   * for the mm entries. The mm fixtures (Multimodal.stubMedia /
   * noiseMedia) are pure functions of their size parameter, so the
@@ -33,13 +31,7 @@ object GenMmOracles {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     def rowsOf(q: graft.queries.Q): Seq[Seq[Any]] =
       q.run(spark, "/root/testdata/sf0.001").collect().toSeq

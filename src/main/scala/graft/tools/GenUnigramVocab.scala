@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot generator for x37's FROZEN unigram vocabulary: trains
   * [[graft.operators.Unigram]] on the compare-scale corpus and prints
   * the pinned `Piece` list as Scala source (the bpeMerges recipe —
@@ -10,13 +8,7 @@ import org.apache.spark.sql.SparkSession
 object GenUnigramVocab {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val vocab = graft.operators.Unigram.train(docs, "text",
       vocabSize = 64, iters = 2)

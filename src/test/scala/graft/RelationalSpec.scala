@@ -117,6 +117,19 @@ class RelationalSpec extends SparkSpec {
       s"expected DPP in the fact scan's PartitionFilters:\n$plan")
   }
 
+  test("Explain.executedPlan captures the final adaptive plan that ran and leaves no listener behind") {
+    // listListeners is private[sql] in Scala but public in bytecode
+    def listeners(): List[AnyRef] =
+      classOf[org.apache.spark.sql.util.ExecutionListenerManager]
+        .getMethod("listListeners").invoke(spark.listenerManager)
+        .asInstanceOf[Array[AnyRef]].toList
+    val before = listeners()
+    val df = SparkEntry.queries("q23_topk_per_group")(spark, sfDir)
+    val plan = Explain.executedPlan(spark, df).toString
+    assert(plan.contains("isFinalPlan=true"), s"expected AQE's final plan:\n$plan")
+    assert(listeners() == before)
+  }
+
   test("q35 injects a runtime bloom filter on the fact side") {
     val keys = Seq(
       "spark.sql.optimizer.runtime.bloomFilter.enabled",
