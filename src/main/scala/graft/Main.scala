@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -102,7 +104,8 @@ object Main {
       |                         materializes empty into the _<suffix> CI
       |                         schema (never prod), exits 1 on contract
       |                         violations; no manifest/journal writes
-      |  --full-refresh         incremental models rebuild from scratch
+      |  --full-refresh         incremental models rebuild from scratch;
+      |                         ci reuses no prod table
       |  --verbose              per-model/table detail lines
       |
       |  unit: run the demo project's dbt-style unit tests — each case
@@ -192,12 +195,16 @@ object Main {
       stored: Seq[String] = Nil) {
     def failed: Boolean = checks.exists(_._2 > 0)
   }
+  /** `ran` is what the Runner built; `reused` the closure tables
+    * copied from prod by early cutoff. `ciCounts` covers both.
+    */
   final case class CiReport(
       selection: IncrementalCI.Selection,
       copies: Seq[CopyResult],
       ran: Seq[String],
       ciCounts: Map[String, Long],
-      ciSchema: String = "")
+      ciSchema: String = "",
+      reused: Seq[String] = Nil)
 
   /** A user-correctable CLI failure (e.g. `ci` before any `run` has
     * persisted a manifest): `main` prints the message to stderr and
@@ -244,7 +251,12 @@ object Main {
     */
   def deferResolve(graph: ModelGraph, wh: Warehouse,
       srcs: String => DataFrame): String => DataFrame = {
-    def resolve(name: String): DataFrame = graph.byName.get(name) match {
+    // memoized: CI's early-cutoff walk and its build resolve the same
+    // prod tables and sources, and each read is a footer read plus a
+    // listing
+    val memo = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+    def resolve(name: String): DataFrame = memo.getOrElseUpdate(name, resolved(name))
+    def resolved(name: String): DataFrame = graph.byName.get(name) match {
       case Some(m) =>
         m.materialization match {
           case Materialization.View =>
@@ -282,9 +294,16 @@ object Main {
     EmptyRun.validate(Materializer(wh), graph, sources(spark, cfg))
   }
 
-  def run(spark: SparkSession, cfg: CliConfig): RunReport = {
+  def run(spark: SparkSession, cfg: CliConfig): RunReport =
+    run(spark, cfg, DemoProject.graph(cfg.slices, schema = cfg.schema, vars = cfg.vars))
+
+  /** `run` over `graph` instead of the demo DAG. Each persisted model
+    * it builds is fingerprinted as planned ([[Fingerprint]]); the
+    * manifest stores the fingerprint and the data version of the
+    * table written, and run_results.json records every model.
+    */
+  private[graft] def run(spark: SparkSession, cfg: CliConfig, graph: ModelGraph): RunReport = {
     val wh = Warehouse(spark, cfg.warehouseRoot)
-    val graph = DemoProject.graph(cfg.slices, schema = cfg.schema, vars = cfg.vars)
     // dbt `run --selector <name>`: resolve the NAMED selector from
     // selectors.yml through the same mini-language as an inline
     // --select (Selector.selectNamed IS one select() call), then run
@@ -331,7 +350,13 @@ object Main {
         resolve
       case None => baseSources
     }
-    Runner(Materializer(wh), runSources, cfg.fullRefresh,
+    val fingerprints = new java.util.concurrent.ConcurrentHashMap[String, Either[String, String]]()
+    val mat = Materializer(wh, onPlanned = (m, df) =>
+      if (m.materialization != Materialization.View)
+        fingerprints.put(m.name,
+          if (cfg.fullRefresh) Left("full refresh") else Fingerprint.of(m, df)))
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val outcome = scala.util.Try(Runner(mat, runSources, cfg.fullRefresh,
         threads = cfg.threads,
         // intent commits at MODEL START — after a crash it marks
         // exactly the in-flight (possibly written-but-unjournaled)
@@ -339,6 +364,7 @@ object Main {
         // ambiguous-append rebuild cannot wipe the accumulated
         // history of an untouched append model
         onModelStart = n => {
+          started.add(n)
           val m = byName(n)
           if (m.materialization != Materialization.View)
             journalLock.synchronized {
@@ -355,14 +381,24 @@ object Main {
               Retry.commit(wh, journal)
             }
         })
-      .runSelected(graph, order)
+      .runSelected(graph, order))
     val wall = (System.nanoTime() - t0) / 1e9
-    ManifestState.save(wh, ManifestState.of(graph))
+    val done = secs.asScala.toMap
+    val counts = persisted.collect { case m if done.contains(m.name) =>
+      m.name -> wh.rowCount(m.targetSchema, m.name) }.toMap
+    RunResults.save(wh, "run", wall, RunResults.ran(persisted.map(_.name), started.contains,
+      done, counts, n => Option(fingerprints.get(n)).getOrElse(Left("not planned"))))
+    outcome.get
+    // a model with a fingerprint is stamped with the data version of
+    // the table it just wrote; models this run did not build get none
+    val stamps = fingerprints.asScala.collect { case (n, Right(fp)) =>
+      n -> Fingerprint.Stamp(fp,
+        Fingerprint.dataVersion(spark, wh.path(byName(n).targetSchema, n)))
+    }.toMap
+    ManifestState.save(wh, ManifestState.of(graph).copy(stamps = stamps))
     Retry.commit(wh, Map.empty)
     Retry.commit(wh, Map.empty, Retry.intentArtifact)
-    val counts = persisted.map(m => m.name -> wh.rowCount(m.targetSchema, m.name)).toMap
-    import scala.jdk.CollectionConverters._
-    RunReport(order, counts, secs.asScala.toMap, wall)
+    RunReport(order, counts, done, wall)
   }
 
   /** Schema the last `run` targeted — written at run START so `retry`
@@ -527,33 +563,69 @@ object Main {
     * incremental/snapshot prod state -> run the closure in the
     * suffixed schema with deferred refs. Dry-run stops after reporting
     * what would be copied (reference: cli.py:160-214 summary).
+    *
+    * Early cutoff ([[IncrementalCI.cutoff]]): a closure table whose
+    * fingerprint matches the one prod's run recorded is not rebuilt;
+    * its CI table is a file-level copy of prod's. Everything else
+    * builds as before, and run_results.json records which was which.
     */
-  def ci(spark: SparkSession, cfg: CliConfig): CiReport = {
+  def ci(spark: SparkSession, cfg: CliConfig): CiReport =
+    ci(spark, cfg, base =>
+      DemoProject.graph(cfg.slices, changed = cfg.changed, schema = base, vars = cfg.vars))
+
+  /** `ci` over the graph `project` returns for the base schema. */
+  private[graft] def ci(spark: SparkSession, cfg: CliConfig,
+      project: String => ModelGraph): CiReport = {
     val wh = Warehouse(spark, cfg.warehouseRoot)
     val src = manifestSource(wh, cfg)
     val manifest = src.fetch().getOrElse(throw new CliError(
       s"no manifest at ${src.describe} - run `graft.Main run` first " +
         "(or point --manifest at a prod manifest.json)"))
     val base = manifest.baseSchema.getOrElse(cfg.schema)
-    val graph = DemoProject.graph(cfg.slices, changed = cfg.changed, schema = base, vars = cfg.vars)
+    val graph = project(base)
     val copier = TableCopier(wh, cfg.threads)
-    val (sel, copies) =
-      IncrementalCI.run(graph, manifest, copier, base, cfg.suffix, cfg.dryRun)
+    val sel = IncrementalCI.select(graph, manifest)
     val ciSchema = s"${base}_${cfg.suffix}"
-    if (cfg.dryRun) return CiReport(sel, copies, Nil, Map.empty, ciSchema)
+    if (cfg.dryRun) return CiReport(sel,
+      copier.copyAll(base, sel.cloneTargets, cfg.suffix, dryRun = true), Nil, Map.empty, ciSchema)
 
+    val t0 = System.nanoTime()
     val ciGraph = ModelGraph(graph.models.map(m =>
       if (sel.closure.contains(m.name)) m.copy(schemaSuffix = Some(cfg.suffix))
       else m))
     val order = ciGraph.topoOrder.filter(sel.closure.contains)
     val resolve = deferResolve(graph, wh, sources(spark, cfg))
-    Runner(Materializer(wh), resolve, cfg.fullRefresh, threads = cfg.threads)
-      .runSelected(ciGraph, order)
-    val counts = order.collect {
-      case n if ciGraph.byName(n).materialization != Materialization.View =>
-        n -> wh.rowCount(ciGraph.byName(n).targetSchema, n)
-    }.toMap
-    CiReport(sel, copies, order, counts, ciSchema)
+    val cut = IncrementalCI.cutoff(graph, ciGraph, order, manifest, Materializer(wh),
+      resolve, cfg.fullRefresh)
+    val reusable = order.filter(n => cut.verdicts.get(n).exists(_.isRight))
+    // clone targets and reused tables copy on one pool; a reused table
+    // whose copy fails builds instead
+    val (copies, reuseCopies) = copier
+      .copyAll(base, sel.cloneTargets ++ reusable, cfg.suffix)
+      .splitAt(sel.cloneTargets.size)
+    val reused = reuseCopies.filter(_.status == "copied")
+    val built = order.filterNot(reused.map(_.table).toSet)
+    val secs = new java.util.concurrent.ConcurrentHashMap[String, Double]()
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val outcome = scala.util.Try(Runner(Materializer(wh, plans = cut.plans), resolve,
+        cfg.fullRefresh, threads = cfg.threads,
+        onModelStart = n => { started.add(n); () },
+        onModelDone = (n, sec) => { secs.put(n, sec); () })
+      .runSelected(ciGraph, built))
+    val done = secs.asScala.toMap
+    val persisted = order.filter(n => ciGraph.byName(n).materialization != Materialization.View)
+    val counts = persisted.collect {
+      case n if done.contains(n) => n -> wh.rowCount(ciGraph.byName(n).targetSchema, n)
+    }.toMap ++ reused.map(c => c.table -> c.rows)
+    def reason(n: String) = cut.verdicts.getOrElse(n, Left("not planned"))
+    def copied(status: String)(c: CopyResult) =
+      RunResults.Result(c.table, status, c.seconds, Some(c.rows), reason(c.table))
+    RunResults.save(wh, "ci", (System.nanoTime() - t0) / 1e9,
+      copies.filter(_.status == "copied").map(copied("cloned")) ++
+        reused.map(copied("reused")) ++
+        RunResults.ran(persisted, started.contains, done, counts, reason))
+    outcome.get
+    CiReport(sel, copies, built, counts, ciSchema, reused.map(_.table))
   }
 
   // ----------------------------------------------------------------
@@ -644,9 +716,12 @@ object Main {
         println(s"Incremental/Snapshot nodes: ${r.selection.cloneTargets.size}")
         printCopySummary(bar, r.copies, cfg.dryRun)
         if (!cfg.dryRun) {
-          println(s"CI models built (${r.ciSchema}): ${r.ran.size}")
+          println(s"CI models (${r.ciSchema}): " +
+            s"${r.ran.count(r.ciCounts.contains)} built, ${r.reused.size} reused, " +
+            s"${r.copies.count(_.status == "copied")} cloned")
           r.ciCounts.toSeq.sortBy(_._1).foreach { case (n, c) =>
-            println(f"  $n%-24s $c%10d rows") }
+            val how = if (r.reused.contains(n)) "reused" else "built"
+            println(f"  $n%-24s $c%10d rows  $how") }
         }
         if (r.copies.exists(_.status.startsWith("error"))) { spark.stop(); sys.exit(1) }
       case "docs" =>

@@ -4,9 +4,13 @@ import java.util.concurrent.Executors
 
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
 
-import graft.core.{ManifestState, Materialization, Model, ModelGraph, Warehouse}
+import org.apache.spark.sql.DataFrame
+
+import graft.core.{Fingerprint, ManifestState, Materialization, Materializer, Model,
+  ModelGraph, Warehouse}
 
 /** Result of one table clone (reference:
   * src/dbt_incremental_ci/copier.py:158-233 returns per-table status).
@@ -17,7 +21,8 @@ final case class CopyResult(
     targetSchema: String,
     rows: Long,
     dryRun: Boolean,
-    status: String)
+    status: String,
+    seconds: Double = 0.0)
 
 /** Clones production tables into an isolated CI schema — the
   * reference's core use case, re-expressed over the parquet warehouse.
@@ -27,9 +32,14 @@ final case class CopyResult(
   *  - dry-run mode that reports what WOULD copy
   *    (reference: copier.py:235-253);
   *  - a fixed-size thread pool running clones in parallel
-  *    (reference: copier.py:255-271). Spark schedules each clone's
-  *    read→write job concurrently from its own submitter thread; the
-  *    data path is fully distributed (no driver collect).
+  *    (reference: copier.py:255-271).
+  *
+  * A clone is a file-level copy ([[Warehouse.copyFiles]]): the
+  * table's data files are copied through the Hadoop FileSystem,
+  * staged and swapped in. No Spark job runs, and the clone keeps
+  * prod's footers, partition layout and data version, so an
+  * incremental run on top of a partitioned clone sees every prod
+  * partition.
   */
 final case class TableCopier(wh: Warehouse, parallelism: Int = 4) {
 
@@ -47,8 +57,10 @@ final case class TableCopier(wh: Warehouse, parallelism: Int = 4) {
         CopyResult(table, sourceSchema, tgt, wh.rowCount(sourceSchema, table),
           dryRun, "would_copy")
       else {
-        wh.write(wh.read(sourceSchema, table), tgt, table)
-        CopyResult(table, sourceSchema, tgt, wh.rowCount(tgt, table), dryRun, "copied")
+        val t0 = System.nanoTime()
+        wh.copyFiles(sourceSchema, tgt, table)
+        CopyResult(table, sourceSchema, tgt, wh.rowCount(tgt, table), dryRun, "copied",
+          (System.nanoTime() - t0) / 1e9)
       }
     }
   }
@@ -79,7 +91,8 @@ final case class TableCopier(wh: Warehouse, parallelism: Int = 4) {
   * old manifest against the current graph, expand to the downstream
   * closure (`state:modified+`), and keep only the nodes whose prod
   * state a CI run actually needs pre-seeded — incremental models and
-  * snapshots. Views/tables are rebuilt from scratch by CI anyway.
+  * snapshots. A closure table is rebuilt unless [[cutoff]] shows its
+  * build would reproduce prod's table, which CI then copies instead.
   */
 object IncrementalCI {
 
@@ -103,13 +116,64 @@ object IncrementalCI {
     case _ => false
   }
 
-  /** Detect, filter, and clone in one call; returns (selection, copy
-    * results for the clone targets).
+  /** Early cutoff over the closure, walked in topological order: a
+    * persisted node's CI table can be a copy of prod's when all of
+    * these hold:
+    *  - no fail-closed reason ([[Fingerprint.refusal]]; `--full-refresh`
+    *    turns reuse off);
+    *  - no input built in this check: every closure input is reused,
+    *    or a view over reused inputs;
+    *  - the fingerprint of the node's CI plan, with every input
+    *    resolved to prod (a reused node's copy holds prod's files),
+    *    equals the one prod's run recorded;
+    *  - prod's table still has the data version that run recorded.
+    * Planning a node runs no job. A node whose planning throws
+    * (a contract violation, say) builds, and its build fails the same
+    * way.
     */
-  def run(graph: ModelGraph, oldState: ManifestState, copier: TableCopier,
-      sourceSchema: String, suffix: String,
-      dryRun: Boolean = false): (Selection, Seq[CopyResult]) = {
-    val sel = select(graph, oldState)
-    (sel, copier.copyAll(sourceSchema, sel.cloneTargets, suffix, dryRun))
+  def cutoff(graph: ModelGraph, ciGraph: ModelGraph, order: Seq[String],
+      prod: ManifestState, mat: Materializer, resolve: String => DataFrame,
+      fullRefresh: Boolean): Cutoff = {
+    val built = mutable.Set.empty[String]
+    val verdicts = mutable.Map.empty[String, Either[String, String]]
+    val plans = mutable.Map.empty[String, DataFrame]
+    for (n <- order) {
+      val m = graph.byName(n)
+      val builtInput = m.deps.find(built)
+      if (m.materialization == Materialization.View) builtInput.foreach(_ => built += n)
+      else {
+        val verdict = (Fingerprint.refusal(m), prod.stamps.get(n)) match {
+          case (Some(why), _) => Left(why)
+          case _ if fullRefresh => Left("full refresh")
+          case _ if builtInput.isDefined => Left(s"input ${builtInput.get} builds in CI")
+          case (_, None) => Left("no prod fingerprint")
+          case (_, Some(stamp)) => Try(mat.plan(ciGraph.byName(n), resolve)) match {
+            case Failure(e) => Left(s"planning failed: ${e.getMessage}")
+            case Success(df) => plans(n) = df; matches(m, df, stamp, mat.wh)
+          }
+        }
+        if (verdict.isLeft) built += n
+        verdicts(n) = verdict
+      }
+    }
+    Cutoff(verdicts.toMap, plans.toMap)
   }
+
+  private def matches(m: Model, df: DataFrame, stamp: Fingerprint.Stamp,
+      wh: Warehouse): Either[String, String] =
+    Fingerprint.of(m, df).flatMap { fp =>
+      if (fp != stamp.fingerprint)
+        Left(s"fingerprint ${fp.take(12)} differs from prod's ${stamp.fingerprint.take(12)}")
+      else if (Fingerprint.dataVersion(wh.spark, wh.path(m.targetSchema, m.name)) !=
+          stamp.dataVersion) Left("prod table changed since its run")
+      else Right(fp)
+    }
+
+  /** [[cutoff]]'s result: per persisted closure node, Right(fingerprint)
+    * to reuse or Left(reason) to build, and the outputs it planned.
+    * The planned outputs read only prod and reused inputs, so a node
+    * that builds can write its plan as is.
+    */
+  final case class Cutoff(verdicts: Map[String, Either[String, String]],
+      plans: Map[String, DataFrame])
 }

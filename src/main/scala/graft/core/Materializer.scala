@@ -18,7 +18,16 @@ import org.apache.spark.sql.functions._
   *    partitions present in the incoming batch are replaced, a
   *    metadata swap per partition, no full-table rewrite.
   */
-final case class Materializer(wh: Warehouse) {
+final case class Materializer(wh: Warehouse,
+    /** Called with every model's planned output, after its contract
+      * holds and before it writes: `run` fingerprints its models here.
+      */
+    onPlanned: (Model, DataFrame) => Unit = (_, _) => (),
+    /** Outputs already planned by [[plan]] over the same inputs (CI's
+      * early-cutoff walk): `run` writes these instead of planning the
+      * model again.
+      */
+    plans: Map[String, DataFrame] = Map.empty) {
   private def spark: SparkSession = wh.spark
 
   private final class Ctx(model: Model, resolve: String => DataFrame) extends ModelCtx {
@@ -46,10 +55,8 @@ final case class Materializer(wh: Warehouse) {
       case _ => ()
     })
     val ctx = new Ctx(model, resolve)
-    val out = model.transform(ctx)
-    // dbt contract enforcement: schema-level, BEFORE any write — a
-    // drifted public shape fails the build, nothing materializes
-    model.contract.foreach(Contract.enforce(model.name, out.schema, _))
+    val out = plans.getOrElse(model.name, planned(model, ctx))
+    onPlanned(model, out)
     model.materialization match {
       case Materialization.View =>
         out // never persisted; caller composes the plan downstream
@@ -77,6 +84,20 @@ final case class Materializer(wh: Warehouse) {
         }
         wh.read(model.targetSchema, model.name)
     }
+  }
+
+  /** The model's output as `run` would write it, planned but not
+    * run: what CI fingerprints before deciding to build.
+    */
+  def plan(model: Model, resolve: String => DataFrame): DataFrame =
+    planned(model, new Ctx(model, resolve))
+
+  private def planned(model: Model, ctx: Ctx): DataFrame = {
+    val out = model.transform(ctx)
+    // dbt contract enforcement: schema-level, BEFORE any write — a
+    // drifted public shape fails the build, nothing materializes
+    model.contract.foreach(Contract.enforce(model.name, out.schema, _))
+    out
   }
 
   private def runIncremental(model: Model, strategy: IncrementalStrategy,

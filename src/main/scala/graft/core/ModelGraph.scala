@@ -64,7 +64,13 @@ final case class ModelGraph(models: Seq[Model]) {
   */
 final case class ManifestState(entries: Map[String, (String, Seq[String])],
     schemas: Map[String, String] = Map.empty,
-    configs: Map[String, String] = Map.empty) {
+    configs: Map[String, String] = Map.empty,
+    /** What the prod run that wrote this manifest recorded for each
+      * persisted model it built ([[Fingerprint]]). A model without a
+      * stamp always builds in CI, so a manifest without any (written
+      * before stamps existed, or by `retry`) means "build everything".
+      */
+    stamps: Map[String, Fingerprint.Stamp] = Map.empty) {
   /** dbt `state:modified` (the default): body/deps OR config changed.
     * Pre-config manifests (empty `configs`) degrade to body-only —
     * a missing stored config can never read as "modified", so old
@@ -111,7 +117,9 @@ final case class ManifestState(entries: Map[String, (String, Seq[String])],
         schemas.get(n).fold("")(s => s""","schema":"${esc(s)}"""")
       val configField =
         configs.get(n).fold("")(c => s""","config":"${esc(c)}"""")
-      s""""${esc(n)}":{"checksum":"${esc(cs)}","deps":[${deps.map(d => s""""${esc(d)}"""").mkString(",")}]$schemaField$configField}"""
+      val stampField = stamps.get(n).fold("")(st =>
+        s""","fingerprint":"${st.fingerprint}","data_version":"${st.dataVersion}"""")
+      s""""${esc(n)}":{"checksum":"${esc(cs)}","deps":[${deps.map(d => s""""${esc(d)}"""").mkString(",")}]$schemaField$configField$stampField}"""
     }.mkString("{", ",", "}")
   }
 }
@@ -149,9 +157,10 @@ object ManifestState {
     // and dep names so quoted/backslashed names round-trip instead of
     // reading as permanently-modified on every CI diff)
     def unesc(s: String) = s.replace("\\\"", "\"").replace("\\\\", "\\")
-    // the schema field is optional so manifests persisted before it
-    // existed still load (their baseSchema is then None -> caller default)
-    val entry = """"((?:[^"\\]|\\.)*)"\s*:\s*\{\s*"checksum"\s*:\s*"([0-9a-f]+)"\s*,\s*"deps"\s*:\s*\[([^\]]*)\](?:\s*,\s*"schema"\s*:\s*"((?:[^"\\]|\\.)*)")?(?:\s*,\s*"config"\s*:\s*"([0-9a-f]+)")?\s*\}""".r
+    // the schema, config and fingerprint fields are optional so
+    // manifests persisted before them still load (no schema -> caller
+    // default, no stamps -> CI builds everything)
+    val entry = """"((?:[^"\\]|\\.)*)"\s*:\s*\{\s*"checksum"\s*:\s*"([0-9a-f]+)"\s*,\s*"deps"\s*:\s*\[([^\]]*)\](?:\s*,\s*"schema"\s*:\s*"((?:[^"\\]|\\.)*)")?(?:\s*,\s*"config"\s*:\s*"([0-9a-f]+)")?(?:\s*,\s*"fingerprint"\s*:\s*"([0-9a-f]+)"\s*,\s*"data_version"\s*:\s*"([0-9a-f]+)")?\s*\}""".r
     val dep = """"((?:[^"\\]|\\.)*)"""".r
     val matches = entry.findAllMatchIn(json).toSeq
     val parsed = matches.map { m =>
@@ -164,9 +173,13 @@ object ManifestState {
     val configs = matches.collect {
       case m if m.group(5) != null => unesc(m.group(1)) -> m.group(5)
     }.toMap
+    val stamps = matches.collect {
+      case m if m.group(6) != null =>
+        unesc(m.group(1)) -> Fingerprint.Stamp(m.group(6), m.group(7))
+    }.toMap
     val expected = "\"checksum\"".r.findAllMatchIn(json).size
     require(parsed.size == expected,
       s"manifest parse mismatch: matched ${parsed.size} of $expected entries")
-    ManifestState(parsed, schemas, configs)
+    ManifestState(parsed, schemas, configs, stamps)
   }
 }

@@ -84,7 +84,38 @@ final case class Warehouse(spark: SparkSession, root: String) {
     * leaves the new version live.
     */
   def overwriteStaged(df: DataFrame, schema: String, table: String,
-      partitionBy: Seq[String] = Nil): Unit = {
+      partitionBy: Seq[String] = Nil): Unit =
+    swapStaged(schema, table)(_ =>
+      write(df, schema, table + ".__tmp", partitionBy = partitionBy))
+
+  /** File-level clone of `fromSchema.table` into `toSchema.table`:
+    * every data file [[ParquetFooters.dataFiles]] lists is copied
+    * through the Hadoop FileSystem to the same table-relative path,
+    * staged and swapped in as [[overwriteStaged]] does (so `clean`'s
+    * sweep covers a crash). No Spark job runs, and the copy's footers
+    * and partition layout are byte-identical to the source's.
+    */
+  def copyFiles(fromSchema: String, toSchema: String, table: String): Unit = {
+    heal(fromSchema, table)
+    val src = new org.apache.hadoop.fs.Path(path(fromSchema, table))
+    val f = fs(src)
+    val conf = spark.sparkContext.hadoopConfiguration
+    swapStaged(toSchema, table) { staged =>
+      f.mkdirs(staged)
+      ParquetFooters.dataFiles(conf, src.toString).foreach { file =>
+        org.apache.hadoop.fs.FileUtil.copy(f, file.getPath, f,
+          new org.apache.hadoop.fs.Path(staged, relativize(f, src, file.getPath)),
+          false, conf)
+      }
+    }
+  }
+
+  /** Stage a new version of `schema.table` at `<table>.__tmp` through
+    * `stage`, then swap it in (the commit order [[overwriteStaged]]
+    * documents).
+    */
+  private def swapStaged(schema: String, table: String)(
+      stage: org.apache.hadoop.fs.Path => Unit): Unit = {
     // restore a half-swapped table FIRST — when the target is missing,
     // `.__old` is the only copy of the data, never a leftover to delete
     heal(schema, table)
@@ -97,7 +128,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
     // COMPLETED swap, safe to drop)
     if (f.exists(staged)) f.delete(staged, true)
     if (f.exists(old)) f.delete(old, true)
-    write(df, schema, table + ".__tmp", partitionBy = partitionBy)
+    stage(staged)
     val hadTarget = f.exists(target)
     if (hadTarget) require(f.rename(target, old),
       s"could not move $schema.$table aside for staged swap")

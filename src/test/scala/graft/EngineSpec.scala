@@ -428,6 +428,71 @@ class EngineSpec extends SparkSpec {
     assert(wh.read("prod_ci", "t1").count() == 2)
   }
 
+  test("copier: a partitioned clone keeps its partitions under a CI insert_overwrite") {
+    import spark.implicits._
+    val wh = freshWh("partclone")
+    val model = Model("events_by_yr", Seq("src"),
+      Materialization.Incremental(IncrementalStrategy.InsertOverwrite(Seq("yr"))),
+      _.source("src"))
+    val prodRows = Seq((1L, "a", 2020), (2L, "b", 2021)).toDF("k", "v", "yr")
+    Runner(Materializer(wh), Map("src" -> prodRows)).runSelected(
+      ModelGraph(Seq(model)), Seq(model.name))
+    val clone = TableCopier(wh).copyAll("analytics", Seq(model.name), "ci")
+    assert(clone.map(c => (c.status, c.rows)) == Seq(("copied", 2L)))
+    // the clone is file for file the prod table, partition dirs included
+    assert(Fingerprint.dataVersion(spark, wh.path("analytics_ci", model.name)) ==
+      Fingerprint.dataVersion(spark, wh.path("analytics", model.name)))
+    // the CI incremental overwrites one new partition on top of the clone
+    val ciModel = model.copy(schemaSuffix = Some("ci"))
+    Runner(Materializer(wh), Map("src" -> Seq((3L, "c", 2022)).toDF("k", "v", "yr")))
+      .runSelected(ModelGraph(Seq(ciModel)), Seq(model.name))
+    assert(wh.read("analytics_ci", model.name).orderBy("k").as[(Long, String, Int)]
+      .collect().toSeq == Seq((1L, "a", 2020), (2L, "b", 2021), (3L, "c", 2022)))
+  }
+
+  test("manifest fingerprint stamps round-trip; a legacy manifest parses with none") {
+    val st = ManifestState(Map("a" -> ("0123abcd", Nil), "b" -> ("deadbeef", Seq("a"))),
+      Map("a" -> "analytics", "b" -> "analytics"), Map("a" -> "c0ffee", "b" -> "beef"),
+      Map("b" -> Fingerprint.Stamp("ab12" * 16, "cd34" * 16)))
+    assert(st.toJson.contains(s""""fingerprint":"${"ab12" * 16}","data_version":"${"cd34" * 16}""""))
+    assert(ManifestState.fromJson(st.toJson) == st)
+    val legacy = """{"a":{"checksum":"0123abcd","deps":[],"schema":"analytics","config":"c0ffee"},""" +
+      """"b":{"checksum":"deadbeef","deps":["a"],"schema":"analytics","config":"beef"}}"""
+    assert(ManifestState.fromJson(legacy) == st.copy(stamps = Map.empty))
+    assert(ManifestState.fromJson(st.copy(stamps = Map.empty).toJson) == st.copy(stamps = Map.empty))
+    // a stamp the parser cannot read still fails the entry count check
+    assert(intercept[IllegalArgumentException](ManifestState.fromJson(
+      st.toJson.replace("\"data_version\"", "\"data_versoin\""))).getMessage.contains("mismatch"))
+  }
+
+  test("fingerprint: stable as exprIds advance; fails closed on UDFs, local data and hooks") {
+    import spark.implicits._
+    val wh = freshWh("fingerprint")
+    wh.write(df(Seq((1L, "a", 1), (2L, "b", 2))), "prod", "t")
+    def planned = wh.read("prod", "t").groupBy("v").agg(sum("wm").as("wm"))
+    val m = Model("m", Seq("t"), Materialization.Table, _ => planned)
+    val first = Fingerprint.of(m, planned)
+    assert(first.isRight, first)
+    (1 to 3).foreach(i => spark.range(i).selectExpr("id + 1 AS x").groupBy("x").count())
+    assert(Fingerprint.of(m, planned) == first)
+    // a body edit, a config edit and a new input file each change it
+    assert(Fingerprint.of(m, planned.filter(col("wm") > 1)) != first)
+    assert(Fingerprint.of(m.copy(tags = Seq("nightly")), planned) != first)
+    wh.write(df(Seq((3L, "c", 3))), "prod", "t", mode = "append")
+    assert(Fingerprint.of(m, planned).exists(_ != first.toOption.get))
+    // what the plan's string cannot pin gets a reason, never a value
+    val same = udf((s: String) => s)
+    def reason(m: Model, d: org.apache.spark.sql.DataFrame) = Fingerprint.of(m, d).swap.toOption.get
+    assert(reason(m, planned.select(same(col("v")))).startsWith("user-defined function"))
+    assert(reason(m, planned.select(rand().as("r"))).startsWith("nondeterministic"))
+    assert(reason(m, planned.join(Seq("a").toDF("v"), "v")).contains("LocalRelation"))
+    assert(reason(m, planned.as[(String, Long)].map(identity).toDF()).startsWith("typed lambda"))
+    assert(reason(m.copy(preHooks = Seq(Hook("grant", "grant", () => ()))), planned) ==
+      "model has hooks")
+    assert(reason(m.copy(materialization =
+      Materialization.Incremental(IncrementalStrategy.Append("wm"))), planned).startsWith("incremental"))
+  }
+
   test("retry: append model in the write-vs-journal crash window rebuilds instead of double-appending") {
     val wh = freshWh("retrywin")
     val mat = Materializer(wh)

@@ -4,8 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.ci.{IncrementalCI, TableCopier}
 import graft.cli.DemoProject
-import graft.core.{ManifestState, Warehouse}
+import graft.core.{Hook, ManifestState, Materializer, Model, ModelGraph, Runner, Warehouse}
 import graft.sources.Catalog
 
 /** The graft.Main CLI end-to-end: run -> test -> dry-run ci -> ci,
@@ -102,6 +103,9 @@ class MainSpec extends SparkSpec {
     assert(wh.exists("analytics", "int_spend_all"))
     assert(!wh.exists("analytics", "mart_recent_buyers"),
       "unselected mart must not build")
+    // fingerprints only for the tables this run built
+    assert(ManifestState.load(wh).get.stamps.keySet ==
+      rep.ran.filter(_.startsWith("int_spend")).toSet)
 
     // a later selector run of JUST the mart defers its ref to the
     // warehouse state the first selected run left behind
@@ -262,6 +266,132 @@ class MainSpec extends SparkSpec {
     // ---- ci with no edits: empty selection, nothing cloned or run
     val noop = Main.ci(spark, base.copy(command = "ci", cutoff = None))
     assert(noop.selection.directlyModified.isEmpty && noop.ran.isEmpty)
+  }
+
+  /** The bench harness's multiset fingerprint of a table: its row
+    * count and the sum of an xxhash64 of every row.
+    */
+  private def multiset(w: Warehouse, schema: String, t: String): (Long, Any) = {
+    val df = w.read(schema, t)
+    val r = df.select(count(lit(1)),
+      sum(xxhash64(df.columns.sorted.toIndexedSeq.map(col): _*).cast(DecimalType(38, 0))))
+      .head()
+    (r.getLong(0), r.get(1))
+  }
+
+  /** run_results.json's status counts. */
+  private def statuses(w: Warehouse): Map[String, Int] =
+    """"status":"(\w+)"""".r.findAllMatchIn(w.loadArtifact("run_results.json").get)
+      .map(_.group(1)).toSeq.groupBy(identity).map { case (k, v) => k -> v.size }
+
+  test("ci early cutoff: comment-only edits reuse prod's tables, copied file by file") {
+    val whRoot = graft.core.Scratch.dir("cutoff").toString
+    val base = CliConfig(command = "run", sfDir = sfDir, warehouseRoot = whRoot,
+      slices = 3, cutoff = Some(cutoffDate))
+    Main.run(spark, base)
+    val w = wh(whRoot)
+    val tables = Seq("int_spend_0", "int_spend_1", "int_spend_2", "int_spend_all",
+      "mart_segment_spend", "mart_nation_spend")
+    assert(ManifestState.load(w).get.stamps.keySet == tables.toSet)
+    assert(statuses(w) == Map("built" -> 7))
+    assert(w.loadArtifact("run_results.json").get.contains(
+      """"reason":"incremental: reads its own earlier table""""))
+
+    // a comment on a Scala staging view: its four downstream tables are
+    // reused, the incremental mart is cloned and built on its clone
+    val rep = Main.ci(spark, base.copy(command = "ci", changed = Set("stg_orders_1")))
+    assert(rep.reused == Seq("int_spend_1", "int_spend_all", "mart_nation_spend",
+      "mart_segment_spend"))
+    assert(rep.ran == Seq("stg_orders_1", "mart_recent_buyers"))
+    assert(rep.copies.map(r => (r.table, r.status)) == Seq("mart_recent_buyers" -> "copied"))
+    assert(rep.ciCounts.keySet == w.tables("analytics_ci").toSet &&
+      rep.ciCounts.size == 5)
+    for (t <- rep.ciCounts.keys) {
+      assert(multiset(w, "analytics_ci", t) == multiset(w, "analytics", t), t)
+      assert(rep.ciCounts(t) == w.read("analytics_ci", t).count(), t)
+    }
+    assert(statuses(w) == Map("built" -> 1, "reused" -> 4, "cloned" -> 1))
+
+    // a comment on the SQL staging view reuses both marts over it
+    Main.clean(spark, base.copy(command = "clean"))
+    val sql = Main.ci(spark, base.copy(command = "ci", changed = Set("stg_customer")))
+    assert(sql.reused == Seq("mart_nation_spend", "mart_segment_spend"))
+    assert(sql.ran == Seq("stg_customer"))
+    for (t <- sql.reused)
+      assert(multiset(w, "analytics_ci", t) == multiset(w, "analytics", t), t)
+
+    // --full-refresh reuses nothing; so does a manifest without stamps
+    Main.clean(spark, base.copy(command = "clean"))
+    assert(Main.ci(spark, base.copy(command = "ci", changed = Set("stg_customer"),
+      fullRefresh = true)).reused.isEmpty)
+    ManifestState.save(w, ManifestState.load(w).get.copy(stamps = Map.empty))
+    val legacy = Main.ci(spark, base.copy(command = "ci", changed = Set("stg_orders_1")))
+    assert(legacy.reused.isEmpty && legacy.ran.size == 6)
+    assert(statuses(w) == Map("built" -> 5, "cloned" -> 1))
+  }
+
+  test("ci early cutoff fails closed: each case builds what a full rebuild writes") {
+    import spark.implicits._
+    // a source dir whose orders table is a directory a test can add a file to
+    val src = graft.core.Scratch.dir("cutoff_src").toString
+    for (t <- Seq("orders", "customer", "nation"))
+      spark.read.parquet(s"$sfDir/$t.parquet").write.parquet(s"$src/$t.parquet")
+    val same = udf((s: String) => s)
+    val labels = Seq(("BUILDING", "b")).toDF("c_mktsegment", "label")
+    def edit(name: String)(f: Model => Model)(g: ModelGraph) =
+      ModelGraph(g.models.map(m => if (m.name == name) f(m) else m))
+    val udfModel = edit("mart_segment_spend")(m => m.copy(transform =
+      ctx => m.transform(ctx).withColumn("c_mktsegment", same(col("c_mktsegment"))))) _
+    val localInput = edit("mart_segment_spend")(m => m.copy(transform =
+      ctx => m.transform(ctx).join(labels, Seq("c_mktsegment"), "left"))) _
+    val preHook = edit("mart_segment_spend")(m =>
+      m.copy(preHooks = Seq(Hook("grant", "grant select", () => ())))) _
+
+    /** Prod runs `project`, `perturb` changes the world, then CI runs:
+      * `model` must build, exactly `reused` is reused, and every closure
+      * table must equal what the same closure writes when rebuilt in
+      * full.
+      */
+    def check(label: String, model: String, reused: Seq[String], changed: Set[String],
+        project: ModelGraph => ModelGraph = identity,
+        vars: Map[String, String] = Map.empty)(perturb: Warehouse => Unit): Unit = {
+      val whRoot = graft.core.Scratch.dir(s"cutoff_$label").toString
+      val base = CliConfig(command = "run", sfDir = src, warehouseRoot = whRoot,
+        slices = 3, cutoff = Some(cutoffDate))
+      val w = wh(whRoot)
+      Main.run(spark, base, project(DemoProject.graph(3)))
+      perturb(w)
+      val ciCfg = base.copy(command = "ci", changed = changed, vars = vars)
+      def graph(schema: String) =
+        project(DemoProject.graph(3, changed = changed, schema = schema, vars = vars))
+      val rep = Main.ci(spark, ciCfg, graph)
+      assert(rep.ran.contains(model) && rep.reused == reused, s"$label: ${rep.reused}")
+      // the full rebuild: clone targets copied, every closure model built
+      val g = graph("analytics")
+      val sel = IncrementalCI.select(g, ManifestState.load(w).get)
+      TableCopier(w).copyAll("analytics", sel.cloneTargets, "full")
+      val fullGraph = ModelGraph(g.models.map(m =>
+        if (sel.closure(m.name)) m.copy(schemaSuffix = Some("full")) else m))
+      Runner(Materializer(w), Main.deferResolve(g, w, Main.sources(spark, ciCfg)))
+        .runSelected(fullGraph, fullGraph.topoOrder.filter(sel.closure))
+      assert(rep.ciCounts.nonEmpty)
+      for (t <- rep.ciCounts.keys)
+        assert(multiset(w, "analytics_ci", t) == multiset(w, "analytics_full", t), s"$label: $t")
+    }
+
+    check("body", "mart_nation_spend", Nil, Set.empty, vars = Map("min_spend" -> "1"))(_ => ())
+    check("source", "int_spend_1", Nil, Set("stg_orders_1")) { _ =>
+      Catalog(spark, src).orders.limit(20).write.mode("append").parquet(s"$src/orders.parquet")
+    }
+    check("prod", "int_spend_1", Nil, Set("stg_orders_1")) { w =>
+      w.overwriteStaged(w.read("analytics", "int_spend_1").filter(col("n_orders") > 1),
+        "analytics", "int_spend_1")
+    }
+    // the other mart over the edited view is still reused
+    val nation = Seq("mart_nation_spend")
+    check("udf", "mart_segment_spend", nation, Set("stg_customer"), udfModel)(_ => ())
+    check("local", "mart_segment_spend", nation, Set("stg_customer"), localInput)(_ => ())
+    check("hook", "mart_segment_spend", nation, Set("stg_customer"), preHook)(_ => ())
   }
 
   test("Main ci --vars: a rebound var is a body diff state:modified selects") {
@@ -528,5 +658,7 @@ class MainSpec extends SparkSpec {
     assert(rep.skipped.toSet == persisted.map(_.name).toSet)
     assert(rep.ran.toSet == (graph.models.map(_.name).toSet -- persisted.map(_.name)))
     assert(graft.core.Retry.loadJournal(w).isEmpty, "journal clears on success")
+    // retry stamps nothing it did not build: here, nothing at all
+    assert(ManifestState.load(w).get.stamps.isEmpty)
   }
 }
