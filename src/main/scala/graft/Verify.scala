@@ -1,7 +1,11 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graftbridge.ListenerBridge
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json for the DuckDB oracle compare, and jobs.json:
+  * the Spark jobs each entry launched (building its DataFrame and
+  * writing it), so a rise in job count shows next to the outputs. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
@@ -11,15 +15,28 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val started = new java.util.concurrent.atomic.AtomicLong()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        started.incrementAndGet(); ()
+      }
+    })
+    val jobs = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      .flatMap { case (name, fn) =>
+      ListenerBridge.drain(spark)
+      val before = started.get
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        ListenerBridge.drain(spark)
+        Some(s"${Bench.jstr(name)}: ${started.get - before}")
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        None
       }
     }
+    Files.writeString(Paths.get(s"$outDir/jobs.json"), jobs.mkString("{", ",", "}"))
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }

@@ -36,17 +36,59 @@ object Hashing {
   def affine(h31: Column, a: Long, b: Long): Column =
     pmod(lit(a) * h31 + lit(b), lit(P))
 
-  /** LSH band keys over a MATERIALIZED signature column (an attribute,
-    * not an expression tree — nested-lambda re-evaluation of a
-    * computed signature is quadratic; see Dedup.minhashSignatures):
-    * split into `bands` bands of `rows` values, hash each to a bucket.
+  /** A shingle hash family: how a word n-gram folds to a long, how a
+    * MinHash band's slot minima fold to a bucket, and how many bits of
+    * the shingle hash a SimHash fingerprint reads. Every shingle-based
+    * near-dup operator takes one, so the hash format lives here only.
     */
-  def bandKeys(sig: Column, bands: Int, rows: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      struct(b.cast(IntegerType).as("band"),
-        xxhash64(slice(sig, b * rows + lit(1), lit(rows))).as("bucket")))
+  sealed abstract class Family(val bits: Int) {
+    def shingle(s: Column): Column
+    def bucket(slots: Seq[Column]): Column
+  }
 
-  val bitMasks: Seq[Long] = Seq.tabulate(64)(i => 1L << i)
+  /** xxhash64, all 64 bits: the throughput family. */
+  case object Xx64 extends Family(64) {
+    def shingle(s: Column): Column = xxhash64(s)
+    def bucket(slots: Seq[Column]): Column = xxhash64(slots: _*)
+  }
+
+  /** The ENGINE-PORTABLE family: the first 15 hex chars of md5 decoded
+    * to a 60-bit long — Spark `conv(substring(md5(s),1,15),16,10)`,
+    * DuckDB `('0x' || substr(md5(s),1,15))::BIGINT` — and a band's
+    * bucket is md5 of its '|'-joined slot minima. Any ANSI engine
+    * derives the identical values (and the identical, vanishingly
+    * rare collisions), which is what lets the registered near-dup
+    * entries be oracle-gated.
+    */
+  case object Md5 extends Family(60) {
+    def shingle(s: Column): Column =
+      conv(substring(md5(s.cast(BinaryType)), 1, 15), 16, 10).cast(LongType)
+    def bucket(slots: Seq[Column]): Column =
+      md5(concat_ws("|", slots.map(_.cast(StringType)): _*).cast(BinaryType))
+  }
+
+  /** Pigeonhole table keys over a `bits`-wide fingerprint `h`: split it
+    * into `blocks` blocks and key one table on each (blocks −
+    * tolerance)-subset of blocks (Manku/Jain/Das Sarma, WWW 2007). A
+    * pair within hamming `tolerance` differs in at most `tolerance`
+    * blocks, so it agrees on some full subset and shares a key. The
+    * subset's blocks fold into ONE long `kv` (table `ti`), so the
+    * candidate join stays a codegen'd long equi-join however many
+    * tables there are. An array of (ti, kv) structs, to `inline`.
+    */
+  def blockKeys(h: Column, bits: Int, blocks: Int, tolerance: Int): Column = {
+    require(bits % blocks == 0, s"blocks must divide $bits, got $blocks")
+    require(blocks > tolerance,
+      s"a $blocks-block pigeonhole certifies hamming < $blocks, not $tolerance")
+    val w = bits / blocks
+    val mask = if (w == 64) -1L else (1L << w) - 1
+    def block(i: Int) = shiftrightunsigned(h, i * w).bitwiseAND(lit(mask))
+    array((0 until blocks).combinations(blocks - tolerance).toSeq.zipWithIndex
+      .map { case (ss, ti) =>
+        struct(lit(ti).as("ti"), ss.zipWithIndex
+          .map { case (blk, pos) => shiftleft(block(blk), pos * w) }
+          .reduce(_ bitwiseOR _).as("kv")) }: _*)
+  }
 
   /** Hamming distance between two 64-bit fingerprints. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))

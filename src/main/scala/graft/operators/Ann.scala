@@ -1358,13 +1358,10 @@ object Ann {
     // refuse past occupancy ~1k (the auto form re-derives bits)
     Gate.check(n, (1L << bits) * 1024L,
       "Ann.nearDupLsh (fixed bits)", "Ann.nearDupLshAuto")
-    val cands = lshCandidatePairs(n, tables, bits, dim, seed)
     val cos = Vectors.cosine(col("va"), col("vb"), col("na"), col("nb"))
-    cands
-      .join(n.select(col("vec_id").as("id_a"), col("v").as("va"), col("nrm").as("na")), "id_a")
-      .join(n.select(col("vec_id").as("id_b"), col("v").as("vb"), col("nrm").as("nb")), "id_b")
-      .filter(cos >= threshold)
-      .select(col("id_a"), col("id_b"), round(cos, 6).as("cosine"))
+    BandedPairs.verify(lshCandidatePairs(n, tables, bits, dim, seed),
+      cos >= threshold, Seq(round(cos, 6).as("cosine")),
+      BandedPairs.Payload(n, "vec_id", "v" -> "v", "nrm" -> "n"))
   }
 
   /** (vec_id, tbl, bucket) SRP signatures — the hashing stage of
@@ -1390,15 +1387,9 @@ object Ann {
     * distinct so each pair ships once, not once per colliding table.
     */
   private[graft] def lshCandidatePairs(n: DataFrame, tables: Int,
-      bits: Int, dim: Int, seed: Long): DataFrame = {
-    val buckets = lshBuckets(n, tables, bits, dim, seed)
-    buckets.as("a")
-      .join(buckets.as("b"),
-        col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-      .distinct()
-  }
+      bits: Int, dim: Int, seed: Long): DataFrame =
+    BandedPairs.pairs(lshBuckets(n, tables, bits, dim, seed), "vec_id",
+      Seq("tbl", "bucket"))
 
   /** Candidate-pair count for a corpus under the adaptive bit rule —
     * the quantity that must stay ~linear in n as the corpus grows

@@ -99,68 +99,68 @@ object Dedup {
   }
 
   /** (doc_id, shingles: array<long>) — distinct word n-gram shingles
-    * folded to xxhash64 immediately, so every downstream join/compare
-    * moves 8-byte keys instead of strings (collision odds across a
-    * ~10^5-shingle corpus: ~10^-9; irrelevant next to the similarity
-    * thresholds). Empty docs dropped.
+    * folded to `family`'s long hash immediately, so every downstream
+    * join/compare moves 8-byte keys instead of strings (xxhash64
+    * collision odds across a ~10^5-shingle corpus: ~10^-9; irrelevant
+    * next to the similarity thresholds). Empty docs dropped.
     *
     * The `explode(array(tokens))` step is a deliberate Generate
     * barrier: it materializes the split ONCE per document so the
     * shingle lambda slices an attribute. Passing the split expression
     * straight in re-tokenizes the text for every shingle index
     * (lambda-captured expressions are re-evaluated per element) —
-    * measured 10× on the d04 pipeline.
+    * measured 10× on the d04 pipeline. The hash is applied before the
+    * distinct, so the md5 family pays ONE md5 per shingle and
+    * everything downstream is integer arithmetic.
     */
-  private def shingled(docs: DataFrame, n: Int): DataFrame =
+  private def shingles(docs: DataFrame, n: Int,
+      family: Hashing.Family): DataFrame =
     docs.select(col("doc_id"),
         explode(array(Text.tokens(col("text")))).as("toks"))
       .select(col("doc_id"),
         array_distinct(transform(
           Text.shingles(col("toks"), n),
-          s => xxhash64(s))).as("shingles"))
+          s => family.shingle(s))).as("shingles"))
       .filter(size(col("shingles")) > 0)
 
-  /** (doc_id, shingle-hash mod 2^31) — one row per distinct shingle.
-    * The explode materializes each shingle ONCE; everything downstream
-    * is codegen'd aggregation. (The tempting alternative — nested
-    * higher-order lambdas over the shingle array — re-evaluates the
-    * captured shingle/tokenize expression per lambda element, going
-    * quadratic in practice.)
+  /** MinHash signatures as one hash aggregation: k `min` aggregates
+    * of [[Hashing.affine]] slots (map-side combined, whole-stage
+    * codegen) over the exploded shingle hashes folded below 2^31. The
+    * explode materializes each shingle ONCE (the tempting alternative
+    * — nested higher-order lambdas over the shingle array —
+    * re-evaluates the captured shingle/tokenize expression per lambda
+    * element, going quadratic in practice); the group-by is the
+    * materialization barrier that makes `sig` an attribute for the
+    * band expression.
     */
-  private def shingleHashes(sh: DataFrame): DataFrame =
+  private def minhashSignatures(sh: DataFrame, k: Int): DataFrame = {
+    val aggs = Hashing.minhashParams(k).zipWithIndex.map { case ((a, b), j) =>
+      min(Hashing.affine(col("h31"), a, b)).as(s"mh$j") }
     sh.select(col("doc_id"), explode(col("shingles")).as("shingle"))
       .select(col("doc_id"), pmod(col("shingle"), lit(Hashing.M31)).as("h31"))
-
-  /** MinHash signatures as one hash aggregation: k `min` aggregates
-    * (map-side combined, whole-stage codegen) over the exploded
-    * shingle hashes; the group-by is the materialization barrier that
-    * makes `sig` an attribute for the band expression.
-    */
-  private def minhashSignatures(sh: DataFrame, params: Seq[(Long, Long)]): DataFrame = {
-    val aggs = params.zipWithIndex.map { case ((a, b), j) =>
-      min(Hashing.affine(col("h31"), a, b)).as(s"mh$j") }
-    shingleHashes(sh)
       .groupBy("doc_id")
       .agg(aggs.head, aggs.tail: _*)
-      .select(col("doc_id"),
-        array(params.indices.map(j => col(s"mh$j")): _*).as("sig"))
+      .select(col("doc_id"), array((0 until k).map(j => col(s"mh$j")): _*).as("sig"))
   }
 
-  /** 64-bit SimHash per doc: 64 conditional-sum aggregates over the
-    * exploded shingle hashes (one per bit), then fold the signs into
-    * a single long. All codegen'd; one shuffle on doc_id.
+  /** SimHash per doc over `family`'s shingle hashes: bit i of the
+    * fingerprint is the sign of Σ_shingles (±1 by bit i of the shingle
+    * hash), for each of the family's bits. Conditional-sum aggregates,
+    * map-side combined and codegen'd, one shuffle on doc_id; every
+    * step is BIGINT arithmetic any engine reproduces.
     */
-  private def simhashes(sh: DataFrame): DataFrame = {
-    val h = col("shingle") // already the 64-bit shingle hash
-    val aggs = Hashing.bitMasks.zipWithIndex.map { case (m, i) =>
-      sum(when(h.bitwiseAND(lit(m)) =!= 0, 1).otherwise(-1)).as(s"bit$i") }
-    val fingerprint = Hashing.bitMasks.zipWithIndex.map { case (m, i) =>
-      when(col(s"bit$i") > 0, lit(m)).otherwise(lit(0L)) }
+  private def simhashes(sh: DataFrame, family: Hashing.Family): DataFrame = {
+    val h = col("shingle")
+    val aggs = (0 until family.bits).map { i =>
+      sum(when(shiftrightunsigned(h, i).bitwiseAND(lit(1L)) === 1L, 1)
+        .otherwise(-1)).as(s"bit$i") }
+    val fp = (0 until family.bits).map { i =>
+      when(col(s"bit$i") > 0, lit(1L << i)).otherwise(lit(0L)) }
       .reduce((a, b) => a.bitwiseOR(b))
     sh.select(col("doc_id"), explode(col("shingles")).as("shingle"))
       .groupBy("doc_id")
       .agg(aggs.head, aggs.tail: _*)
-      .select(col("doc_id"), fingerprint.as("simhash"))
+      .select(col("doc_id"), fp.as("simhash"))
   }
 
   /** n-gram Jaccard ≥ `threshold` via an inverted shingle index:
@@ -180,17 +180,42 @@ object Dedup {
     * bounded by maxDf² regardless of corpus size).
     */
   def ngramJaccardPairs(docs: DataFrame, n: Int, threshold: Double,
-      maxDf: Long = Long.MaxValue): DataFrame = {
-    val sh = shingled(docs, n)
-    // the inverted index is frozen once (eager localCheckpoint): its
-    // consumers (stop list, sizes, both sides of the candidate
-    // self-join) would otherwise EACH re-tokenize the corpus —
-    // ReuseExchange does not unify them (Explain --execute showed 8
-    // corpus scans pre-freeze). At warehouse scale this is "write the
-    // (doc, shingle) index once, read it four times".
-    val all = sh.select(col("doc_id"), explode(col("shingles")).as("shingle"))
-      .localCheckpoint(true)
-    ngramJaccardFromIndex(all, threshold, maxDf)
+      maxDf: Long = Long.MaxValue): DataFrame =
+    ngramJaccardFromIndex(shingleIndex(docs, n).localCheckpoint(true),
+      threshold, maxDf)
+
+  /** The (doc_id, shingle) inverted index over xxhash64 shingles. Its
+    * users freeze it once (eager localCheckpoint): its consumers (stop
+    * list, sizes, both sides of the candidate self-join) would
+    * otherwise EACH re-tokenize the corpus — ReuseExchange does not
+    * unify them (Explain --execute showed 8 corpus scans pre-freeze).
+    * At warehouse scale this is "write the (doc, shingle) index once,
+    * read it four times".
+    */
+  private def shingleIndex(docs: DataFrame, n: Int): DataFrame =
+    shingles(docs, n, Hashing.Xx64)
+      .select(col("doc_id"), explode(col("shingles")).as("shingle"))
+
+  /** (id_a, id_b, inter): every doc pair sharing an indexed shingle,
+    * with how many it shares — the index self-join on the shingle.
+    */
+  private def sharedShingles(index: DataFrame): DataFrame =
+    index.as("a")
+      .join(index.as("b"),
+        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .agg(count(lit(1)).as("inter"))
+
+  /** The index without its hot shingles (DF > maxDf), and each doc's
+    * shingle-set size over what is kept. The hot-shingle stop list is
+    * tiny by construction (only keys with DF > maxDf), so the
+    * anti-join broadcasts.
+    */
+  private def withoutHot(all: DataFrame, maxDf: Long): (DataFrame, DataFrame) = {
+    val hot = all.groupBy("shingle").agg(count(lit(1)).as("df"))
+      .filter(col("df") > maxDf).select("shingle")
+    val kept = all.join(broadcast(hot), Seq("shingle"), "left_anti")
+    (kept, kept.groupBy("doc_id").agg(count(lit(1)).cast(LongType).as("n_sh")))
   }
 
   /** The post-index core of [[ngramJaccardPairs]], shared with the
@@ -199,18 +224,8 @@ object Dedup {
     */
   private def ngramJaccardFromIndex(all: DataFrame, threshold: Double,
       maxDf: Long): DataFrame = {
-    // hot-shingle stop list: tiny by construction (only keys with
-    // DF > maxDf), so the anti-join broadcasts
-    val hot = all.groupBy("shingle").agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDf).select("shingle")
-    val exploded = all.join(broadcast(hot), Seq("shingle"), "left_anti")
-    val sizes = exploded.groupBy("doc_id")
-      .agg(count(lit(1)).cast(LongType).as("n_sh"))
-    val inter = exploded.as("a")
-      .join(exploded.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("inter"))
+    val (exploded, sizes) = withoutHot(all, maxDf)
+    val inter = sharedShingles(exploded)
     val j = col("inter").cast(DoubleType) / (col("na") + col("nb") - col("inter"))
     inter
       .join(sizes.select(col("doc_id").as("id_a"), col("n_sh").as("na")), "id_a")
@@ -218,6 +233,22 @@ object Dedup {
       .filter(j >= threshold)
       .select(col("id_a"), col("id_b"), round(j, 6).as("jaccard"))
   }
+
+  /** Exact Jaccard of a pair's shingle sets (payload columns sa, sb). */
+  private val jaccard: Column = {
+    val inter = size(array_intersect(col("sa"), col("sb"))).cast(DoubleType)
+    inter / (size(col("sa")) + size(col("sb")) - inter)
+  }
+
+  /** Candidates verified to exact shingle Jaccard ≥ `threshold`: id_a's
+    * shingles come from `shA`, id_b's from `shB`, and `extra` candidate
+    * columns follow the score.
+    */
+  private def jaccardPairs(cands: DataFrame, shA: DataFrame, shB: DataFrame,
+      threshold: Double, extra: Seq[Column] = Nil): DataFrame =
+    BandedPairs.verify(cands, jaccard >= threshold,
+      round(jaccard, 6).as("jaccard") +: extra,
+      BandedPairs.Payload("doc_id", Seq("shingles" -> "s"), shA, shB))
 
   /** FUZZY DECONTAMINATION (x31 — the GPT-3/LLaMA-style near-dup
     * check against evaluation sets): x13's exact n-gram overlap
@@ -234,27 +265,16 @@ object Dedup {
     */
   def fuzzyContamination(corpus: DataFrame, evalSet: DataFrame, n: Int,
       threshold: Double, k: Int = 32, bands: Int = 8): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
-    val params = Hashing.minhashParams(k)
+    val b = bandsFor(k, threshold, bands)
     // frozen: each side's shingle index feeds its signature pass AND
     // its exact-verify leg
-    val shC = shingledPortable(corpus, n).localCheckpoint(true)
-    val shE = shingledPortable(evalSet, n).localCheckpoint(true)
-    val bC = portableBands(minhashSignatures(shC, params), k, bands)
-    val bE = portableBands(minhashSignatures(shE, params), k, bands)
-    val cands = bC.as("a")
-      .join(broadcast(bE).as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
-      .select(col("a.doc_id").as("doc_id"), col("b.doc_id").as("eval_id"))
-      .distinct()
-    val withSets = cands
-      .join(shC.select(col("doc_id"), col("shingles").as("sa")), "doc_id")
-      .join(shE.select(col("doc_id").as("eval_id"), col("shingles").as("sb")),
-        "eval_id")
-    val inter = size(array_intersect(col("sa"), col("sb"))).cast(DoubleType)
-    val j = inter / (size(col("sa")) + size(col("sb")) - inter)
-    withSets.filter(j >= threshold)
-      .select(col("doc_id"), col("eval_id"), round(j, 6).as("jaccard"))
+    val shC = shingles(corpus, n, Hashing.Md5).localCheckpoint(true)
+    val shE = shingles(evalSet, n, Hashing.Md5).localCheckpoint(true)
+    val bC = bandRows(minhashSignatures(shC, k), k, b, Hashing.Md5)
+    val bE = bandRows(minhashSignatures(shE, k), k, b, Hashing.Md5)
+    jaccardPairs(BandedPairs.probe(bC, broadcast(bE), "doc_id", Seq("band", "bucket")),
+        shC, shE, threshold)
+      .toDF("doc_id", "eval_id", "jaccard")
   }
 
   /** PER-DOC-BUDGET DF cap for the inverted-index family — the
@@ -273,9 +293,11 @@ object Dedup {
     * legitimate duplicate families.
     */
   def jaccardDfCapAuto(docs: DataFrame, n: Int, budget: Long = 65536L,
-      floor: Long = 64L): Long = {
-    val r = shingled(docs, n)
-      .select(col("doc_id"), explode(col("shingles")).as("s"))
+      floor: Long = 64L): Long =
+    dfCap(shingleIndex(docs, n), budget, floor)
+
+  private def dfCap(index: DataFrame, budget: Long, floor: Long): Long = {
+    val r = index
       .agg(count(lit(1)).as("rows"), countDistinct(col("doc_id")).as("docs"))
       .head
     val sbar = math.max(1L, r.getLong(0) / math.max(1L, r.getLong(1)))
@@ -295,14 +317,8 @@ object Dedup {
     */
   def ngramJaccardPairsAuto(docs: DataFrame, n: Int, threshold: Double,
       budget: Long = 65536L, floor: Long = 64L): DataFrame = {
-    val all = shingled(docs, n)
-      .select(col("doc_id"), explode(col("shingles")).as("shingle"))
-      .localCheckpoint(true)
-    val r = all
-      .agg(count(lit(1)).as("rows"), countDistinct(col("doc_id")).as("docs"))
-      .head
-    val sbar = math.max(1L, r.getLong(0) / math.max(1L, r.getLong(1)))
-    ngramJaccardFromIndex(all, threshold, math.max(floor, budget / sbar))
+    val all = shingleIndex(docs, n).localCheckpoint(true)
+    ngramJaccardFromIndex(all, threshold, dfCap(all, budget, floor))
   }
 
   /** Shingle CONTAINMENT pairs: ordered (id_a contained-in id_b) with
@@ -319,25 +335,14 @@ object Dedup {
     */
   def containmentPairs(docs: DataFrame, n: Int, threshold: Double,
       maxDf: Long = Long.MaxValue, minShingles: Long = 10L): DataFrame = {
-    val all = shingled(docs, n)
-      .select(col("doc_id"), explode(col("shingles")).as("shingle"))
-      .localCheckpoint(true)
-    val hot = all.groupBy("shingle").agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDf).select("shingle")
-    val exploded = all.join(broadcast(hot), Seq("shingle"), "left_anti")
-    val sizes = exploded.groupBy("doc_id")
-      .agg(count(lit(1)).cast(LongType).as("n_sh"))
+    val (exploded, sizes) =
+      withoutHot(shingleIndex(docs, n).localCheckpoint(true), maxDf)
     // frozen: the two union directions below would otherwise EACH
     // re-run the candidate self-join (the expensive part); one row
     // per colliding pair is the cheapest possible materialization
-    val interU = exploded.as("a")
-      .join(exploded.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("u"), col("b.doc_id").as("v"))
-      .agg(count(lit(1)).as("inter"))
-      .localCheckpoint(true)
-    val directed = interU.select(col("u").as("id_a"), col("v").as("id_b"), col("inter"))
-      .unionAll(interU.select(col("v").as("id_a"), col("u").as("id_b"), col("inter")))
+    val interU = sharedShingles(exploded).localCheckpoint(true)
+    val directed = interU
+      .unionAll(interU.select(col("id_b").as("id_a"), col("id_a").as("id_b"), col("inter")))
     val cont = col("inter").cast(DoubleType) / col("na")
     directed
       .join(sizes.select(col("doc_id").as("id_a"), col("n_sh").as("na")), "id_a")
@@ -345,101 +350,40 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(cont, 6).as("containment"))
   }
 
-  /** MinHash + LSH near-dup pairs: signature of `k` min-hashes split
-    * into `bands` bands; docs colliding in ANY band become candidates
-    * (self-join on the (band, bucket) key); candidates are then
-    * verified with EXACT shingle Jaccard and filtered to ≥ threshold.
-    * Probability a pair at similarity s becomes a candidate:
+  /** MinHash + LSH near-dup pairs: `k` seeded affine slots
+    * ([[Hashing.affine]]) over `family`'s shingle hashes, split into
+    * `bands` bands whose buckets the family hashes. Docs colliding in
+    * ANY band become candidates (the kernel's (band, bucket)
+    * self-join), verified by EXACT shingle Jaccard ≥ threshold. A pair
+    * at similarity s becomes a candidate with probability
     * 1-(1-s^rows)^bands — with 8 bands × 4 rows, s=0.9 → 0.9998.
+    * Nothing is O(n²).
+    *
+    * `bands = 0` (the default) plans the banding from the threshold
+    * ([[bandPlan]]). The md5 family (default) reproduces the EXACT
+    * candidate set in plain SQL, which is what lets d02, d02_auto and
+    * d19 be ORACLE-GATED rather than recall-tested; the xxhash64
+    * family is the throughput form.
+    *
+    * d02 and d02_auto are identical on EVERY input by construction:
+    * both registry names make this same call at threshold 0.5, and
+    * bandPlan(32, 0.5) = (8, 4) is computed from constants alone
+    * (LlmOpsSpec pins it), so no input can move the banding. The
+    * SimHash dial pair d03/d03_auto is in the same class: the
+    * reported pairs are all pairs within the tolerance at every
+    * banding ([[simhashPairsAuto]]; pinned by LlmOpsSpec "blocked
+    * simhash banding reports identical pairs at every dial setting").
     */
   def minhashPairs(docs: DataFrame, n: Int, threshold: Double,
-      k: Int = 32, bands: Int = 8): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
-    val rows = k / bands
-    val params = Hashing.minhashParams(k)
+      k: Int = 32, bands: Int = 0,
+      family: Hashing.Family = Hashing.Md5): DataFrame = {
+    val b = bandsFor(k, threshold, bands)
     // frozen: consumed by the signature pass AND both verify sides —
     // 4 corpus scans pre-freeze (Explain --execute audit)
-    val sh = shingled(docs, n).localCheckpoint(true)
-    val buckets = minhashSignatures(sh, params)
-      .select(col("doc_id"),
-        explode(Hashing.bandKeys(col("sig"), bands, rows)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bucket").as("bucket"))
-    val candidates = buckets.as("a")
-      .join(buckets.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    val withSets = candidates
-      .join(sh.select(col("doc_id").as("id_a"), col("shingles").as("sa")), "id_a")
-      .join(sh.select(col("doc_id").as("id_b"), col("shingles").as("sb")), "id_b")
-    val inter = size(array_intersect(col("sa"), col("sb"))).cast(DoubleType)
-    val j = inter / (size(col("sa")) + size(col("sb")) - inter)
-    withSets.filter(j >= threshold)
-      .select(col("id_a"), col("id_b"), round(j, 6).as("jaccard"))
-  }
-
-  /** (doc_id, shingles: array<long>) with the ENGINE-PORTABLE shingle
-    * hash: the first 15 hex chars of md5(shingle) decoded to a 60-bit
-    * long — Spark `conv(substring(md5(s),1,15),16,10)`, DuckDB
-    * `('0x' || substr(md5(s),1,15))::BIGINT` — so any ANSI engine
-    * derives the identical value (and the identical, vanishingly rare
-    * collisions). Same Generate-barrier + post-hash-distinct
-    * discipline as [[shingled]]; ONE md5 per shingle, everything
-    * downstream is integer arithmetic.
-    */
-  private def shingledPortable(docs: DataFrame, n: Int): DataFrame =
-    docs.select(col("doc_id"),
-        explode(array(Text.tokens(col("text")))).as("toks"))
-      .select(col("doc_id"),
-        array_distinct(transform(
-          Text.shingles(col("toks"), n),
-          s => conv(substring(md5(s.cast(BinaryType)), 1, 15), 16, 10)
-            .cast(LongType))).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-
-  /** MinHash+LSH with an ENGINE-PORTABLE hash family: shingles fold to
-    * md5-derived 60-bit longs ([[shingledPortable]]), slots are the
-    * SAME seeded affine family as [[minhashPairs]]
-    * ((a_j·(h mod 2^31) + b_j) mod (2^61−1) — every term < 2^63, so
-    * plain BIGINT arithmetic reproduces it anywhere), and a band's
-    * bucket is md5 of the band's '|'-joined slot minima. Every step —
-    * the shingle hash, the k min aggregates, the band buckets, hence
-    * the EXACT candidate set — is reproducible in plain SQL, which is
-    * what lets d02 be ORACLE-GATED (row/schema/hash vs DuckDB) rather
-    * than recall-tested. vs [[minhashPairs]] the only cost delta is
-    * one md5 per distinct shingle in place of xxhash64 (the k slot
-    * aggregates are the identical codegen'd integer mins).
-    *
-    * Plan shape is identical to [[minhashPairs]]: one frozen shingle
-    * index, k map-side-combined min aggregates, candidates from the
-    * (band, bucket) equi-join only, exact Jaccard verify on the
-    * shingle-hash sets. Nothing is O(n²).
-    */
-  def minhashPairsPortable(docs: DataFrame, n: Int, threshold: Double,
-      k: Int = 32, bands: Int = 8): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
-    val params = Hashing.minhashParams(k)
-    // frozen: consumed by the signature pass AND both verify sides
-    val sh = shingledPortable(docs, n).localCheckpoint(true)
-    val sig = minhashSignatures(sh, params)
-    // ONE band/bucket-hash definition ([[portableBands]]) shared with
-    // the persisted-index forms — d18/e23's increment==full-recompute
-    // parity (and the DuckDB oracles) depend on it never drifting
-    val buckets = portableBands(sig, k, bands)
-    val candidates = buckets.as("a")
-      .join(buckets.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    val withSets = candidates
-      .join(sh.select(col("doc_id").as("id_a"), col("shingles").as("sa")), "id_a")
-      .join(sh.select(col("doc_id").as("id_b"), col("shingles").as("sb")), "id_b")
-    val inter = size(array_intersect(col("sa"), col("sb"))).cast(DoubleType)
-    val j = inter / (size(col("sa")) + size(col("sb")) - inter)
-    withSets.filter(j >= threshold)
-      .select(col("id_a"), col("id_b"), round(j, 6).as("jaccard"))
+    val sh = shingles(docs, n, family).localCheckpoint(true)
+    val keyed = bandRows(minhashSignatures(sh, k), k, b, family)
+    jaccardPairs(BandedPairs.pairs(keyed, "doc_id", Seq("band", "bucket")),
+      sh, sh, threshold)
   }
 
   /** MinHash FIDELITY report (d16): for every LSH candidate pair,
@@ -448,7 +392,7 @@ object Dedup {
     * a corpus MAE roll-up — the calibration artifact that justifies
     * a band/row dial before anyone trusts the estimator at scale
     * (the s11 eval discipline applied to dedup). Same plan as
-    * [[minhashPairsPortable]] through the candidate join; the only
+    * [[minhashPairs]] through the candidate join; the only
     * additions are one k-term indicator sum per pair (candidate-
     * bounded) and an integer-scaled error roll-up (micro-units sum
     * exactly, so the mean is one double division — no float
@@ -457,33 +401,22 @@ object Dedup {
   def minhashFidelity(docs: DataFrame, n: Int,
       k: Int = 32, bands: Int = 8): DataFrame = {
     require(k % bands == 0, "bands must divide k")
-    val params = Hashing.minhashParams(k)
-    val sh = shingledPortable(docs, n).localCheckpoint(true)
+    val sh = shingles(docs, n, Hashing.Md5).localCheckpoint(true)
     // frozen like sh: 3 consumers (band buckets + both pair joins),
     // and at 32 longs/doc the signature frame is far smaller than
     // the shingle index already being checkpointed
-    val sig = minhashSignatures(sh, params).localCheckpoint(true)
-    val buckets = portableBands(sig, k, bands)
-    val candidates = buckets.as("a")
-      .join(buckets.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
+    val sig = minhashSignatures(sh, k).localCheckpoint(true)
+    val candidates = BandedPairs.pairs(bandRows(sig, k, bands, Hashing.Md5),
+      "doc_id", Seq("band", "bucket"))
     val matches = (0 until k).map(j =>
         when(element_at(col("siga"), j + 1) === element_at(col("sigb"), j + 1), 1)
           .otherwise(0))
       .reduce(_ + _)
-    val inter = size(array_intersect(col("sa"), col("sb"))).cast(DoubleType)
-    val exact = inter / (size(col("sa")) + size(col("sb")) - inter)
-    val per = candidates
-      .join(sh.select(col("doc_id").as("id_a"), col("shingles").as("sa")), "id_a")
-      .join(sh.select(col("doc_id").as("id_b"), col("shingles").as("sb")), "id_b")
-      .join(sig.select(col("doc_id").as("id_a"), col("sig").as("siga")), "id_a")
-      .join(sig.select(col("doc_id").as("id_b"), col("sig").as("sigb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(matches.cast(DoubleType) / k, 6).as("est_jaccard"),
-        round(exact, 6).as("exact_jaccard"))
+    val per = BandedPairs.verify(candidates, lit(true),
+        Seq(round(matches.cast(DoubleType) / k, 6).as("est_jaccard"),
+          round(jaccard, 6).as("exact_jaccard")),
+        BandedPairs.Payload(sh, "doc_id", "shingles" -> "s"),
+        BandedPairs.Payload(sig, "doc_id", "sig" -> "sig"))
       .withColumn("abs_err",
         round(abs(col("est_jaccard") - col("exact_jaccard")), 6))
       .localCheckpoint(true) // pair-bounded; 2 consumers (rows + MAE)
@@ -509,8 +442,10 @@ object Dedup {
     * banding while the threshold moves — the naive alternative —
     * either floods the verify join with sub-threshold candidates
     * (bands too many) or silently loses recall (too few); at corpus
-    * scale both failure modes are invisible without this dial.
-    * Returns (bands, rows).
+    * scale both failure modes are invisible without this dial. Any
+    * pair sharing an r·2ⁱ-row band also shares its 2-row refinements,
+    * so lowering the threshold only ever ADDS candidate coverage
+    * (spec-pinned). Returns (bands, rows).
     */
   def bandPlan(k: Int, threshold: Double): (Int, Int) = {
     require(threshold > 0 && threshold < 1, "threshold in (0,1)")
@@ -519,37 +454,58 @@ object Dedup {
     (k / r, r)
   }
 
-  /** MinHash+LSH with the banding CHOSEN from the threshold
-    * ([[bandPlan]]) — the auto dial of the d02 family (d03auto/
-    * d05auto/d10auto's discipline applied to the band/row split).
-    * Any pair sharing an r·2ⁱ-row band also shares its 2-row
-    * refinements, so lowering the threshold only ever ADDS candidate
-    * coverage — planned pairs at a lower threshold are a structural
-    * superset of a coarser dial's verified pairs (spec-pinned).
-    */
-  def minhashPairsPlanned(docs: DataFrame, n: Int, threshold: Double,
-      k: Int = 32): DataFrame = {
-    val (bands, _) = bandPlan(k, threshold)
-    minhashPairsPortable(docs, n, threshold, k, bands)
+  /** `bands`, or the [[bandPlan]] split when it is 0. */
+  private def bandsFor(k: Int, threshold: Double, bands: Int): Int = {
+    val b = if (bands == 0) bandPlan(k, threshold)._1 else bands
+    require(k % b == 0, "bands must divide k")
+    b
   }
 
-  /** (band, bucket) rows for a signature frame — the ONE band/bucket
-    * hash definition, called by [[minhashPairsPortable]],
-    * [[minhashFidelity]], [[incrementalLshPairs]] and [[lshIngest]]
-    * alike so the in-memory and persisted-index band hashes can never
-    * drift apart (d18/e23's increment==full-recompute parity and the
-    * DuckDB oracles all assume they are byte-identical).
+  /** (doc_id, band, bucket) rows for a signature frame — the ONE
+    * band/bucket definition, shared by every MinHash operator so the
+    * in-memory and persisted-index band hashes can never drift apart
+    * (d18/e23's increment==full-recompute parity and the DuckDB
+    * oracles all assume they are byte-identical).
     */
-  private def portableBands(sig: DataFrame, k: Int, bands: Int): DataFrame = {
+  private def bandRows(sig: DataFrame, k: Int, bands: Int,
+      family: Hashing.Family): DataFrame = {
     val rows = k / bands
     val bandCols = (0 until bands).map { b =>
       struct(lit(b).as("band"),
-        md5(concat_ws("|", (b * rows until (b + 1) * rows)
-          .map(j => element_at(col("sig"), j + 1).cast(StringType)): _*)
-          .cast(BinaryType)).as("bucket")) }
+        family.bucket((b * rows until (b + 1) * rows)
+          .map(j => element_at(col("sig"), j + 1))).as("bucket")) }
     sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"),
         col("bk.bucket").as("bucket"))
+  }
+
+  /** One increment against a persisted (band, bucket) index: band
+    * ONLY the batch, pair it with itself and the index, and verify
+    * against shingles of the batch and of ONLY the `old` docs that
+    * matched a bucket (a left-semi partner filter: point reads at
+    * 100 TB, not a corpus scan). With `provenance`, each side's rows
+    * name the label their pairs take: the batch's own pairs read
+    * "new_vs_new" from the batch, index hits "new_vs_old" from the
+    * index. Returns the batch's band rows and the verified pairs.
+    */
+  private def increment(batch: DataFrame, index: Option[DataFrame],
+      old: Option[DataFrame], n: Int, threshold: Double, k: Int, bands: Int,
+      provenance: Boolean): (DataFrame, DataFrame) = {
+    val shNew = shingles(batch, n, Hashing.Md5).localCheckpoint(true)
+    val newBands = bandRows(minhashSignatures(shNew, k), k, bands, Hashing.Md5)
+      .localCheckpoint(true) // consumed by both probes AND the append
+    def tagged(df: DataFrame, label: String) =
+      if (provenance) df.withColumn("provenance", lit(label)) else df
+    val extra = if (provenance) Seq(col("provenance")) else Nil
+    val cands = BandedPairs.pairs(tagged(newBands, "new_vs_new"), "doc_id",
+        Seq("band", "bucket"), extra.map(_ => col("b.provenance")),
+        index.map(tagged(_, "new_vs_old")))
+      .localCheckpoint(true)
+    val partnerIds = cands
+      .select(explode(array(col("id_a"), col("id_b"))).as("doc_id")).distinct()
+    val sh = old.fold(shNew)(o => shNew.unionByName(
+      shingles(o.join(partnerIds, Seq("doc_id"), "left_semi"), n, Hashing.Md5)))
+    (newBands, jaccardPairs(cands, sh, sh, threshold, extra))
   }
 
   /** INCREMENTAL MinHash-LSH (d18): maintain a persisted (band,
@@ -560,78 +516,38 @@ object Dedup {
     * the index with a (band, bucket) equi-join — new×old — plus the
     * batch's self-join — new×new, (3) exact-verifies with shingle
     * sets computed for the new batch and ONLY the old docs that
-    * actually matched a bucket (a left-semi partner filter: point
-    * reads at 100 TB, not a corpus scan), and (4) appends the batch's
-    * bands to the index. Increment cost is O(batch + matches)
-    * regardless of corpus size — re-running d02 per batch would be
-    * O(corpus) every time, which is exactly what makes corpus-scale
-    * continuous ingest unaffordable without an index.
+    * actually matched a bucket, and (4) appends the batch's bands to
+    * the index. Increment cost is O(batch + matches) regardless of
+    * corpus size — re-running d02 per batch would be O(corpus) every
+    * time, which is exactly what makes corpus-scale continuous ingest
+    * unaffordable without an index.
     *
-    * Same engine-portable hash family as [[minhashPairsPortable]],
-    * so the candidate set — hence the verified pair set — equals
-    * d02's restricted to pairs with ≥1 new member, and the whole
-    * thing is DuckDB-reproducible (oracle-gated).
+    * Same engine-portable hash family as [[minhashPairs]], so the
+    * candidate set — hence the verified pair set — equals d02's
+    * restricted to pairs with ≥1 new member, and the whole thing is
+    * DuckDB-reproducible (oracle-gated).
     *
     * `bands = 0` (the default) derives the banding from the verify
     * threshold via [[bandPlan]] — the d19 planner as the family's
-    * default dial, so the index's candidate budget lands where the
-    * threshold is without a hand-picked split (at the registered 0.5
-    * the plan is 8×4, d02's dial recovered).
+    * default dial (at the registered 0.5 the plan is 8×4, d02's dial
+    * recovered).
     */
   def incrementalLshPairs(docs: DataFrame, isNew: Column, indexDir: String,
       n: Int, threshold: Double, k: Int = 32, bands: Int = 0): DataFrame = {
-    val b = if (bands == 0) bandPlan(k, threshold)._1 else bands
-    incrementalLshPairsBanded(docs, isNew, indexDir, n, threshold, k, b)
-  }
-
-  private def incrementalLshPairsBanded(docs: DataFrame, isNew: Column,
-      indexDir: String, n: Int, threshold: Double, k: Int,
-      bands: Int): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
-    val params = Hashing.minhashParams(k)
+    val b = bandsFor(k, threshold, bands)
     val spark = docs.sparkSession
     val old = docs.filter(!isNew)
 
     // one-time index build over the pre-existing corpus (in steady
     // state this already sits on disk; built here so the entry is
     // self-contained and the index is genuinely READ BACK from files)
-    portableBands(minhashSignatures(shingledPortable(old, n), params), k, bands)
+    bandRows(minhashSignatures(shingles(old, n, Hashing.Md5), k), k, b, Hashing.Md5)
       .write.mode("overwrite").parquet(indexDir)
 
     // ---- the increment: O(new batch + matches) from here on ------
-    val shNew = shingledPortable(docs.filter(isNew), n).localCheckpoint(true)
-    val newBands = portableBands(minhashSignatures(shNew, params), k, bands)
-      .localCheckpoint(true) // consumed by both probes AND the append
-    val index = spark.read.parquet(indexDir)
-
-    val vsOld = newBands.as("a")
-      .join(index.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("id_a"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("id_b"),
-        lit("new_vs_old").as("provenance"))
-    val vsNew = newBands.as("a")
-      .join(newBands.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        lit("new_vs_new").as("provenance"))
-    val candidates = vsOld.unionByName(vsNew).distinct().localCheckpoint(true)
-
-    // exact-verify: old side shingled ONLY for candidate partners
-    val partnerIds = candidates
-      .select(explode(array(col("id_a"), col("id_b"))).as("doc_id")).distinct()
-    val shOldPartners =
-      shingledPortable(old.join(partnerIds, Seq("doc_id"), "left_semi"), n)
-    val shAll = shNew.unionByName(shOldPartners)
-    val withSets = candidates
-      .join(shAll.select(col("doc_id").as("id_a"), col("shingles").as("sa")), "id_a")
-      .join(shAll.select(col("doc_id").as("id_b"), col("shingles").as("sb")), "id_b")
-    val inter = size(array_intersect(col("sa"), col("sb"))).cast(DoubleType)
-    val j = inter / (size(col("sa")) + size(col("sb")) - inter)
-    val verified = withSets.filter(j >= threshold)
-      .select(col("id_a"), col("id_b"), round(j, 6).as("jaccard"),
-        col("provenance"))
+    val (newBands, verified) = increment(docs.filter(isNew),
+      Some(spark.read.parquet(indexDir)), Some(old), n, threshold, k, b,
+      provenance = true)
 
     // index maintenance: the batch's bands append; next increment
     // probes old ∪ this batch without touching either again
@@ -666,138 +582,42 @@ object Dedup {
     // NOTE for persisted indexes: the banding is an INDEX property —
     // every ingest step against the same indexDir must use the same
     // effective split, which holds as long as the threshold is fixed.
-    val b = if (bands == 0) bandPlan(k, threshold)._1 else bands
-    require(k % b == 0, "bands must divide k")
-    val params = Hashing.minhashParams(k)
+    val b = bandsFor(k, threshold, bands)
     val spark = batch.sparkSession
     // Hadoop-FS existence, not java.io.File: the store/index dirs
     // live on whatever warehouse filesystem the deployment uses — a
     // local-only check would treat a remote store as absent and
     // re-ingest everything as fresh
-    def exists(dir: String) = {
+    def stored(dir: String): Option[DataFrame] = {
       val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+      if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+        Some(spark.read.parquet(dir))
+      else None
     }
 
-    val fresh =
-      if (!exists(storeDir)) batch
-      else batch.join(spark.read.parquet(storeDir).select("doc_id"),
-        Seq("doc_id"), "left_anti")
-    val shNew = shingledPortable(fresh, n).localCheckpoint(true)
-    val newBands = portableBands(minhashSignatures(shNew, params), k, b)
-      .localCheckpoint(true)
-
-    val vsOld =
-      if (!exists(indexDir)) {
-        val e = newBands.limit(0)
-        e.as("a").join(e.as("b"), Seq("band", "bucket"))
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      } else newBands.as("a")
-        .join(spark.read.parquet(indexDir).as("b"),
-          col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-            // a crashed attempt may have appended this batch's own
-            // bands before dying (see the commit discipline below);
-            // the retry must not pair a doc with itself
-            col("a.doc_id") =!= col("b.doc_id"))
-        .select(least(col("a.doc_id"), col("b.doc_id")).as("id_a"),
-          greatest(col("a.doc_id"), col("b.doc_id")).as("id_b"))
-    val vsNew = newBands.as("a")
-      .join(newBands.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-    val candidates = vsOld.unionByName(vsNew).distinct().localCheckpoint(true)
-
-    val partnerIds = candidates
-      .select(explode(array(col("id_a"), col("id_b"))).as("doc_id")).distinct()
-    val shOld =
-      if (!exists(storeDir)) shNew.limit(0)
-      else shingledPortable(spark.read.parquet(storeDir)
-        .join(partnerIds, Seq("doc_id"), "left_semi"), n)
-    val shAll = shNew.unionByName(shOld)
-    val withSets = candidates
-      .join(shAll.select(col("doc_id").as("id_a"), col("shingles").as("sa")), "id_a")
-      .join(shAll.select(col("doc_id").as("id_b"), col("shingles").as("sb")), "id_b")
-    val inter = size(array_intersect(col("sa"), col("sb"))).cast(DoubleType)
-    val j = inter / (size(col("sa")) + size(col("sb")) - inter)
-    val out = withSets.filter(j >= threshold)
-      .select(col("id_a"), col("id_b"), round(j, 6).as("jaccard"))
-      .localCheckpoint(true) // pin results BEFORE the state appends
+    val store = stored(storeDir)
+    val fresh = store.fold(batch)(s =>
+      batch.join(s.select("doc_id"), Seq("doc_id"), "left_anti"))
+    val (newBands, pairs) = increment(fresh, stored(indexDir), store, n,
+      threshold, k, b, provenance = false)
+    val out = pairs.localCheckpoint(true) // pin results BEFORE the state appends
 
     // COMMIT DISCIPLINE: index first, store LAST. The store append is
     // the commit marker — a doc is in the store iff its batch ran to
     // completion (pairs returned). A crash between the two appends
     // leaves the batch fresh on retry, so the retry re-emits its pairs
     // (the failed attempt never returned them) with its own leftover
-    // bands already in the index: the =!= guard in vsOld drops the
-    // resulting self-matches, least/greatest + distinct() fold the
-    // in-batch pairs seen through BOTH the index and the self-join to
-    // one row, and the duplicate index rows are candidate-level
-    // deduped forever after. The reverse order (store first) would
-    // turn the same crash into silent recall loss: the retry drops the
-    // docs as already-ingested while their bands never reached the
-    // index, so every future pair against them is lost.
+    // bands already in the index: the kernel's own-id guard on index
+    // probes drops the resulting self-matches, its least/greatest fold
+    // + distinct() fold the in-batch pairs seen through BOTH the index
+    // and the self-join to one row, and the duplicate index rows are
+    // candidate-level deduped forever after. The reverse order (store
+    // first) would turn the same crash into silent recall loss: the
+    // retry drops the docs as already-ingested while their bands never
+    // reached the index, so every future pair against them is lost.
     newBands.write.mode("append").parquet(indexDir)
     fresh.select("doc_id", "text").write.mode("append").parquet(storeDir)
     out
-  }
-
-  /** 60-bit SimHash over the PORTABLE shingle hashes
-    * ([[shingledPortable]]): bit j of the fingerprint is the sign of
-    * Σ_shingles (±1 by bit j of the md5-derived 60-bit value). Same
-    * aggregate shape as [[simhashes]] (conditional sums, map-side
-    * combined, one shuffle on doc_id); every step is BIGINT
-    * arithmetic any engine reproduces.
-    */
-  private def simhashesPortable(sh: DataFrame): DataFrame = {
-    val bits = 60
-    val h = col("shingle")
-    val aggs = (0 until bits).map { i =>
-      sum(when(shiftrightunsigned(h, i).bitwiseAND(lit(1L)) === 1L, 1)
-        .otherwise(-1)).as(s"bit$i") }
-    val fp = (0 until bits).map { i =>
-      when(col(s"bit$i") > 0, lit(1L << i)).otherwise(lit(0L)) }
-      .reduce((a, b) => a.bitwiseOR(b))
-    sh.select(col("doc_id"), explode(col("shingles")).as("shingle"))
-      .groupBy("doc_id")
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("doc_id"), fp.as("simhash"))
-  }
-
-  /** [[simhashPairs]] with the ENGINE-PORTABLE 60-bit family: 4×15-bit
-    * chunk pigeonhole (any pair within distance 3 still agrees on ≥ 1
-    * of 4 chunks — the guarantee counts chunks, not widths),
-    * candidates from the (chunk index, chunk value) equi-join, exact
-    * hamming = bit_count(xor). Fingerprints, chunks, and the verified
-    * distance all reproduce in plain SQL, which is what lets d03 be
-    * ORACLE-GATED; [[simhashPairs]] (xxhash64, 64-bit) keeps its
-    * soundness/recall specs as the throughput form.
-    */
-  def simhashPairsPortable(docs: DataFrame, n: Int, maxDist: Int = 3): DataFrame = {
-    require(maxDist < 4, "4-chunk pigeonhole certifies distance <= 3")
-    // frozen: both sides of the chunk self-join (same discipline and
-    // cost bound as simhashPairs)
-    val fp = simhashesPortable(shingledPortable(docs, n)).localCheckpoint(true)
-    // same fixed single-block dial as simhashPairs — random 15-bit
-    // collisions n²/2¹⁵; the banded auto form is the corpus path
-    Gate.check(fp, 65536L,
-      "Dedup.simhashPairsPortable (single-block pigeonhole)",
-      "Dedup.simhashPairsAuto / simhashPairsBlocked")
-    val chunks = fp.select(col("doc_id"), col("simhash"),
-        explode(array((0 until 4).map(i =>
-          struct(lit(i).as("ci"),
-            shiftrightunsigned(col("simhash"), i * 15)
-              .bitwiseAND(lit(0x7FFFL)).as("cv"))): _*)).as("c"))
-      .select(col("doc_id"), col("simhash"),
-        col("c.ci").as("ci"), col("c.cv").as("cv"))
-    chunks.as("a")
-      .join(chunks.as("b"),
-        col("a.ci") === col("b.ci") && col("a.cv") === col("b.cv") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        Hashing.hamming(col("a.simhash"), col("b.simhash")).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxDist)
   }
 
   /** Block counts the auto dial may pick: divisors of 60 > maxDist,
@@ -831,87 +651,57 @@ object Dedup {
       choose(b, maxDist) * corpusCount.toDouble / math.pow(2.0, keyBits) <= 1.0
     }.getOrElse(simhashBlockChoices.last)
 
-  /** [[simhashPairsPortable]] generalized to `blocks` blocks with
-    * (blocks−maxDist)-block table keys (see [[simhashBlocks]]).
-    * blocks=4, maxDist=3 is exactly the registered d03 plan (4 tables
-    * keyed on single blocks). The subset keys fold into ONE long
-    * (≤ 51 bits at b=12), so the candidate join stays a codegen'd
-    * long equi-join however many tables there are.
+  /** SimHash near-dup pairs: EVERY pair of docs whose `family`
+    * fingerprints lie within hamming `maxDist`, with its distance.
+    * Candidates share a pigeonhole table key ([[Hashing.blockKeys]]:
+    * `blocks` blocks, one table per (blocks − maxDist)-subset), which
+    * certifies `blocks > maxDist` only (required): a pair at hamming 4
+    * with one bit flipped in each of 4 blocks shares no key. The
+    * candidates carry both fingerprints through the kernel's distinct,
+    * so the exact hamming = bit_count(xor) needs no payload re-join.
+    * The md5 family (default) reproduces in plain SQL, so d03 is
+    * ORACLE-GATED; the xxhash64 family keeps its soundness/recall
+    * specs as the throughput form.
+    *
+    * `blocks = None` is the FIXED compare-scale form: 4 blocks, so at
+    * maxDist 3 each table keys on one block and random (birthday)
+    * collisions grow as n²/2^(bits/4) — it refuses corpus-sized input
+    * and points at [[simhashPairsAuto]]. `Some(b)` sets the banding
+    * explicitly, ungated — the auto dial's path.
     */
-  def simhashPairsBlocked(docs: DataFrame, n: Int, maxDist: Int = 3,
-      blocks: Int = 4): DataFrame = {
-    require(60 % blocks == 0, s"blocks must divide 60, got $blocks")
-    require(blocks > maxDist, "need more blocks than the hamming tolerance")
-    val w = 60 / blocks
-    val fp = simhashesPortable(shingledPortable(docs, n)).localCheckpoint(true)
-    def blockVal(i: Int) =
-      shiftrightunsigned(col("simhash"), i * w).bitwiseAND(lit((1L << w) - 1))
-    val subsets = (0 until blocks).combinations(blocks - maxDist).toSeq
-    val tableKeys = subsets.zipWithIndex.map { case (ss, ti) =>
-      struct(lit(ti).as("ti"),
-        ss.zipWithIndex.map { case (blk, pos) => shiftleft(blockVal(blk), pos * w) }
-          .reduce(_ bitwiseOR _).as("kv"))
-    }
-    val keys = fp.select(col("doc_id"), col("simhash"),
-        explode(array(tableKeys: _*)).as("t"))
-      .select(col("doc_id"), col("simhash"),
-        col("t.ti").as("ti"), col("t.kv").as("kv"))
-    keys.as("a")
-      .join(keys.as("b"),
-        col("a.ti") === col("b.ti") && col("a.kv") === col("b.kv") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        Hashing.hamming(col("a.simhash"), col("b.simhash")).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxDist)
-  }
-
-  /** The production SimHash entry point: banding dial derived from one
-    * corpus count() (the same one-count discipline as the d05/d10/s05
-    * auto dials). Output is identical to [[simhashPairsPortable]] —
-    * every pair with hamming ≤ maxDist — which is why the auto dial
-    * can share d03's DuckDB oracle instead of settling for recall
-    * specs.
-    */
-  def simhashPairsAuto(docs: DataFrame, n: Int, maxDist: Int = 3): DataFrame =
-    simhashPairsBlocked(docs, n, maxDist, simhashBlocks(docs.count(), maxDist))
-
-  /** Public fingerprint view: (doc_id, simhash) for docs with ≥ n tokens. */
-  def simhashFingerprints(docs: DataFrame, n: Int): DataFrame =
-    simhashes(shingled(docs, n))
-
-  /** SimHash near-dup pairs with Hamming distance ≤ maxDist (≤ 15).
-    * Pigeonhole banding: split the 64-bit fingerprint into 4 16-bit
-    * chunks — any pair within distance 3 agrees on ≥ 1 chunk, so the
-    * candidate join is an equi-join on (chunk index, chunk value).
-    */
-  def simhashPairs(docs: DataFrame, n: Int, maxDist: Int = 3): DataFrame = {
-    require(maxDist < 16, "4-chunk pigeonhole covers distance <= 15")
-    // frozen: both sides of the chunk self-join re-derive the
+  def simhashPairs(docs: DataFrame, n: Int, maxDist: Int = 3,
+      family: Hashing.Family = Hashing.Md5,
+      blocks: Option[Int] = None): DataFrame = {
+    val keys = Hashing.blockKeys(col("simhash"), family.bits,
+      blocks.getOrElse(4), maxDist)
+    // frozen: both sides of the key self-join re-derive the
     // fingerprints (2 corpus scans pre-freeze); (doc_id, simhash) is
     // two columns per doc — the cheapest possible materialization
-    val fp = simhashes(shingled(docs, n)).localCheckpoint(true)
-    // FIXED single-block 15-bit table keys ⇒ random collisions
-    // n²/2¹⁵ — refuse corpus-sized input (the auto form re-bands to
-    // Manku (b−3)-block keys from one corpus count)
-    Gate.check(fp, 65536L,
+    val fp = simhashes(shingles(docs, n, family), family).localCheckpoint(true)
+    if (blocks.isEmpty) Gate.check(fp, 65536L,
       "Dedup.simhashPairs (single-block pigeonhole)", "Dedup.simhashPairsAuto")
-    val chunks = fp.select(col("doc_id"), col("simhash"),
-        explode(array((0 until 4).map(i =>
-          struct(lit(i).as("ci"),
-            shiftrightunsigned(col("simhash"), i * 16)
-              .bitwiseAND(lit(0xFFFFL)).as("cv"))): _*)).as("c"))
-      .select(col("doc_id"), col("simhash"),
-        col("c.ci").as("ci"), col("c.cv").as("cv"))
-    chunks.as("a")
-      .join(chunks.as("b"),
-        col("a.ci") === col("b.ci") && col("a.cv") === col("b.cv") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        Hashing.hamming(col("a.simhash"), col("b.simhash")).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxDist)
+    val keyed = fp.select(col("doc_id"), col("simhash"), inline(keys))
+    val hamming = Hashing.hamming(col("ha"), col("hb"))
+    BandedPairs.verify(
+      BandedPairs.pairs(keyed, "doc_id", Seq("ti", "kv"),
+        Seq(col("a.simhash").as("ha"), col("b.simhash").as("hb"))),
+      hamming <= maxDist, Seq(hamming.as("hamming")))
   }
+
+  /** The production SimHash entry point: the banding dial derived from
+    * one corpus count() (the same one-count discipline as the
+    * d05/d10/s05 auto dials). Output is identical to the fixed form —
+    * every pair with hamming ≤ maxDist at every banding — which is why
+    * the auto dial shares d03's DuckDB oracle instead of settling for
+    * recall specs.
+    */
+  def simhashPairsAuto(docs: DataFrame, n: Int, maxDist: Int = 3): DataFrame =
+    simhashPairs(docs, n, maxDist, Hashing.Md5,
+      Some(simhashBlocks(docs.count(), maxDist)))
+
+  /** Public fingerprint view: (doc_id, 64-bit xxhash64-family simhash). */
+  def simhashFingerprints(docs: DataFrame, n: Int): DataFrame =
+    simhashes(shingles(docs, n, Hashing.Xx64), Hashing.Xx64)
 
   /** SPAN-level duplicate detection (the substring-dedup idea of
     * Lee et al., "Deduplicating Training Data Makes Language Models
@@ -1014,12 +804,10 @@ object Dedup {
     * sum (the e02 prefix-sum idiom) — then one group per chunk.
     * Every window partitions by doc_id; nothing is corpus-wide.
     *
-    * `portableHash = true` swaps xxhash64 for the engine-portable
-    * md5-60-bit context hash (the d02/d03 idiom: Spark
-    * `conv(substring(md5(ctx),1,15),16,10)`, DuckDB
-    * `('0x'||substr(md5(ctx),1,15))::BIGINT`), so the EXACT chunk
-    * boundaries — and hence the whole keep-first result — reproduce
-    * in plain SQL. That is what lets d13 be oracle-gated; the
+    * `portableHash = true` swaps xxhash64 for the engine-portable md5
+    * family ([[Hashing.Md5]], d02/d03's shingle hash), so the EXACT
+    * chunk boundaries — and hence the whole keep-first result —
+    * reproduce in plain SQL. That is what lets d13 be oracle-gated; the
     * xxhash64 family (one integer hash per token instead of an md5)
     * keeps the insertion-robustness spec.
     */
@@ -1031,10 +819,7 @@ object Dedup {
     val w = Window.partitionBy("doc_id").orderBy("pos")
     val ctx = concat_ws(" ",
       ((window - 1) to 0 by -1).map(i => lag(col("tok"), i).over(w)): _*)
-    val ctxHash =
-      if (portableHash)
-        conv(substring(md5(ctx.cast(BinaryType)), 1, 15), 16, 10).cast(LongType)
-      else xxhash64(ctx)
+    val ctxHash = (if (portableHash) Hashing.Md5 else Hashing.Xx64).shingle(ctx)
     // a token can only cut once a full context exists behind it
     val cut = when(col("pos") >= window - 1 &&
       pmod(ctxHash, lit(divisor.toLong)) === 0, 1).otherwise(0)
@@ -1133,11 +918,17 @@ object Dedup {
       .distinct()
     val tok = toks.select(col("doc_id"), posexplode(col("t")).as(Seq("p0", "tok")))
       .select(col("doc_id"), (col("p0") + 1).as("i"), col("tok"))
-    val cl = tok.join(cov, Seq("doc_id", "i"), "left_anti")
-      .groupBy("doc_id")
+    scrubReport(toks, tok.join(cov, Seq("doc_id", "i"), "left_anti"), "i")
+  }
+
+  /** The scrub output (see [[exactSubstrScrub]]) of split docs `toks`
+    * (doc_id, t) of which the tokens `kept` (doc_id, `pos`, tok) survive.
+    */
+  private def scrubReport(toks: DataFrame, kept: DataFrame, pos: String): DataFrame = {
+    val cl = kept.groupBy("doc_id")
       .agg(count(lit(1)).as("n_kept"),
         md5(array_join(transform(
-            sort_array(collect_list(struct(col("i"), col("tok")))),
+            sort_array(collect_list(struct(col(pos), col("tok")))),
             s => s.getField("tok")), " ").cast(BinaryType)).as("clean_hash"))
     toks.select(col("doc_id"), size(col("t")).cast(LongType).as("n_tokens"))
       .join(cl, Seq("doc_id"), "left")
@@ -1322,18 +1113,7 @@ object Dedup {
       .withColumn("covered",
         max(col("reach")).over(wcov) >= col("pos"))
       .filter(!coalesce(col("covered"), lit(false)))
-    val cl = kept.groupBy("doc_id")
-      .agg(count(lit(1)).as("n_kept"),
-        md5(array_join(transform(
-            sort_array(collect_list(struct(col("pos"), col("tok")))),
-            s => s.getField("tok")), " ").cast(BinaryType)).as("clean_hash"))
-    toks.select(col("doc_id"), size(col("t")).cast(LongType).as("n_tokens"))
-      .join(cl, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_tokens"),
-        (col("n_tokens") - coalesce(col("n_kept"), lit(0L)))
-          .cast(LongType).as("n_removed"),
-        coalesce(col("clean_hash"), md5(lit("").cast(BinaryType)))
-          .as("clean_hash"))
+    scrubReport(toks, kept, "pos")
   }
 
   /** SORTED-NEIGHBORHOOD dedup (Hernández & Stolfo's merge/purge,

@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.Hashing
+
 /** Multimodal-column plumbing: media as opaque `binary` columns with
   * typed metadata, decoded/feature-extracted in partition-sized
   * batches.
@@ -399,14 +401,15 @@ object Multimodal {
 
   /** Clip-level near-duplicate pairs: per keyframe SLOT, candidates
     * come from the same 4×16-bit block pigeonhole equi-join as
-    * [[phashPairs]] (slot-aligned — frame 2 of clip A only ever joins
-    * frame 2 of clip B, so the key space is slots × blocks, bounded);
-    * per-slot exact hamming verifies ≤ `maxHamming`, and a clip pair
-    * survives when ≥ `minSlots` sampled slots match — which is what
-    * makes the matcher robust to a hard cut in one keyframe while
-    * still rejecting unrelated clips (an accidental single-block
-    * collision verifies out or falls below the slot quorum). Nothing
-    * is ever all-pairs, per slot or per clip.
+    * [[phashPairs]], with `slot` as one more key column (slot-aligned —
+    * frame 2 of clip A only ever joins frame 2 of clip B, so the key
+    * space is slots × blocks, bounded); per-slot exact hamming
+    * verifies ≤ `maxHamming`, and a clip pair survives when ≥
+    * `minSlots` sampled slots match — which is what makes the matcher
+    * robust to a hard cut in one keyframe while still rejecting
+    * unrelated clips (an accidental single-block collision verifies
+    * out or falls below the slot quorum). Nothing is ever all-pairs,
+    * per slot or per clip.
     */
   def videoPairs(hashes: DataFrame, minSlots: Int = 3,
       maxHamming: Int = 2): DataFrame = {
@@ -414,21 +417,12 @@ object Multimodal {
     // frozen before the slot-aligned self-join — phashPairs' rationale
     // (one keyframe decode pass, not one per join side)
     val fp = hashes.localCheckpoint(true)
-    val blocks = (0 until 4).map(b => struct(lit(b).as("blk"),
-      shiftright(col("khash"), b * 16).bitwiseAND(lit(0xffffL)).as("bval")))
-    val keyed = fp.select(col("media_id"), col("slot"), col("khash"),
-        explode(array(blocks: _*)).as("k"))
-      .select(col("media_id"), col("slot"), col("khash"),
-        col("k.blk").as("blk"), col("k.bval").as("bval"))
-    val a = keyed.select(col("media_id").as("id_a"), col("slot"),
-      col("khash").as("ha"), col("blk"), col("bval"))
-    val b = keyed.select(col("media_id").as("id_b"), col("slot"),
-      col("khash").as("hb"), col("blk"), col("bval"))
-    a.join(b, Seq("slot", "blk", "bval"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "slot", "ha", "hb").distinct()
-      .filter(expr("bit_count(ha ^ hb)") <= maxHamming)
-      .select("id_a", "id_b", "slot").distinct()
+    BandedPairs.verify(
+        BandedPairs.pairs(pigeonholeKeys(fp, "khash"), "media_id",
+          Seq("slot", "ti", "kv"),
+          Seq(col("a.slot"), col("a.khash").as("ha"), col("b.khash").as("hb"))),
+        Hashing.hamming(col("ha"), col("hb")) <= maxHamming, Seq(col("slot")))
+      .distinct()
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).cast(IntegerType).as("n_frames_matched"))
       .filter(col("n_frames_matched") >= minSlots)
@@ -448,24 +442,19 @@ object Multimodal {
     // the full pipeline cost ~2× its decode stage for a frame of a
     // few thousand 16-byte rows)
     val fp = hashed.localCheckpoint(true)
-    val blocks = (0 until 4).map(b => struct(lit(b).as("blk"),
-      shiftright(col("phash"), b * 16).bitwiseAND(lit(0xffffL)).as("bval")))
-    val keyed = fp.select(col("media_id"), col("phash"),
-        explode(array(blocks: _*)).as("k"))
-      .select(col("media_id"), col("phash"),
-        col("k.blk").as("blk"), col("k.bval").as("bval"))
-    val a = keyed.select(col("media_id").as("id_a"), col("phash").as("ha"),
-      col("blk"), col("bval"))
-    val b = keyed.select(col("media_id").as("id_b"), col("phash").as("hb"),
-      col("blk"), col("bval"))
-    a.join(b, Seq("blk", "bval"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "ha", "hb").distinct()
-      .withColumn("hamming",
-        expr("bit_count(ha ^ hb)").cast(IntegerType))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
+    val hamming = Hashing.hamming(col("ha"), col("hb"))
+    BandedPairs.verify(
+      BandedPairs.pairs(pigeonholeKeys(fp, "phash"), "media_id",
+        Seq("ti", "kv"), Seq(col("a.phash").as("ha"), col("b.phash").as("hb"))),
+      hamming <= maxHamming, Seq(hamming.as("hamming")))
   }
+
+  /** `fp` exploded to one row per 16-bit block of its 64-bit `hash`
+    * column: (…fp columns, ti = block index, kv = block value). Any
+    * two hashes within hamming 3 agree on ≥ 1 of the 4 blocks.
+    */
+  private def pigeonholeKeys(fp: DataFrame, hash: String): DataFrame =
+    fp.select(col("*"), inline(Hashing.blockKeys(col(hash), 64, 4, 3)))
 
   /** A fixed fixture of `n` deterministic pseudo-random payloads
     * (0.2–1.4 KB xorshift byte streams, id-keyed length and media

@@ -60,23 +60,23 @@ object DedupQueries extends QDsl {
       |WHERE CAST(i AS DOUBLE)/(sa.n + sb.n - i) >= 0.5
       |ORDER BY id_a, id_b"""
   val d02: Q = q("d02_dedup_minhash", d02OracleSql) { c =>
-    Dedup.minhashPairsPortable(c.documents, n = 3, threshold = 0.5)
+    Dedup.minhashPairs(c.documents, n = 3, threshold = 0.5)
       .orderBy("id_a", "id_b")
   }
 
   // d02_auto — the d19 band planner as the family's DEFAULT dial
   // (r14 verdict item: bandPlan was a standalone entry; here it
-  // derives d02's banding from d02's own verify threshold).
-  // bandPlan(32, 0.5) = 8×4 — the midpoint table RECOVERS the dial
-  // d02 hand-picked — so the auto form's signatures, buckets,
-  // candidates, and verified pairs are byte-identical to d02's and
-  // the entry hash-gates d02's oracle VERBATIM (one SQL, two paths:
-  // fixed and derived; the spec pins the same identity in-engine).
-  // d18/e23's persisted indexes take the same default (bands=0 →
-  // planned), so a threshold change re-plans the whole family at
-  // once instead of drifting per-operator.
+  // derives d02's banding from d02's own verify threshold). It makes
+  // the SAME call as d02: minhashPairs plans its bands from the
+  // threshold by default, and bandPlan(32, 0.5) = 8×4 is computed
+  // from constants alone, so the two entries are identical on EVERY
+  // input by construction, not only on the test corpus, and the entry
+  // hash-gates d02's oracle VERBATIM (the spec pins the planned split
+  // against an explicit 8×4 in-engine). d18/e23's persisted indexes
+  // take the same default (bands=0 → planned), so a threshold change
+  // re-plans the whole family at once instead of drifting per-operator.
   val d02auto: Q = q("d02_dedup_minhash_auto", d02OracleSql) { c =>
-    Dedup.minhashPairsPlanned(c.documents, n = 3, threshold = 0.5)
+    Dedup.minhashPairs(c.documents, n = 3, threshold = 0.5)
       .orderBy("id_a", "id_b")
   }
 
@@ -169,7 +169,7 @@ object DedupQueries extends QDsl {
       |ORDER BY id_a, id_b"""
 
   val d03: Q = q("d03_dedup_simhash", d03OracleSql) { c =>
-    Dedup.simhashPairsPortable(c.documents, n = 3, maxDist = 3)
+    Dedup.simhashPairs(c.documents, n = 3, maxDist = 3)
       .orderBy("id_a", "id_b")
   }
 
@@ -769,8 +769,8 @@ object DedupQueries extends QDsl {
       .orderBy("id_a", "id_b")
   }
 
-  // d19 — THRESHOLD-DRIVEN BAND PLANNING (Dedup.bandPlan +
-  // minhashPairsPlanned — the auto dial of the MinHash family,
+  // d19 — THRESHOLD-DRIVEN BAND PLANNING (Dedup.bandPlan, the default
+  // dial of Dedup.minhashPairs — the auto dial of the MinHash family,
   // d03auto's discipline applied to the band/row split): the 0.25
   // verify threshold plans 16 bands × 2 rows, whose S-curve midpoint
   // (1/16)^(1/2) is EXACTLY 0.25 — the candidate budget lands where
@@ -812,7 +812,7 @@ object DedupQueries extends QDsl {
       |FROM inter JOIN sizes sa ON id_a = sa.doc_id JOIN sizes sb ON id_b = sb.doc_id
       |WHERE CAST(i AS DOUBLE)/(sa.n + sb.n - i) >= 0.25
       |ORDER BY id_a, id_b""") { c =>
-    Dedup.minhashPairsPlanned(c.documents, n = 3, threshold = 0.25)
+    Dedup.minhashPairs(c.documents, n = 3, threshold = 0.25)
       .orderBy("id_a", "id_b")
   }
 

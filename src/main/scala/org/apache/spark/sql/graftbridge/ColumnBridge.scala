@@ -87,3 +87,14 @@ object StateStoreBridge {
   def unloadAll(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.stop()
 }
+
+/** Block until every event already posted to the session's listener
+  * bus has reached its listeners. Listener delivery is asynchronous,
+  * so a per-entry tally read right after an action can miss that
+  * action's last events; `LiveListenerBus.waitUntilEmpty` is
+  * `private[spark]` — same shim rationale as [[ColumnBridge]].
+  */
+object ListenerBridge {
+  def drain(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+}

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.Text
+import graft.functions.{Hashing, Text}
 import graft.operators.{Ann, Dedup, Multimodal}
 import graft.queries.{DedupQueries, LlmOps, TextQueries}
 import graft.sources.Catalog
@@ -210,7 +210,8 @@ class LlmOpsSpec extends SparkSpec {
   test("minhash LSH recovers the exact jaccard>=0.9 pairs (high-similarity recall ~1)") {
     val exact = pairSet(
       Dedup.ngramJaccardPairs(cat.documents, n = 3, threshold = 0.9))
-    val lsh = pairSet(Dedup.minhashPairs(cat.documents, n = 3, threshold = 0.9))
+    val lsh = pairSet(Dedup.minhashPairs(cat.documents, n = 3, threshold = 0.9,
+      bands = 8, family = Hashing.Xx64))
     assert(exact.nonEmpty, "test corpus should contain planted near-dups")
     val recall = (exact & lsh).size.toDouble / exact.size
     assert(recall >= 0.9, s"minhash recall $recall below 0.9 (found ${lsh.size}, exact ${exact.size})")
@@ -229,7 +230,7 @@ class LlmOpsSpec extends SparkSpec {
     val exact09 = pairSet(
       Dedup.ngramJaccardPairs(cat.documents, n = 3, threshold = 0.9))
     val port = pairSet(
-      Dedup.minhashPairsPortable(cat.documents, n = 3, threshold = 0.5))
+      Dedup.minhashPairs(cat.documents, n = 3, threshold = 0.5))
     assert(port.subsetOf(exact05),
       "portable family reported a pair whose exact jaccard is below threshold")
     assert(exact09.nonEmpty)
@@ -242,7 +243,7 @@ class LlmOpsSpec extends SparkSpec {
     // the registered d03 family (oracle-gated at the driver); pins the
     // operator contract independent of the oracle, mirroring the
     // xxhash64 family's spec below
-    val sim = Dedup.simhashPairsPortable(cat.documents, n = 3, maxDist = 3)
+    val sim = Dedup.simhashPairs(cat.documents, n = 3, maxDist = 3)
     val rows = sim.collect()
     assert(rows.nonEmpty)
     assert(rows.forall(_.getInt(2) <= 3))
@@ -259,11 +260,11 @@ class LlmOpsSpec extends SparkSpec {
     // DuckDB oracle). b=4 must also BE the registered 4×15 pigeonhole.
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val ref = rows(Dedup.simhashPairsPortable(cat.documents, n = 3, maxDist = 3))
+    val ref = rows(Dedup.simhashPairs(cat.documents, n = 3, maxDist = 3))
     assert(ref.nonEmpty)
     for (b <- Seq(4, 6, 10)) {
-      val got = rows(Dedup.simhashPairsBlocked(cat.documents, n = 3,
-        maxDist = 3, blocks = b))
+      val got = rows(Dedup.simhashPairs(cat.documents, n = 3,
+        maxDist = 3, blocks = Some(b)))
       assert(got == ref, s"blocks=$b diverged: ${(got diff ref) ++ (ref diff got)}")
     }
   }
@@ -274,8 +275,8 @@ class LlmOpsSpec extends SparkSpec {
     // key — a dial setting that degenerated to a nested loop or
     // cartesian would be quadratic no matter how wide the keys are
     for (b <- Seq(4, 6)) {
-      val plan = Dedup.simhashPairsBlocked(cat.documents, n = 3,
-        maxDist = 3, blocks = b).queryExecution.executedPlan.toString
+      val plan = Dedup.simhashPairs(cat.documents, n = 3,
+        maxDist = 3, blocks = Some(b)).queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastNestedLoopJoin") &&
         !plan.contains("CartesianProduct"),
         s"blocks=$b candidate join degenerated:\n$plan")
@@ -298,7 +299,8 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("simhash pairs are sound (hamming<=3) and overlap the planted near-dups") {
-    val sim = Dedup.simhashPairs(cat.documents, n = 3, maxDist = 3)
+    val sim = Dedup.simhashPairs(cat.documents, n = 3, maxDist = 3,
+      family = Hashing.Xx64)
     val rows = sim.collect()
     assert(rows.nonEmpty)
     assert(rows.forall(_.getInt(2) <= 3))
@@ -306,6 +308,20 @@ class LlmOpsSpec extends SparkSpec {
       Dedup.ngramJaccardPairs(cat.documents, n = 3, threshold = 0.9))
     val overlap = (pairSet(sim) & exact).size.toDouble / exact.size
     assert(overlap >= 0.5, s"simhash found only $overlap of planted near-dups")
+  }
+
+  test("simhash pigeonhole refuses a tolerance its blocks cannot certify") {
+    // 4 blocks certify hamming <= 3 only: a pair at hamming 4 with one
+    // bit flipped in each block shares no block and would be silently
+    // dropped, so maxDist = 4 on 4 blocks is refused for every family
+    intercept[IllegalArgumentException] {
+      Dedup.simhashPairs(cat.documents, n = 3, maxDist = 4)
+    }
+    for (family <- Seq(Hashing.Md5, Hashing.Xx64))
+      intercept[IllegalArgumentException] {
+        Dedup.simhashPairs(cat.documents, n = 3, maxDist = 4,
+          family = family, blocks = Some(4))
+      }
   }
 
   test("simhash column is a stable 64-bit fingerprint") {
@@ -1887,9 +1903,9 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("d02_auto: the planner at d02's own threshold reproduces d02 byte-for-byte (8×4 recovered, not asserted)") {
-    val fixed = Dedup.minhashPairsPortable(cat.documents, n = 3,
-      threshold = 0.5).collect().map(_.toString).toSet
-    val planned = Dedup.minhashPairsPlanned(cat.documents, n = 3,
+    val fixed = Dedup.minhashPairs(cat.documents, n = 3,
+      threshold = 0.5, bands = 8).collect().map(_.toString).toSet
+    val planned = Dedup.minhashPairs(cat.documents, n = 3,
       threshold = 0.5).collect().map(_.toString).toSet
     assert(fixed.nonEmpty && planned == fixed,
       "the derived dial must reproduce the fixed 8×4 family exactly")
@@ -1905,9 +1921,9 @@ class LlmOpsSpec extends SparkSpec {
     assert(bands == bands.sorted.reverse, s"non-monotone dial: $bands")
     // structural superset: a shared 4-row band implies both 2-row
     // halves match, and 0.25 <= 0.5, so every d02 pair must appear
-    val lo = Dedup.minhashPairsPlanned(cat.documents, n = 3, threshold = 0.25)
+    val lo = Dedup.minhashPairs(cat.documents, n = 3, threshold = 0.25)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val hi = Dedup.minhashPairsPortable(cat.documents, n = 3, threshold = 0.5)
+    val hi = Dedup.minhashPairs(cat.documents, n = 3, threshold = 0.5)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(hi.subsetOf(lo), s"missing from planned run: ${(hi -- lo).take(3)}")
     // whether extra sub-0.5 pairs EXIST is corpus-dependent (none at
@@ -1918,7 +1934,7 @@ class LlmOpsSpec extends SparkSpec {
     val a = (1 to 20).map(i => s"w$i").mkString(" ")
     val b = ((1 to 13).map(i => s"w$i") ++ (1 to 7).map(i => s"z$i")).mkString(" ")
     val planted = Seq((1L, a), (2L, b)).toDF("doc_id", "text")
-    val caught = Dedup.minhashPairsPlanned(planted, n = 3, threshold = 0.25)
+    val caught = Dedup.minhashPairs(planted, n = 3, threshold = 0.25)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(caught.exists(p => p._1 == 1L && p._2 == 2L && p._3 < 0.5 && p._3 >= 0.25),
       s"planted mid-similarity pair not surfaced: ${caught.toSeq}")
@@ -1968,7 +1984,7 @@ class LlmOpsSpec extends SparkSpec {
     val inc = got.filter(col("id_a") >= 0)
       .select("id_a", "id_b", "jaccard").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val full = Dedup.minhashPairsPortable(cat.documents, n = 3, threshold = 0.5)
+    val full = Dedup.minhashPairs(cat.documents, n = 3, threshold = 0.5)
       .filter(col("id_a") % 5 === 0 || col("id_b") % 5 === 0).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(inc == full, s"only-inc=${(inc -- full).take(3)} only-full=${(full -- inc).take(3)}")

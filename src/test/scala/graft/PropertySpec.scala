@@ -557,7 +557,7 @@ class PropertySpec extends SparkSpec {
     val docs = graft.sources.Catalog(spark, sfDir).documents
       .select("doc_id", "text").as[(Long, String)].collect().toSeq
     val full = graft.operators.Dedup
-      .minhashPairsPortable(graft.sources.Catalog(spark, sfDir).documents,
+      .minhashPairs(graft.sources.Catalog(spark, sfDir).documents,
         n = 3, threshold = 0.5)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -585,7 +585,7 @@ class PropertySpec extends SparkSpec {
       .select("doc_id", "text").as[(Long, String)].collect().toSeq
     val (b1, b2) = docs.splitAt(docs.size / 2)
     val full = graft.operators.Dedup
-      .minhashPairsPortable(cat.documents, n = 3, threshold = 0.5)
+      .minhashPairs(cat.documents, n = 3, threshold = 0.5)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val store = graft.core.Scratch.dir("lshretry").toString
@@ -616,6 +616,40 @@ class PropertySpec extends SparkSpec {
       "crash-retry changed the reconstructed pair set")
     assert(first.size + retry.size == full.size,
       "a pair was emitted twice across the crash-retry")
+  }
+
+  test("BandedPairs: self, index-probe and bipartite forms == brute-force pair sets on random keyed frames") {
+    import spark.implicits._
+    type Keyed = List[(Long, Int, Long)]
+    // few ids, bands and keys, so collisions — and duplicate keys
+    // within one id — are common
+    val keyedGen: Gen[Keyed] = Gen.choose(0, 30).flatMap(n => Gen.listOfN(n,
+      Gen.zip(Gen.choose(0L, 9L), Gen.choose(0, 2), Gen.choose(0L, 3L))))
+    val keys = Seq("band", "key")
+    def frame(rows: Keyed) = rows.toDF("id", "band", "key")
+    def sharing(a: Keyed, b: Keyed): Set[(Long, Long)] =
+      (for ((ia, ba, ka) <- a; (ib, bb, kb) <- b if ba == bb && ka == kb)
+        yield (ia, ib)).toSet
+    def got(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
+      val rs = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(rs.size == rs.distinct.size, s"a pair appeared twice: $rs")
+      rs.toSet
+    }
+    val edge: Seq[Keyed] = Seq(Nil, List((4L, 1, 2L)),
+      List((1L, 0, 0L), (1L, 0, 0L), (1L, 1, 0L), (2L, 0, 0L)))
+    val cases = edge ++ (1 to 8).map(i => sample(keyedGen, 900 + i))
+    for ((rows, i) <- cases.zipWithIndex) {
+      val index = if (i % 3 == 0) Nil else sample(keyedGen, 950 + i)
+      val self = sharing(rows, rows).filter { case (a, b) => a < b }
+      assert(got(graft.operators.BandedPairs.pairs(frame(rows), "id", keys)) == self,
+        s"self form, case $i")
+      val probed = self ++ sharing(rows, index).collect {
+        case (a, b) if a != b => (math.min(a, b), math.max(a, b)) }
+      assert(got(graft.operators.BandedPairs.pairs(frame(rows), "id", keys,
+        index = Some(frame(index)))) == probed, s"index form, case $i")
+      assert(got(graft.operators.BandedPairs.probe(frame(rows), frame(index),
+        "id", keys)) == sharing(rows, index), s"bipartite form, case $i")
+    }
   }
 
   test("Quota.foldDecisions: ANY ts-ordered split of a random event set folds to the batch window form, chunk by chunk") {

@@ -691,7 +691,7 @@ class StreamingSpec extends SparkSpec {
     query.stop()
 
     val full = graft.operators.Dedup
-      .minhashPairsPortable(cat.documents, n = 3, threshold = 0.5)
+      .minhashPairs(cat.documents, n = 3, threshold = 0.5)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(emitted.map(p => (p._1, p._2)).toSet == full,

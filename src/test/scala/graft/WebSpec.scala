@@ -644,7 +644,7 @@ class WebSpec extends SparkSpec {
     val bigDocs = spark.range(70000).select(col("id").as("doc_id"),
       concat_ws(" ", lit("alpha"), col("id").cast("string"), lit("beta gamma")).as("text"))
     val e2 = intercept[Gate.SizeGatedException] {
-      Dedup.simhashPairsPortable(bigDocs, n = 3).count()
+      Dedup.simhashPairs(bigDocs, n = 3).count()
     }
     assert(e2.getMessage.contains("simhashPairsAuto"))
 
