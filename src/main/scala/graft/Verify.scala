@@ -5,7 +5,8 @@ import org.apache.spark.sql.graftbridge.ListenerBridge
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json for the DuckDB oracle compare, and jobs.json:
   * the Spark jobs each entry launched (building its DataFrame and
-  * writing it), so a rise in job count shows next to the outputs. */
+  * writing it; null where the listener bus did not drain in time),
+  * so a rise in job count shows next to the outputs. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
@@ -21,16 +22,21 @@ object Verify {
         started.incrementAndGet(); ()
       }
     })
+    // jobs started so far once the listener bus has delivered them;
+    // None when the bus does not empty in time, so the count reads
+    // null and the tally never fails an entry or stops the dump
+    def settled(): Option[Long] =
+      try { ListenerBridge.drain(spark); Some(started.get) }
+      catch { case _: java.util.concurrent.TimeoutException => None }
     val jobs = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .flatMap { case (name, fn) =>
-      ListenerBridge.drain(spark)
-      val before = started.get
+      val before = settled()
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        ListenerBridge.drain(spark)
-        Some(s"${Bench.jstr(name)}: ${started.get - before}")
+        val n = for (b <- before; a <- settled()) yield a - b
+        Some(s"${Bench.jstr(name)}: ${n.fold("null")(_.toString)}")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         None

@@ -36,20 +36,20 @@ object Hashing {
   def affine(h31: Column, a: Long, b: Long): Column =
     pmod(lit(a) * h31 + lit(b), lit(P))
 
-  /** A shingle hash family: how a word n-gram folds to a long, how a
-    * MinHash band's slot minima fold to a bucket, and how many bits of
-    * the shingle hash a SimHash fingerprint reads. Every shingle-based
-    * near-dup operator takes one, so the hash format lives here only.
+  /** A shingle hash family: how a word n-gram folds to a long, and
+    * how many bits of that hash a SimHash fingerprint reads. The
+    * operators that hash shingles pick one, so the hash format lives
+    * here only.
     */
-  sealed abstract class Family(val bits: Int) {
+  private[graft] sealed abstract class Family(val bits: Int) {
     def shingle(s: Column): Column
-    def bucket(slots: Seq[Column]): Column
   }
 
-  /** xxhash64, all 64 bits: the throughput family. */
-  case object Xx64 extends Family(64) {
+  /** xxhash64, all 64 bits: the throughput family (the inverted
+    * shingle index of d04/d12, the public SimHash fingerprints).
+    */
+  private[graft] case object Xx64 extends Family(64) {
     def shingle(s: Column): Column = xxhash64(s)
-    def bucket(slots: Seq[Column]): Column = xxhash64(slots: _*)
   }
 
   /** The ENGINE-PORTABLE family: the first 15 hex chars of md5 decoded
@@ -60,7 +60,7 @@ object Hashing {
     * rare collisions), which is what lets the registered near-dup
     * entries be oracle-gated.
     */
-  case object Md5 extends Family(60) {
+  private[graft] case object Md5 extends Family(60) {
     def shingle(s: Column): Column =
       conv(substring(md5(s.cast(BinaryType)), 1, 15), 16, 10).cast(LongType)
     def bucket(slots: Seq[Column]): Column =

@@ -1359,9 +1359,11 @@ object Ann {
     Gate.check(n, (1L << bits) * 1024L,
       "Ann.nearDupLsh (fixed bits)", "Ann.nearDupLshAuto")
     val cos = Vectors.cosine(col("va"), col("vb"), col("na"), col("nb"))
-    BandedPairs.verify(lshCandidatePairs(n, tables, bits, dim, seed),
-      cos >= threshold, Seq(round(cos, 6).as("cosine")),
-      BandedPairs.Payload(n, "vec_id", "v" -> "v", "nrm" -> "n"))
+    lshCandidatePairs(n, tables, bits, dim, seed)
+      .join(n.select(col("vec_id").as("id_a"), col("v").as("va"), col("nrm").as("na")), "id_a")
+      .join(n.select(col("vec_id").as("id_b"), col("v").as("vb"), col("nrm").as("nb")), "id_b")
+      .filter(cos >= threshold)
+      .select(col("id_a"), col("id_b"), round(cos, 6).as("cosine"))
   }
 
   /** (vec_id, tbl, bucket) SRP signatures — the hashing stage of

@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
   * fingerprints, and explodes each record into band-key rows (id, key
   * columns…). Candidates come from ONE equi-join on the key columns,
   * so the shuffle is on the key and the pair space is only what
-  * collides; [[verify]] then scores each candidate exactly. Nothing
+  * collides; each family then scores its candidates exactly (ids
+  * alone cross the join, so payloads re-attach after the distinct and
+  * each pair ships once, not once per colliding band). Nothing
   * here is O(n²). The partition-then-verify split follows REPOSE
   * (ICDE 2021), which builds distributed similarity search on one
   * reusable kernel of this shape.
@@ -62,32 +64,4 @@ private[graft] object BandedPairs {
     matched(probe, index, keys, lit(true))
       .select(col(s"a.$id").as("id_a"), col(s"b.$id").as("id_b"))
       .distinct()
-
-  /** A payload re-attached to each side of a pair by [[verify]]:
-    * column `c` of the a-side (b-side) record, keyed by `id`, arrives
-    * as `prefix + "a"` (`prefix + "b"`).
-    */
-  final case class Payload(id: String, cols: Seq[(String, String)],
-      a: DataFrame, b: DataFrame)
-  object Payload {
-    /** Both sides read one frame (the self-join families). */
-    def apply(frame: DataFrame, id: String, cols: (String, String)*): Payload =
-      Payload(id, cols, frame, frame)
-  }
-
-  /** Exact verify: re-attach each payload to both sides of the
-    * candidates (ids only cross the candidate join; payloads join
-    * after the distinct, so each pair ships once, not once per
-    * colliding band), keep the pairs where `keep` holds, and report
-    * id_a, id_b and `out`. Families whose candidates already carry
-    * their fingerprints pass no payload.
-    */
-  def verify(pairs: DataFrame, keep: Column, out: Seq[Column],
-      payload: Payload*): DataFrame =
-    payload.foldLeft(pairs) { (acc, p) =>
-      def side(f: DataFrame, s: String) =
-        f.select(col(p.id).as(s"id_$s") +:
-          p.cols.map { case (c, prefix) => col(c).as(prefix + s) }: _*)
-      acc.join(side(p.a, "a"), "id_a").join(side(p.b, "b"), "id_b")
-    }.filter(keep).select(Seq(col("id_a"), col("id_b")) ++ out: _*)
 }

@@ -246,9 +246,11 @@ object Dedup {
     */
   private def jaccardPairs(cands: DataFrame, shA: DataFrame, shB: DataFrame,
       threshold: Double, extra: Seq[Column] = Nil): DataFrame =
-    BandedPairs.verify(cands, jaccard >= threshold,
-      round(jaccard, 6).as("jaccard") +: extra,
-      BandedPairs.Payload("doc_id", Seq("shingles" -> "s"), shA, shB))
+    cands
+      .join(shA.select(col("doc_id").as("id_a"), col("shingles").as("sa")), "id_a")
+      .join(shB.select(col("doc_id").as("id_b"), col("shingles").as("sb")), "id_b")
+      .filter(jaccard >= threshold)
+      .select(Seq(col("id_a"), col("id_b"), round(jaccard, 6).as("jaccard")) ++ extra: _*)
 
   /** FUZZY DECONTAMINATION (x31 — the GPT-3/LLaMA-style near-dup
     * check against evaluation sets): x13's exact n-gram overlap
@@ -270,8 +272,8 @@ object Dedup {
     // its exact-verify leg
     val shC = shingles(corpus, n, Hashing.Md5).localCheckpoint(true)
     val shE = shingles(evalSet, n, Hashing.Md5).localCheckpoint(true)
-    val bC = bandRows(minhashSignatures(shC, k), k, b, Hashing.Md5)
-    val bE = bandRows(minhashSignatures(shE, k), k, b, Hashing.Md5)
+    val bC = bandRows(minhashSignatures(shC, k), k, b)
+    val bE = bandRows(minhashSignatures(shE, k), k, b)
     jaccardPairs(BandedPairs.probe(bC, broadcast(bE), "doc_id", Seq("band", "bucket")),
         shC, shE, threshold)
       .toDF("doc_id", "eval_id", "jaccard")
@@ -351,8 +353,8 @@ object Dedup {
   }
 
   /** MinHash + LSH near-dup pairs: `k` seeded affine slots
-    * ([[Hashing.affine]]) over `family`'s shingle hashes, split into
-    * `bands` bands whose buckets the family hashes. Docs colliding in
+    * ([[Hashing.affine]]) over the shingle hashes, split into `bands`
+    * bands whose slot minima hash to a bucket. Docs colliding in
     * ANY band become candidates (the kernel's (band, bucket)
     * self-join), verified by EXACT shingle Jaccard ≥ threshold. A pair
     * at similarity s becomes a candidate with probability
@@ -360,10 +362,10 @@ object Dedup {
     * Nothing is O(n²).
     *
     * `bands = 0` (the default) plans the banding from the threshold
-    * ([[bandPlan]]). The md5 family (default) reproduces the EXACT
-    * candidate set in plain SQL, which is what lets d02, d02_auto and
-    * d19 be ORACLE-GATED rather than recall-tested; the xxhash64
-    * family is the throughput form.
+    * ([[bandPlan]]). Shingles and buckets are md5-hashed
+    * ([[Hashing.Md5]]), which reproduces the EXACT candidate set in
+    * plain SQL: that is what lets d02, d02_auto and d19 be
+    * ORACLE-GATED rather than recall-tested.
     *
     * d02 and d02_auto are identical on EVERY input by construction:
     * both registry names make this same call at threshold 0.5, and
@@ -375,13 +377,12 @@ object Dedup {
     * simhash banding reports identical pairs at every dial setting").
     */
   def minhashPairs(docs: DataFrame, n: Int, threshold: Double,
-      k: Int = 32, bands: Int = 0,
-      family: Hashing.Family = Hashing.Md5): DataFrame = {
+      k: Int = 32, bands: Int = 0): DataFrame = {
     val b = bandsFor(k, threshold, bands)
     // frozen: consumed by the signature pass AND both verify sides —
     // 4 corpus scans pre-freeze (Explain --execute audit)
-    val sh = shingles(docs, n, family).localCheckpoint(true)
-    val keyed = bandRows(minhashSignatures(sh, k), k, b, family)
+    val sh = shingles(docs, n, Hashing.Md5).localCheckpoint(true)
+    val keyed = bandRows(minhashSignatures(sh, k), k, b)
     jaccardPairs(BandedPairs.pairs(keyed, "doc_id", Seq("band", "bucket")),
       sh, sh, threshold)
   }
@@ -406,17 +407,20 @@ object Dedup {
     // and at 32 longs/doc the signature frame is far smaller than
     // the shingle index already being checkpointed
     val sig = minhashSignatures(sh, k).localCheckpoint(true)
-    val candidates = BandedPairs.pairs(bandRows(sig, k, bands, Hashing.Md5),
+    val candidates = BandedPairs.pairs(bandRows(sig, k, bands),
       "doc_id", Seq("band", "bucket"))
     val matches = (0 until k).map(j =>
         when(element_at(col("siga"), j + 1) === element_at(col("sigb"), j + 1), 1)
           .otherwise(0))
       .reduce(_ + _)
-    val per = BandedPairs.verify(candidates, lit(true),
-        Seq(round(matches.cast(DoubleType) / k, 6).as("est_jaccard"),
-          round(jaccard, 6).as("exact_jaccard")),
-        BandedPairs.Payload(sh, "doc_id", "shingles" -> "s"),
-        BandedPairs.Payload(sig, "doc_id", "sig" -> "sig"))
+    val per = candidates
+      .join(sh.select(col("doc_id").as("id_a"), col("shingles").as("sa")), "id_a")
+      .join(sh.select(col("doc_id").as("id_b"), col("shingles").as("sb")), "id_b")
+      .join(sig.select(col("doc_id").as("id_a"), col("sig").as("siga")), "id_a")
+      .join(sig.select(col("doc_id").as("id_b"), col("sig").as("sigb")), "id_b")
+      .select(col("id_a"), col("id_b"),
+        round(matches.cast(DoubleType) / k, 6).as("est_jaccard"),
+        round(jaccard, 6).as("exact_jaccard"))
       .withColumn("abs_err",
         round(abs(col("est_jaccard") - col("exact_jaccard")), 6))
       .localCheckpoint(true) // pair-bounded; 2 consumers (rows + MAE)
@@ -467,12 +471,11 @@ object Dedup {
     * (d18/e23's increment==full-recompute parity and the DuckDB
     * oracles all assume they are byte-identical).
     */
-  private def bandRows(sig: DataFrame, k: Int, bands: Int,
-      family: Hashing.Family): DataFrame = {
+  private def bandRows(sig: DataFrame, k: Int, bands: Int): DataFrame = {
     val rows = k / bands
     val bandCols = (0 until bands).map { b =>
       struct(lit(b).as("band"),
-        family.bucket((b * rows until (b + 1) * rows)
+        Hashing.Md5.bucket((b * rows until (b + 1) * rows)
           .map(j => element_at(col("sig"), j + 1))).as("bucket")) }
     sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"),
@@ -492,7 +495,7 @@ object Dedup {
       old: Option[DataFrame], n: Int, threshold: Double, k: Int, bands: Int,
       provenance: Boolean): (DataFrame, DataFrame) = {
     val shNew = shingles(batch, n, Hashing.Md5).localCheckpoint(true)
-    val newBands = bandRows(minhashSignatures(shNew, k), k, bands, Hashing.Md5)
+    val newBands = bandRows(minhashSignatures(shNew, k), k, bands)
       .localCheckpoint(true) // consumed by both probes AND the append
     def tagged(df: DataFrame, label: String) =
       if (provenance) df.withColumn("provenance", lit(label)) else df
@@ -541,7 +544,7 @@ object Dedup {
     // one-time index build over the pre-existing corpus (in steady
     // state this already sits on disk; built here so the entry is
     // self-contained and the index is genuinely READ BACK from files)
-    bandRows(minhashSignatures(shingles(old, n, Hashing.Md5), k), k, b, Hashing.Md5)
+    bandRows(minhashSignatures(shingles(old, n, Hashing.Md5), k), k, b)
       .write.mode("overwrite").parquet(indexDir)
 
     // ---- the increment: O(new batch + matches) from here on ------
@@ -651,7 +654,7 @@ object Dedup {
       choose(b, maxDist) * corpusCount.toDouble / math.pow(2.0, keyBits) <= 1.0
     }.getOrElse(simhashBlockChoices.last)
 
-  /** SimHash near-dup pairs: EVERY pair of docs whose `family`
+  /** SimHash near-dup pairs: EVERY pair of docs whose 60-bit md5
     * fingerprints lie within hamming `maxDist`, with its distance.
     * Candidates share a pigeonhole table key ([[Hashing.blockKeys]]:
     * `blocks` blocks, one table per (blocks − maxDist)-subset), which
@@ -659,9 +662,8 @@ object Dedup {
     * with one bit flipped in each of 4 blocks shares no key. The
     * candidates carry both fingerprints through the kernel's distinct,
     * so the exact hamming = bit_count(xor) needs no payload re-join.
-    * The md5 family (default) reproduces in plain SQL, so d03 is
-    * ORACLE-GATED; the xxhash64 family keeps its soundness/recall
-    * specs as the throughput form.
+    * The md5 shingle hash ([[Hashing.Md5]]) reproduces in plain SQL,
+    * so d03 is ORACLE-GATED.
     *
     * `blocks = None` is the FIXED compare-scale form: 4 blocks, so at
     * maxDist 3 each table keys on one block and random (birthday)
@@ -670,22 +672,22 @@ object Dedup {
     * explicitly, ungated — the auto dial's path.
     */
   def simhashPairs(docs: DataFrame, n: Int, maxDist: Int = 3,
-      family: Hashing.Family = Hashing.Md5,
       blocks: Option[Int] = None): DataFrame = {
-    val keys = Hashing.blockKeys(col("simhash"), family.bits,
+    val keys = Hashing.blockKeys(col("simhash"), Hashing.Md5.bits,
       blocks.getOrElse(4), maxDist)
     // frozen: both sides of the key self-join re-derive the
     // fingerprints (2 corpus scans pre-freeze); (doc_id, simhash) is
     // two columns per doc — the cheapest possible materialization
-    val fp = simhashes(shingles(docs, n, family), family).localCheckpoint(true)
+    val fp = simhashes(shingles(docs, n, Hashing.Md5), Hashing.Md5)
+      .localCheckpoint(true)
     if (blocks.isEmpty) Gate.check(fp, 65536L,
       "Dedup.simhashPairs (single-block pigeonhole)", "Dedup.simhashPairsAuto")
     val keyed = fp.select(col("doc_id"), col("simhash"), inline(keys))
     val hamming = Hashing.hamming(col("ha"), col("hb"))
-    BandedPairs.verify(
-      BandedPairs.pairs(keyed, "doc_id", Seq("ti", "kv"),
-        Seq(col("a.simhash").as("ha"), col("b.simhash").as("hb"))),
-      hamming <= maxDist, Seq(hamming.as("hamming")))
+    BandedPairs.pairs(keyed, "doc_id", Seq("ti", "kv"),
+        Seq(col("a.simhash").as("ha"), col("b.simhash").as("hb")))
+      .filter(hamming <= maxDist)
+      .select(col("id_a"), col("id_b"), hamming.as("hamming"))
   }
 
   /** The production SimHash entry point: the banding dial derived from
@@ -696,8 +698,7 @@ object Dedup {
     * recall specs.
     */
   def simhashPairsAuto(docs: DataFrame, n: Int, maxDist: Int = 3): DataFrame =
-    simhashPairs(docs, n, maxDist, Hashing.Md5,
-      Some(simhashBlocks(docs.count(), maxDist)))
+    simhashPairs(docs, n, maxDist, Some(simhashBlocks(docs.count(), maxDist)))
 
   /** Public fingerprint view: (doc_id, 64-bit xxhash64-family simhash). */
   def simhashFingerprints(docs: DataFrame, n: Int): DataFrame =

@@ -417,11 +417,11 @@ object Multimodal {
     // frozen before the slot-aligned self-join — phashPairs' rationale
     // (one keyframe decode pass, not one per join side)
     val fp = hashes.localCheckpoint(true)
-    BandedPairs.verify(
-        BandedPairs.pairs(pigeonholeKeys(fp, "khash"), "media_id",
-          Seq("slot", "ti", "kv"),
-          Seq(col("a.slot"), col("a.khash").as("ha"), col("b.khash").as("hb"))),
-        Hashing.hamming(col("ha"), col("hb")) <= maxHamming, Seq(col("slot")))
+    BandedPairs.pairs(pigeonholeKeys(fp, "khash"), "media_id",
+        Seq("slot", "ti", "kv"),
+        Seq(col("a.slot"), col("a.khash").as("ha"), col("b.khash").as("hb")))
+      .filter(Hashing.hamming(col("ha"), col("hb")) <= maxHamming)
+      .select("id_a", "id_b", "slot")
       .distinct()
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).cast(IntegerType).as("n_frames_matched"))
@@ -443,10 +443,10 @@ object Multimodal {
     // few thousand 16-byte rows)
     val fp = hashed.localCheckpoint(true)
     val hamming = Hashing.hamming(col("ha"), col("hb"))
-    BandedPairs.verify(
-      BandedPairs.pairs(pigeonholeKeys(fp, "phash"), "media_id",
-        Seq("ti", "kv"), Seq(col("a.phash").as("ha"), col("b.phash").as("hb"))),
-      hamming <= maxHamming, Seq(hamming.as("hamming")))
+    BandedPairs.pairs(pigeonholeKeys(fp, "phash"), "media_id",
+        Seq("ti", "kv"), Seq(col("a.phash").as("ha"), col("b.phash").as("hb")))
+      .filter(hamming <= maxHamming)
+      .select(col("id_a"), col("id_b"), hamming.as("hamming"))
   }
 
   /** `fp` exploded to one row per 16-bit block of its 64-bit `hash`

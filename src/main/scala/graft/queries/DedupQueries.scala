@@ -24,11 +24,9 @@ object DedupQueries extends QDsl {
   // family on h mod 2^31 — every term < 2^63 so plain BIGINT
   // arithmetic reproduces it, band bucket = md5 of the '|'-joined
   // mins), so the oracle below reproduces signatures, buckets, and
-  // therefore the EXACT candidate set; the xxhash64 throughput family
-  // (same plan, same slot aggregates) keeps its recall spec in
-  // LlmOpsSpec. The 32 min-aggregates / 8 band branches are generated
-  // from the SAME Hashing.minhashParams(32) constants the operator
-  // uses — one source of truth for the family.
+  // therefore the EXACT candidate set. The 32 min-aggregates / 8 band
+  // branches are generated from the SAME Hashing.minhashParams(32)
+  // constants the operator uses — one source of truth for the family.
   private[queries] val d02SigAggs = graft.functions.Hashing.minhashParams(32)
     .zipWithIndex.map { case ((a, b), j) =>
       s"min(($a*h31 + $b) % 2305843009213693951) AS mh$j" }.mkString(", ")
@@ -139,8 +137,7 @@ object DedupQueries extends QDsl {
   // whose bit j is the sign of Σ ±1 over bit j of the md5-derived
   // shingle hashes, 4×15-bit chunk pigeonhole for candidates, exact
   // hamming = bit_count(xor) — every step BIGINT arithmetic DuckDB
-  // reproduces, so d03 is oracle-gated; the xxhash64 64-bit family
-  // keeps its soundness/recall specs. The 60 bit-sum aggregates /
+  // reproduces, so d03 is oracle-gated. The 60 bit-sum aggregates /
   // fingerprint assembly / 4 chunk branches are generated below.
   private val d03BitSums = (0 until 60).map(j =>
     s"SUM(CASE WHEN (shingle >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS b$j")

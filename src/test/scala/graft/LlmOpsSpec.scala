@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Hashing, Text}
+import graft.functions.Text
 import graft.operators.{Ann, Dedup, Multimodal}
 import graft.queries.{DedupQueries, LlmOps, TextQueries}
 import graft.sources.Catalog
@@ -211,7 +211,7 @@ class LlmOpsSpec extends SparkSpec {
     val exact = pairSet(
       Dedup.ngramJaccardPairs(cat.documents, n = 3, threshold = 0.9))
     val lsh = pairSet(Dedup.minhashPairs(cat.documents, n = 3, threshold = 0.9,
-      bands = 8, family = Hashing.Xx64))
+      bands = 8))
     assert(exact.nonEmpty, "test corpus should contain planted near-dups")
     val recall = (exact & lsh).size.toDouble / exact.size
     assert(recall >= 0.9, s"minhash recall $recall below 0.9 (found ${lsh.size}, exact ${exact.size})")
@@ -223,8 +223,7 @@ class LlmOpsSpec extends SparkSpec {
     // the registered d02 family (oracle-gated at the driver); this
     // spec pins the operator-level contract independent of the oracle:
     // candidates verify to EXACT jaccard (subset of the uncapped exact
-    // pairs) and planted jaccard>=0.9 dups are recovered like the
-    // xxhash64 throughput family
+    // pairs) and planted jaccard>=0.9 dups are recovered
     val exact05 = pairSet(
       Dedup.ngramJaccardPairs(cat.documents, n = 3, threshold = 0.5))
     val exact09 = pairSet(
@@ -241,8 +240,7 @@ class LlmOpsSpec extends SparkSpec {
 
   test("portable simhash family: sound (hamming<=3) and overlaps planted near-dups") {
     // the registered d03 family (oracle-gated at the driver); pins the
-    // operator contract independent of the oracle, mirroring the
-    // xxhash64 family's spec below
+    // operator contract independent of the oracle
     val sim = Dedup.simhashPairs(cat.documents, n = 3, maxDist = 3)
     val rows = sim.collect()
     assert(rows.nonEmpty)
@@ -299,8 +297,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("simhash pairs are sound (hamming<=3) and overlap the planted near-dups") {
-    val sim = Dedup.simhashPairs(cat.documents, n = 3, maxDist = 3,
-      family = Hashing.Xx64)
+    val sim = Dedup.simhashPairs(cat.documents, n = 3, maxDist = 3)
     val rows = sim.collect()
     assert(rows.nonEmpty)
     assert(rows.forall(_.getInt(2) <= 3))
@@ -313,15 +310,13 @@ class LlmOpsSpec extends SparkSpec {
   test("simhash pigeonhole refuses a tolerance its blocks cannot certify") {
     // 4 blocks certify hamming <= 3 only: a pair at hamming 4 with one
     // bit flipped in each block shares no block and would be silently
-    // dropped, so maxDist = 4 on 4 blocks is refused for every family
+    // dropped, so maxDist = 4 on 4 blocks is refused
     intercept[IllegalArgumentException] {
       Dedup.simhashPairs(cat.documents, n = 3, maxDist = 4)
     }
-    for (family <- Seq(Hashing.Md5, Hashing.Xx64))
-      intercept[IllegalArgumentException] {
-        Dedup.simhashPairs(cat.documents, n = 3, maxDist = 4,
-          family = family, blocks = Some(4))
-      }
+    intercept[IllegalArgumentException] {
+      Dedup.simhashPairs(cat.documents, n = 3, maxDist = 4, blocks = Some(4))
+    }
   }
 
   test("simhash column is a stable 64-bit fingerprint") {
