@@ -73,7 +73,8 @@ object Main {
       |  --schema <name>        base warehouse schema for `run` (default "analytics");
       |                         test/clone/ci auto-detect it from the persisted manifest
       |  --schema-suffix <s>    CI schema suffix (default "ci")
-      |  --threads <n>          parallel table copies AND model builds (default 1)
+      |  --threads <n>          parallel table copies, model builds and ci's
+      |                         early-cutoff planning (default 1)
       |  --slices <n>           demo DAG size: 2n+5 models (default 19 -> 43)
       |  --changed <a,b,...>    model names whose bodies a PR edited (ci)
       |  --cutoff <yyyy-mm-dd>  restrict source orders to before this date (run)
@@ -253,9 +254,12 @@ object Main {
       srcs: String => DataFrame): String => DataFrame = {
     // memoized: CI's early-cutoff walk and its build resolve the same
     // prod tables and sources, and each read is a footer read plus a
-    // listing
-    val memo = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-    def resolve(name: String): DataFrame = memo.getOrElseUpdate(name, resolved(name))
+    // listing. The walk and the Runner resolve from several threads, so
+    // each name gets one holder whose lazy value resolves it once; a
+    // view's refs resolve through other holders, never inside the map.
+    val memo = scala.collection.concurrent.TrieMap.empty[String, Once]
+    final class Once(name: String) { lazy val df: DataFrame = resolved(name) }
+    def resolve(name: String): DataFrame = memo.getOrElseUpdate(name, new Once(name)).df
     def resolved(name: String): DataFrame = graph.byName.get(name) match {
       case Some(m) =>
         m.materialization match {
@@ -596,7 +600,7 @@ object Main {
     val order = ciGraph.topoOrder.filter(sel.closure.contains)
     val resolve = deferResolve(graph, wh, sources(spark, cfg))
     val cut = IncrementalCI.cutoff(graph, ciGraph, order, manifest, Materializer(wh),
-      resolve, cfg.fullRefresh)
+      resolve, cfg.fullRefresh, cfg.threads)
     val reusable = order.filter(n => cut.verdicts.get(n).exists(_.isRight))
     // clone targets and reused tables copy on one pool; a reused table
     // whose copy fails builds instead

@@ -42,6 +42,7 @@ final case class CopyResult(
   * partition.
   */
 final case class TableCopier(wh: Warehouse, parallelism: Int = 4) {
+  import TableCopier.inParallel
 
   def targetSchema(sourceSchema: String, suffix: String): String =
     s"${sourceSchema}_$suffix"
@@ -69,21 +70,30 @@ final case class TableCopier(wh: Warehouse, parallelism: Int = 4) {
     * in input order regardless of completion order.
     */
   def copyAll(sourceSchema: String, tables: Seq[String], suffix: String,
-      dryRun: Boolean = false): Seq[CopyResult] = {
-    val pool = Executors.newFixedThreadPool(math.max(1, parallelism))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val futures = tables.map { t =>
-        Future(Try(copyTable(sourceSchema, t, suffix, dryRun)))
-      }
-      tables.zip(Await.result(Future.sequence(futures), Duration.Inf)).map {
-        case (_, Success(r)) => r
-        case (t, Failure(e)) =>
-          CopyResult(t, sourceSchema, targetSchema(sourceSchema, suffix),
-            0L, dryRun, s"error: ${e.getMessage}")
-      }
-    } finally pool.shutdown()
-  }
+      dryRun: Boolean = false): Seq[CopyResult] =
+    tables.zip(inParallel(tables, parallelism)(t =>
+        Try(copyTable(sourceSchema, t, suffix, dryRun)))).map {
+      case (_, Success(r)) => r
+      case (t, Failure(e)) =>
+        CopyResult(t, sourceSchema, targetSchema(sourceSchema, suffix),
+          0L, dryRun, s"error: ${e.getMessage}")
+    }
+}
+
+object TableCopier {
+
+  /** `xs.map(f)` on a pool of `threads` (in the caller's thread when
+    * `threads <= 1`); results come back in input order. `f` should not
+    * throw: the first failure is rethrown once every call is done.
+    */
+  private[ci] def inParallel[A, B](xs: Seq[A], threads: Int)(f: A => B): Seq[B] =
+    if (threads <= 1 || xs.size <= 1) xs.map(f)
+    else {
+      val pool = Executors.newFixedThreadPool(math.min(threads, xs.size))
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+      try Await.result(Future.traverse(xs)(x => Future(f(x))), Duration.Inf)
+      finally pool.shutdown()
+    }
 }
 
 /** The detect→filter→copy orchestration (reference:
@@ -130,10 +140,29 @@ object IncrementalCI {
     * Planning a node runs no job. A node whose planning throws
     * (a contract violation, say) builds, and its build fails the same
     * way.
+    *
+    * A candidate's plan reads only prod, so it does not depend on any
+    * other verdict: with `threads > 1` every candidate (a persisted
+    * node with no refusal and a prod stamp) is planned and
+    * fingerprinted at once on that many threads, and the walk then
+    * takes the verdicts in order as it would alone. A node that turns
+    * out to have a built input drops its plan, so `plans` only ever
+    * holds plans whose inputs the build reads as planned.
     */
   def cutoff(graph: ModelGraph, ciGraph: ModelGraph, order: Seq[String],
       prod: ManifestState, mat: Materializer, resolve: String => DataFrame,
-      fullRefresh: Boolean): Cutoff = {
+      fullRefresh: Boolean, threads: Int = 1): Cutoff = {
+    def attempt(n: String): Try[(DataFrame, Try[Either[String, String]])] =
+      Try(mat.plan(ciGraph.byName(n), resolve)).map(df =>
+        df -> Try(matches(graph.byName(n), df, prod.stamps(n), mat.wh)))
+    val candidates =
+      if (fullRefresh || threads <= 1) Nil
+      else order.filter { n =>
+        val m = graph.byName(n)
+        m.materialization != Materialization.View && Fingerprint.refusal(m).isEmpty &&
+          prod.stamps.contains(n)
+      }
+    val ahead = candidates.zip(TableCopier.inParallel(candidates, threads)(attempt)).toMap
     val built = mutable.Set.empty[String]
     val verdicts = mutable.Map.empty[String, Either[String, String]]
     val plans = mutable.Map.empty[String, DataFrame]
@@ -147,9 +176,9 @@ object IncrementalCI {
           case _ if fullRefresh => Left("full refresh")
           case _ if builtInput.isDefined => Left(s"input ${builtInput.get} builds in CI")
           case (_, None) => Left("no prod fingerprint")
-          case (_, Some(stamp)) => Try(mat.plan(ciGraph.byName(n), resolve)) match {
+          case _ => ahead.getOrElse(n, attempt(n)) match {
             case Failure(e) => Left(s"planning failed: ${e.getMessage}")
-            case Success(df) => plans(n) = df; matches(m, df, stamp, mat.wh)
+            case Success((df, matched)) => plans(n) = df; matched.get
           }
         }
         if (verdict.isLeft) built += n

@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * re-expressed over parquet + DataFrames.
   *
   * Scale notes (the reason each strategy looks the way it does):
-  *  - `Append` reads ONE scalar (max watermark) to the driver, then
-  *    writes only the new rows; the target is never rewritten.
+  *  - `Append` reads ONE scalar (max watermark) to the driver, from
+  *    the parquet footers' statistics when they tell, then writes
+  *    only the new rows; the target is never rewritten.
   *  - `Merge` has no transactional MERGE on plain parquet, so it is
   *    copy-on-write: union(new, existing) → latest-per-key via a
   *    single shuffle on the unique key. On a real lakehouse table
@@ -104,9 +105,11 @@ final case class Materializer(wh: Warehouse,
       existing: DataFrame, incoming: DataFrame): Unit = {
     strategy match {
       case IncrementalStrategy.Append(wm) =>
-        // dbt: where wm > (select max(wm) from this) — one scalar to
-        // the driver, then a pure append of the new slice.
-        val maxWm = existing.agg(max(col(wm))).head.get(0)
+        // dbt: where wm > (select max(wm) from this) — one scalar,
+        // from the footers' statistics where they tell (no job), else
+        // from the query; then a pure append of the new slice.
+        val maxWm = wh.footerMax(model.targetSchema, model.name, wm)
+          .getOrElse(existing.agg(max(col(wm))).head.get(0))
         val fresh =
           if (maxWm == null) incoming
           else incoming.filter(col(wm) > lit(maxWm))
@@ -204,7 +207,8 @@ final case class Materializer(wh: Warehouse,
         // the batch's source scan (same physical effect as dbt
         // injecting the batch window into source()/ref()). Periods
         // older than the window — even if present in the incoming
-        // frame — are NOT rewritten.
+        // frame — are NOT rewritten. The period is a partition column,
+        // which no footer holds, so its max is always a query.
         val maxPeriod = existing.agg(max(col(periodCol))).head.getDate(0)
         val startMonth = java.sql.Date.valueOf(
           maxPeriod.toLocalDate.minusMonths(lookback.toLong))

@@ -11,8 +11,9 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFooters
   * all IO goes through Spark's Hadoop FS layer.
   *
   * Table metadata comes from parquet footers on the driver: [[read]]
-  * takes its schema from one footer and [[rowCount]] sums row-group
-  * counts over every footer, so neither launches a Spark job.
+  * takes its schema from one footer, [[rowCount]] sums row-group
+  * counts over every footer and [[footerMax]] reads row-group
+  * statistics, so none of them launches a Spark job.
   */
 final case class Warehouse(spark: SparkSession, root: String) {
   def path(schema: String, table: String): String = s"$root/$schema/$table"
@@ -40,11 +41,13 @@ final case class Warehouse(spark: SparkSession, root: String) {
 
   def exists(schema: String, table: String): Boolean = heal(schema, table)
 
-  /** The table as a DataFrame. Its data schema comes from one parquet
-    * footer read on the driver (the file Spark's own inference would
-    * pick), so resolving the read launches no Spark job; partition
-    * columns are discovered from the paths as before. A table with no
-    * data file fails as `spark.read.parquet` does.
+  /** The table as a DataFrame: the relation `spark.read.parquet`
+    * resolves, built from graft's own listing of the table's data
+    * files and one parquet footer read on the driver (the file Spark's
+    * own inference would pick), so the read launches no Spark job and
+    * skips Spark's per-read source resolution ([[ParquetFooters.read]]).
+    * Partition columns are discovered from the paths as before. A
+    * table with no data file fails as `spark.read.parquet` does.
     */
   def read(schema: String, table: String): DataFrame = {
     heal(schema, table)
@@ -58,6 +61,16 @@ final case class Warehouse(spark: SparkSession, root: String) {
   def rowCount(schema: String, table: String): Long = {
     heal(schema, table)
     ParquetFooters.rowCount(spark, path(schema, table))
+  }
+
+  /** `max(column)` over the table from its footers' row-group
+    * statistics, as `read(schema, table).agg(max(column)).head.get(0)`
+    * returns it, or None where the statistics cannot tell
+    * ([[ParquetFooters.max]]).
+    */
+  def footerMax(schema: String, table: String, column: String): Option[Any] = {
+    heal(schema, table)
+    ParquetFooters.max(spark, path(schema, table), column)
   }
 
   def write(df: DataFrame, schema: String, table: String,

@@ -1,12 +1,15 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.ci.{IncrementalCI, TableCopier}
 import graft.cli.DemoProject
-import graft.core.{Hook, ManifestState, Materializer, Model, ModelGraph, Runner, Warehouse}
+import graft.core.{Hook, ManifestState, Materializer, Model, ModelCtx, ModelGraph, Runner,
+  Warehouse}
 import graft.sources.Catalog
 
 /** The graft.Main CLI end-to-end: run -> test -> dry-run ci -> ci,
@@ -271,8 +274,10 @@ class MainSpec extends SparkSpec {
   /** The bench harness's multiset fingerprint of a table: its row
     * count and the sum of an xxhash64 of every row.
     */
-  private def multiset(w: Warehouse, schema: String, t: String): (Long, Any) = {
-    val df = w.read(schema, t)
+  private def multiset(w: Warehouse, schema: String, t: String): (Long, Any) =
+    multiset(w.read(schema, t))
+
+  private def multiset(df: DataFrame): (Long, Any) = {
     val r = df.select(count(lit(1)),
       sum(xxhash64(df.columns.sorted.toIndexedSeq.map(col): _*).cast(DecimalType(38, 0))))
       .head()
@@ -392,6 +397,81 @@ class MainSpec extends SparkSpec {
     check("udf", "mart_segment_spend", nation, Set("stg_customer"), udfModel)(_ => ())
     check("local", "mart_segment_spend", nation, Set("stg_customer"), localInput)(_ => ())
     check("hook", "mart_segment_spend", nation, Set("stg_customer"), preHook)(_ => ())
+  }
+
+  test("ci early-cutoff walk in parallel: the reports and run_results of a walk alone") {
+    val whRoot = graft.core.Scratch.dir("cutoff_par").toString
+    val base = CliConfig(command = "run", sfDir = sfDir, warehouseRoot = whRoot,
+      slices = 8, cutoff = Some(cutoffDate))
+    Main.run(spark, base)
+    val w = wh(whRoot)
+    /** A check at `threads`: the report without copy timings, and
+      * run_results.json without seconds.
+      */
+    def check(threads: Int, changed: Set[String],
+        project: String => ModelGraph): (Main.CiReport, String) = {
+      Main.clean(spark, base.copy(command = "clean"))
+      val rep = Main.ci(spark, base.copy(command = "ci", changed = changed, threads = threads),
+        project)
+      val results = w.loadArtifact("run_results.json").get
+      (rep.copy(copies = rep.copies.map(_.copy(seconds = 0.0))),
+        results.replaceAll(""""(seconds|elapsed_s)":[0-9.]+""", ""))
+    }
+    for (i <- 0 until 8) {
+      val changed = Set(s"stg_orders_$i")
+      val project = (s: String) => DemoProject.graph(8, changed = changed, schema = s)
+      val alone = check(1, changed, project)
+      assert(alone._1.reused.size == 4 && alone._1.ran == Seq(s"stg_orders_$i",
+        "mart_recent_buyers"), s"slice $i: ${alone._1}")
+      assert(check(4, changed, project) == alone, s"slice $i")
+    }
+
+    // int_spend_1 really changes: it builds, and int_spend_all, whose
+    // speculative plan read prod's int_spend_1, builds on the CI table
+    val changed = Set("int_spend_1")
+    val edited = (s: String) => {
+      val g = DemoProject.graph(8, changed = changed, schema = s)
+      ModelGraph(g.models.map(m =>
+        if (m.name != "int_spend_1") m
+        else m.copy(transform = ctx => m.transform(ctx).filter(col("n_orders") > 1))))
+    }
+    val alone = check(1, changed, edited)
+    val (rep, results) = check(4, changed, edited)
+    assert((rep, results) == alone)
+    assert(rep.reused.isEmpty && rep.ran.toSet == Set("int_spend_1", "int_spend_all",
+      "mart_segment_spend", "mart_nation_spend", "mart_recent_buyers"))
+    val record = results.split("""\},\{""").find(_.contains(""""model":"int_spend_all""""))
+    assert(record.exists(_.contains(""""reason":"input int_spend_1 builds in CI"""")), results)
+    val onCi = edited("analytics").byName("int_spend_all").transform(new ModelCtx {
+      def source(n: String): DataFrame = throw new IllegalArgumentException(n)
+      def ref(n: String): DataFrame =
+        w.read(if (n == "int_spend_1") "analytics_ci" else "analytics", n)
+      def thisTable: Option[DataFrame] = None
+    })
+    val ciAll = multiset(w, "analytics_ci", "int_spend_all")
+    assert(ciAll == multiset(onCi) && ciAll != multiset(w, "analytics", "int_spend_all"))
+  }
+
+  test("deferResolve resolves each name once when threads miss it together") {
+    val calls = new java.util.concurrent.ConcurrentHashMap[String,
+      java.util.concurrent.atomic.AtomicInteger]()
+    val catalog = Catalog(spark, sfDir)
+    val srcs: String => DataFrame = n => {
+      calls.computeIfAbsent(n, _ => new java.util.concurrent.atomic.AtomicInteger)
+        .incrementAndGet()
+      Thread.sleep(100)
+      catalog.table(n)
+    }
+    // stg_orders_0 is a view: it resolves orders through the same memo
+    val resolve = Main.deferResolve(DemoProject.graph(1),
+      wh(graft.core.Scratch.dir("defer_once").toString), srcs)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try (0 until 16).map(i => pool.submit(() =>
+        resolve(Seq("orders", "stg_orders_0", "customer")(i % 3))))
+      .foreach(_.get)
+    finally pool.shutdown()
+    assert(calls.asScala.map { case (k, v) => k -> v.get }.toMap ==
+      Map("orders" -> 1, "customer" -> 1))
   }
 
   test("Main ci --vars: a rebound var is a body diff state:modified selects") {
