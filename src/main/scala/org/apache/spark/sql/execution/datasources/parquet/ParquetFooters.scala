@@ -18,6 +18,7 @@ import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.util.RebaseDateTime
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
   InMemoryFileIndex}
+import org.apache.spark.sql.execution.streaming.runtime.MetadataLogFileIndex
 import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
 import org.apache.spark.sql.types.{DataType, DateType, IntegerType, LongType, StructType,
   TimestampNTZType, TimestampType}
@@ -97,7 +98,9 @@ object ParquetFooters {
     * Spark's reader runs instead when `path` holds no data file, so it
     * fails the way it always has (path not found, or no schema to
     * infer), and when it holds a `_spark_metadata` log: a file sink's
-    * output is read through the log's index, with the footer schema.
+    * output is read through the log's index, with the footer schema of
+    * the first file the log commits — the file Spark infers from. A
+    * listing can put a file the log never committed first.
     */
   def read(spark: SparkSession, path: String): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -105,9 +108,14 @@ object ParquetFooters {
     if (files.isEmpty) return spark.read.parquet(path)
     val session = classic(spark)
     val sqlConf = session.sessionState.conf
-    val s = sparkSchema(spark, files.head, footer(conf, files.head))
-    if (FileStreamSink.hasMetadata(Seq(path), conf, sqlConf)) spark.read.schema(s).parquet(path)
-    else {
+    if (FileStreamSink.hasMetadata(Seq(path), conf, sqlConf)) {
+      val logged = new MetadataLogFileIndex(session, qualified(conf, path), Map.empty, None)
+        .allFiles()
+      if (logged.isEmpty) spark.read.parquet(path)
+      else spark.read.schema(sparkSchema(spark, logged.head, footer(conf, logged.head)))
+        .parquet(path)
+    } else {
+      val s = sparkSchema(spark, files.head, footer(conf, files.head))
       val root = qualified(conf, path)
       val options = Map("path" -> path)
       val index = new InMemoryFileIndex(session, Seq(root), options, Some(s),
