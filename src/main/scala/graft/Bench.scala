@@ -531,10 +531,37 @@ object Bench {
       ()
     } catch { case _: Throwable => () }
 
+  /** The scale dir a run reads (SPARK_GRAFT_SF_DIR); the board's is
+    * the default.
+    */
+  private[graft] def sfDirOf(env: Map[String, String]): String =
+    env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  private def scaleOn(env: Map[String, String]): Boolean =
+    env.getOrElse("SPARK_GRAFT_SCALE10X", "1") != "0"
+
+  /** The repo-tracked board: each round's numbers, machine-readable
+    * from git history.
+    */
+  private[graft] val boardFile = "bench_results/latest.json"
+
+  /** The files a run writes its JSON line to: SPARK_GRAFT_BENCH_OUT
+    * always, and the tracked board only for the board's own
+    * configuration — every entry (no SPARK_GRAFT_BENCH_ONLY), the
+    * default scale dir and the 10× tail on — so a filtered, small-scale
+    * or tail-less run never overwrites the committed numbers.
+    */
+  private[graft] def outFiles(env: Map[String, String]): Seq[String] = {
+    val board = !env.contains("SPARK_GRAFT_BENCH_ONLY") &&
+      sfDirOf(env) == sfDirOf(Map.empty) && scaleOn(env)
+    env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json") +:
+      (if (board) Seq(boardFile) else Nil)
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = sfDirOf(sys.env)
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    val doScale = sys.env.getOrElse("SPARK_GRAFT_SCALE10X", "1") != "0"
+    val doScale = scaleOn(sys.env)
     // local-iteration aid: comma-separated query-name filter (unset =
     // the full board). A filtered run benches the named entries and
     // runs the probe rows whose base it names (probesFor) — the
@@ -710,11 +737,9 @@ object Bench {
     println(json)
     // the stdout line gets head-truncated by capped log captures (it
     // lost 30 of 66 medians in round 5's durable record) — always
-    // persist the full JSON to a file as well, plus a repo-tracked
-    // copy (bench_results/latest.json) so each round's numbers are
-    // machine-readable from git history, not only from a log tail
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
-    for (f <- Seq(outFile, "bench_results/latest.json")) {
+    // persist the full JSON to a file as well, and to the board when
+    // this run is the board's own configuration
+    for (f <- outFiles(sys.env)) {
       try {
         val p = java.nio.file.Paths.get(f)
         Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))

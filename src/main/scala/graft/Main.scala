@@ -73,8 +73,9 @@ object Main {
       |  --schema <name>        base warehouse schema for `run` (default "analytics");
       |                         test/clone/ci auto-detect it from the persisted manifest
       |  --schema-suffix <s>    CI schema suffix (default "ci")
-      |  --threads <n>          parallel table copies, model builds and ci's
-      |                         early-cutoff planning (default 1)
+      |  --threads <n>          parallel table copies, model builds (run and
+      |                         retry) and ci's early-cutoff planning
+      |                         (default 1)
       |  --slices <n>           demo DAG size: 2n+5 models (default 19 -> 43)
       |  --changed <a,b,...>    model names whose bodies a PR edited (ci)
       |  --cutoff <yyyy-mm-dd>  restrict source orders to before this date (run)
@@ -190,8 +191,10 @@ object Main {
   // ----------------------------------------------------------------
   // reports (spec-assertable, printing lives in main)
 
+  /** `skipped`: what `retry` found journaled complete and unchanged. */
   final case class RunReport(ran: Seq[String], counts: Map[String, Long],
-      secs: Map[String, Double] = Map.empty, wallSec: Double = 0.0)
+      secs: Map[String, Double] = Map.empty, wallSec: Double = 0.0,
+      skipped: Seq[String] = Nil)
   final case class TestReport(checks: Seq[(String, Long)],
       stored: Seq[String] = Nil) {
     def failed: Boolean = checks.exists(_._2 > 0)
@@ -244,46 +247,13 @@ object Main {
       }
   }
 
-  /** dbt `--defer`: a ref NOT materialized by this run resolves to the
-    * model's prod warehouse state (persisted kinds) or composes its
-    * plan in place (views), falling through to raw sources — the same
-    * resolution `dbt ls --select modified+ --defer` sets up for CI
-    * (reference: src/dbt_incremental_ci/dbt_helper.py:29-86).
+  /** dbt `--defer` ([[Runner.deferResolve]]): the one resolver `run`,
+    * `retry` and `ci` share for the refs they do not build.
     */
   def deferResolve(graph: ModelGraph, wh: Warehouse,
-      srcs: String => DataFrame): String => DataFrame = {
-    // memoized: CI's early-cutoff walk and its build resolve the same
-    // prod tables and sources, and each read is a footer read plus a
-    // listing. The walk and the Runner resolve from several threads, so
-    // each name gets one holder whose lazy value resolves it once; a
-    // view's refs resolve through other holders, never inside the map.
-    val memo = scala.collection.concurrent.TrieMap.empty[String, Once]
-    final class Once(name: String) { lazy val df: DataFrame = resolved(name) }
-    def resolve(name: String): DataFrame = memo.getOrElseUpdate(name, new Once(name)).df
-    def resolved(name: String): DataFrame = graph.byName.get(name) match {
-      case Some(m) =>
-        m.materialization match {
-          case Materialization.View =>
-            m.transform(new ModelCtx {
-              def source(n: String): DataFrame = resolve(n)
-              def ref(n: String): DataFrame = resolve(n)
-              def thisTable: Option[DataFrame] = None
-            })
-          case _ => wh.read(m.schema, m.name) // prod (unsuffixed) state
-        }
-      case None => srcs(name)
-    }
-    resolve
-  }
+      srcs: String => DataFrame): String => DataFrame =
+    Runner.deferResolve(graph, wh, srcs)
 
-  /** `dbt run`: materialize the full demo DAG, then persist the
-    * manifest artifact the next ci run diffs against. The run is
-    * JOURNALED — the intent map for every persisted model commits up
-    * front, each completion appends to the run journal, and both
-    * clear on full success — so a failed `run` resumes from its point
-    * of failure via the `retry` subcommand instead of leaving no
-    * trace (the journal is the same artifact [[Retry.run]] reads).
-    */
   /** `run --empty` (dbt ≥1.8): schema-validating dry run — the demo
     * DAG builds with LIMIT-0 sources into the `_<suffix>` CI schema
     * (an empty validation must never overwrite prod relations), and
@@ -298,101 +268,62 @@ object Main {
     EmptyRun.validate(Materializer(wh), graph, sources(spark, cfg))
   }
 
+  /** `dbt run`: materialize the full demo DAG, then persist the
+    * manifest artifact the next ci run diffs against.
+    */
   def run(spark: SparkSession, cfg: CliConfig): RunReport =
     run(spark, cfg, DemoProject.graph(cfg.slices, schema = cfg.schema, vars = cfg.vars))
 
-  /** `run` over `graph` instead of the demo DAG. Each persisted model
-    * it builds is fingerprinted as planned ([[Fingerprint]]); the
-    * manifest stores the fingerprint and the data version of the
-    * table written, and run_results.json records every model.
+  /** `run` over `graph` instead of the demo DAG: clear the journal and
+    * intents, save the schema this run targets, then the same
+    * journaled run as `retry`. With `--selector` (dbt `run --selector
+    * <name>`) only the named selector's models build — it resolves
+    * through the same mini-language as an inline --select — and refs
+    * to the others read the warehouse.
     */
   private[graft] def run(spark: SparkSession, cfg: CliConfig, graph: ModelGraph): RunReport = {
     val wh = Warehouse(spark, cfg.warehouseRoot)
-    // dbt `run --selector <name>`: resolve the NAMED selector from
-    // selectors.yml through the same mini-language as an inline
-    // --select (Selector.selectNamed IS one select() call), then run
-    // only the selected subset in topological order. Refs to
-    // unselected persisted models read the warehouse (the prior
-    // run's state — dbt's assumption that upstream is already built).
-    val selected: Option[Set[String]] = cfg.selector.map { name =>
-      val path = cfg.selectorsYml.getOrElse("selectors.yml")
-      val text = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
-      Selector.selectNamed(graph, Selector.parseSelectorsYaml(text), name)
-    }
-    val order = selected.fold(graph.topoOrder)(s => graph.topoOrder.filter(s))
-    val persisted = graph.models
-      .filter(_.materialization != Materialization.View)
-      .filter(m => selected.forall(_(m.name)))
-    // fresh run: reset journal + intents, and persist the schema this
-    // run targets so a bare `retry` resumes the SAME schema (the
-    // manifest only saves at run END — after a crash it still
-    // describes the previous run)
-    Retry.commit(wh, Map.empty)
-    Retry.commit(wh, Map.empty, Retry.intentArtifact)
+    val selected = cfg.selector.map(namedSelection(cfg, graph, _))
+    // the manifest only saves at run END — after a crash it still
+    // describes the previous run, so a bare `retry` reads the schema
+    // from here
+    Retry.reset(wh)
     wh.saveArtifact(runSchemaArtifact, cfg.schema)
-    val journalLock = new Object
-    var journal = Map.empty[String, String]
-    var intents = Map.empty[String, String]
+    journaled(spark, cfg, wh, graph, selected, "run")
+  }
+
+  /** The one journaled run behind `run`, `run --selector` and `retry`
+    * ([[Retry.run]] over the `only` models, at `--threads`). Each
+    * persisted model it builds is fingerprinted as planned
+    * ([[Fingerprint]]); run_results.json records every model it
+    * started, and on success the manifest stores each built model's
+    * fingerprint and the data version of the table it wrote.
+    */
+  private def journaled(spark: SparkSession, cfg: CliConfig, wh: Warehouse,
+      graph: ModelGraph, only: Option[Set[String]],
+      command: String): RunReport = {
     val t0 = System.nanoTime()
     val secs = new java.util.concurrent.ConcurrentHashMap[String, Double]()
-    val byName = graph.byName
-    val baseSources = sources(spark, cfg)
-    val runSources: String => DataFrame = selected match {
-      case Some(sel) =>
-        // persisted unselected refs read the warehouse; unselected
-        // VIEWS (never persisted) recompose lazily through the same
-        // resolver — exactly how a full run folds view chains into
-        // downstream plans
-        lazy val deferMat = Materializer(wh)
-        def resolve(n: String): DataFrame =
-          if (byName.contains(n) && !sel(n)) {
-            val m = byName(n)
-            if (m.materialization == Materialization.View)
-              deferMat.run(m, resolve, fullRefresh = false)
-            else wh.read(m.targetSchema, n)
-          } else baseSources(n)
-        resolve
-      case None => baseSources
-    }
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val fingerprints = new java.util.concurrent.ConcurrentHashMap[String, Either[String, String]]()
     val mat = Materializer(wh, onPlanned = (m, df) =>
       if (m.materialization != Materialization.View)
         fingerprints.put(m.name,
           if (cfg.fullRefresh) Left("full refresh") else Fingerprint.of(m, df)))
-    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val outcome = scala.util.Try(Runner(mat, runSources, cfg.fullRefresh,
-        threads = cfg.threads,
-        // intent commits at MODEL START — after a crash it marks
-        // exactly the in-flight (possibly written-but-unjournaled)
-        // models, never ones the run hadn't reached, so retry's
-        // ambiguous-append rebuild cannot wipe the accumulated
-        // history of an untouched append model
-        onModelStart = n => {
-          started.add(n)
-          val m = byName(n)
-          if (m.materialization != Materialization.View)
-            journalLock.synchronized {
-              intents += n -> m.checksum
-              Retry.commit(wh, intents, Retry.intentArtifact)
-            }
-        },
-        onModelDone = (n, s) => {
-          secs.put(n, s)
-          val m = byName(n)
-          if (m.materialization != Materialization.View)
-            journalLock.synchronized {
-              journal += n -> m.checksum
-              Retry.commit(wh, journal)
-            }
-        })
-      .runSelected(graph, order))
+    val outcome = scala.util.Try(Retry.run(graph, mat, sources(spark, cfg), wh,
+      cfg.fullRefresh, threads = cfg.threads, only = only,
+      onModelStart = n => { started.add(n); () },
+      onModelDone = (n, s) => { secs.put(n, s); () }))
     val wall = (System.nanoTime() - t0) / 1e9
     val done = secs.asScala.toMap
-    val counts = persisted.collect { case m if done.contains(m.name) =>
-      m.name -> wh.rowCount(m.targetSchema, m.name) }.toMap
-    RunResults.save(wh, "run", wall, RunResults.ran(persisted.map(_.name), started.contains,
+    val byName = graph.byName
+    val persisted = graph.models.collect { case m if m.materialization != Materialization.View &&
+      only.forall(_(m.name)) => m.name }
+    val counts = persisted.collect { case n if done.contains(n) =>
+      n -> wh.rowCount(byName(n).targetSchema, n) }.toMap
+    RunResults.save(wh, command, wall, RunResults.ran(persisted, started.contains,
       done, counts, n => Option(fingerprints.get(n)).getOrElse(Left("not planned"))))
-    outcome.get
+    val (ran, skipped) = outcome.get
     // a model with a fingerprint is stamped with the data version of
     // the table it just wrote; models this run did not build get none
     val stamps = fingerprints.asScala.collect { case (n, Right(fp)) =>
@@ -400,9 +331,7 @@ object Main {
         Fingerprint.dataVersion(spark, wh.path(byName(n).targetSchema, n)))
     }.toMap
     ManifestState.save(wh, ManifestState.of(graph).copy(stamps = stamps))
-    Retry.commit(wh, Map.empty)
-    Retry.commit(wh, Map.empty, Retry.intentArtifact)
-    RunReport(order, counts, done, wall)
+    RunReport(ran, counts, done, wall, skipped)
   }
 
   /** Schema the last `run` targeted — written at run START so `retry`
@@ -411,16 +340,12 @@ object Main {
     */
   val runSchemaArtifact = "run_schema"
 
-  final case class RetryReport(ran: Seq[String], skipped: Seq[String],
-      counts: Map[String, Long])
-
   /** `dbt retry`: resume the last failed `run` from its point of
-    * failure — journaled-and-unchanged models are skipped (their refs
-    * resolve from the warehouse), everything else runs in topological
-    * order ([[Retry.run]] semantics, including the ambiguous-append
-    * rebuild).
+    * failure — the same journaled run, over the models the journal
+    * does not hold completed and unchanged ([[Retry.run]] semantics,
+    * including the ambiguous-append rebuild).
     */
-  def retry(spark: SparkSession, cfg: CliConfig): RetryReport = {
+  def retry(spark: SparkSession, cfg: CliConfig): RunReport = {
     val wh = Warehouse(spark, cfg.warehouseRoot)
     // resume the schema the CRASHED run targeted (its artifact commits
     // at run start); the manifest-derived base is the previous
@@ -428,21 +353,9 @@ object Main {
     val schema = wh.loadArtifact(runSchemaArtifact)
       .getOrElse(baseSchemaOf(wh, cfg))
     val graph = DemoProject.graph(cfg.slices, schema = schema, vars = cfg.vars)
-    val (ran, skipped) =
-      Retry.run(graph, Materializer(wh), sources(spark, cfg), wh, cfg.fullRefresh)
-    ManifestState.save(wh, ManifestState.of(graph))
-    val counts = graph.models.collect {
-      case m if m.materialization != Materialization.View &&
-          ran.contains(m.name) =>
-        m.name -> wh.rowCount(m.targetSchema, m.name)
-    }.toMap
-    RetryReport(ran, skipped, counts)
+    journaled(spark, cfg, wh, graph, None, "retry")
   }
 
-  /** `dbt test` over the materialized marts: generic not_null/unique/
-    * relationships checks plus one singular cross-model test, summarized
-    * as (check_name, n_violations) — pass = all zeros.
-    */
   /** dbt unit tests over the demo project: each case runs its model's
     * transform against mocked fixture inputs only (no warehouse, no
     * sources touched — the resolver fails loudly if a case under-
@@ -458,6 +371,10 @@ object Main {
         r.getLong(3), r.getLong(4))).toSeq
   }
 
+  /** `dbt test` over the materialized marts: generic not_null/unique/
+    * relationships checks plus one singular cross-model test, summarized
+    * as (check_name, n_violations) — pass = all zeros.
+    */
   def test(spark: SparkSession, cfg: CliConfig): TestReport = {
     val wh = Warehouse(spark, cfg.warehouseRoot)
     val base = baseSchemaOf(wh, cfg)
@@ -640,13 +557,17 @@ object Main {
     * order. Pure driver-side name math (Selector's O(graph) claim);
     * no Spark job runs.
     */
+  /** The models a named selector from selectors.yml selects. */
+  private def namedSelection(cfg: CliConfig, graph: ModelGraph, name: String): Set[String] = {
+    val path = cfg.selectorsYml.getOrElse("selectors.yml")
+    val text = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
+    Selector.selectNamed(graph, Selector.parseSelectorsYaml(text), name)
+  }
+
   def ls(cfg: CliConfig): Seq[(String, String, Seq[String])] = {
     val graph = DemoProject.graph(cfg.slices, schema = cfg.schema, vars = cfg.vars)
     val sel: Set[String] = (cfg.selector, cfg.select) match {
-      case (Some(name), _) =>
-        val path = cfg.selectorsYml.getOrElse("selectors.yml")
-        val text = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
-        Selector.selectNamed(graph, Selector.parseSelectorsYaml(text), name)
+      case (Some(name), _) => namedSelection(cfg, graph, name)
       case (None, Some(spec)) => Selector.select(graph, spec)
       case (None, None) => graph.byName.keySet
     }

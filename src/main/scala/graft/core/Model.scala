@@ -154,8 +154,10 @@ final case class Model(
     tags: Seq[String] = Nil,
     // dbt `config(pre_hook=…, post_hook=…)`: per-model lifecycle hooks
     // (grants after each table build, a fixture DDL the model reads).
-    // Fired around THIS model's materialization by Runner/Retry —
-    // run-level on-run-start/on-run-end stay on RunHooks.
+    // The Runner fires them around THIS model's materialization; a
+    // journaled run (Retry.run: `run`, `retry`) journals each one, so a
+    // retry skips those that completed. Run-level on-run-start and
+    // on-run-end stay on RunHooks.
     preHooks: Seq[Hook] = Nil,
     postHooks: Seq[Hook] = Nil) {
   /** Target schema name, dbt-style `<base>_<custom suffix>`. */

@@ -52,124 +52,126 @@ object Retry {
   def loadJournal(wh: Warehouse): Map[String, String] =
     wh.loadArtifact(artifactName).map(fromJson).getOrElse(Map.empty)
 
-  /** Commit a journal (or intent) map — public so the CLI's threaded
-    * `run` can journal each completed model through the same artifact
-    * the `retry` subcommand resumes from.
-    */
-  def commit(wh: Warehouse, journal: Map[String, String],
+  /** Commit a journal (or intent) map; tests plant crash states here. */
+  private[graft] def commit(wh: Warehouse, journal: Map[String, String],
       artifact: String = artifactName): Unit =
     wh.saveArtifact(artifact, toJson(journal))
 
-  /** Journaled run. Returns (ran, skipped) in topological order; the
-    * journal is committed after each persisted model and cleared on
-    * full success. Throws the failing model's error after the journal
-    * reflects everything completed before it.
+  /** Clear the journal and the intents: a fresh run starts here, a
+    * successful one ends here.
     */
+  def reset(wh: Warehouse): Unit = {
+    commit(wh, Map.empty)
+    commit(wh, Map.empty, intentArtifact)
+  }
+
   private def isAppend(m: Model): Boolean = m.materialization match {
     case Materialization.Incremental(IncrementalStrategy.Append(_)) => true
     case _ => false
   }
 
-  /** Journal key for a lifecycle hook — namespaced so a hook can
-    * never collide with a model of the same name.
-    */
-  private def hookKey(h: Hook): String = s"hook:${h.name}"
+  /** A hook's journal entry (`key` at `cs`), reported as `label`. */
+  private final case class Step(label: String, key: String, cs: String)
 
+  /** Run-level hook keys are namespaced so a hook can never collide with
+    * a model of the same name.
+    */
+  private def runStep(h: Hook) = Step(h.name, s"hook:${h.name}", h.checksum)
+
+  /** Per-model hooks (dbt pre_hook/post_hook) journal with their
+    * identity BOUND to the model's checksum: editing the model
+    * invalidates its hooks' entries (dbt re-runs the full node), while a
+    * pure crash-resume skips side effects that already applied.
+    */
+  private def modelSteps(m: Model, hs: Seq[Hook]): Seq[(Step, Hook)] =
+    hs.map(h => Step(s"${m.name}.${h.name}", s"hook:${m.name}:${h.name}",
+      Checksum.md5(h.checksum + "|" + m.checksum)) -> h)
+
+  /** The journaled run behind `run`, `run --selector` and `retry`: of
+    * the `only` models (default: all), those the journal holds
+    * completed and unchanged are skipped, the rest build on the
+    * [[Runner]] at `threads`, and refs to models it does not build read
+    * the warehouse ([[Runner.deferResolve]]). The intent commits at
+    * model start; the journal entry after the model's write and before
+    * its post-hooks. Hooks journal like models, and a skipped model's
+    * un-journaled post-hooks still fire. On-run-end hooks always fire
+    * (a failed run never reached them).
+    *
+    * Returns (ran, skipped) in topological order, hooks included;
+    * throws the failing model's error once the journal holds everything
+    * completed before it. `onModelStart`/`onModelDone` are the Runner's.
+    */
   def run(graph: ModelGraph, mat: Materializer,
       sources: String => DataFrame, wh: Warehouse,
       fullRefresh: Boolean = false,
-      hooks: RunHooks = RunHooks()): (Seq[String], Seq[String]) = {
-    var journal = loadJournal(wh)
+      hooks: RunHooks = RunHooks(),
+      threads: Int = 1,
+      only: Option[Set[String]] = None,
+      onModelStart: String => Unit = _ => (),
+      onModelDone: (String, Double) => Unit = (_, _) => ()): (Seq[String], Seq[String]) = {
+    val journal0 = loadJournal(wh)
     // CUMULATIVE: the failed run's intents must survive this retry's
     // own intent commits — if the retry itself crashes before reaching
     // a later append model, the next retry still needs to know that
     // model may hold an unjournaled batch
-    var intents = wh.loadArtifact(intentArtifact)
-      .map(fromJson).getOrElse(Map.empty)
-    val priorIntents = intents
-    var acc = Map.empty[String, DataFrame]
-    val ran = Seq.newBuilder[String]
-    val skipped = Seq.newBuilder[String]
-    // on-run-start hooks precede the first model and journal like
-    // models: a retried run skips a completed hook whose body is
-    // unchanged (its side effect — fixture DDL — already exists) and
-    // re-fires an edited one, dbt's own hook-on-retry behavior
-    for (h <- hooks.onRunStart) {
-      if (journal.get(hookKey(h)).contains(h.checksum)) skipped += h.name
-      else {
-        h.action()
-        journal += hookKey(h) -> h.checksum
-        wh.saveArtifact(artifactName, toJson(journal))
-        ran += h.name
-      }
-    }
-    for (name <- graph.topoOrder) {
-      val m = graph.byName(name)
-      val resolve: String => DataFrame = n => acc.getOrElse(n, sources(n))
-      val isView = m.materialization == Materialization.View
-      val completedBefore = !isView &&
-        journal.get(name).contains(m.checksum) &&
-        wh.exists(m.targetSchema, name)
-      // per-model hooks (dbt pre_hook/post_hook) journal like models,
-      // with each hook's journal identity BOUND to its model's
-      // checksum: editing the model invalidates its hooks' completed
-      // entries automatically (dbt re-runs the full node), while a
-      // pure crash-resume skips hook side effects that already
-      // applied (grants granted, fixture DDL created).
-      def modelHookKey(h: Hook): String = s"hook:$name:${h.name}"
-      def modelHookCs(h: Hook): String =
-        Checksum.md5(h.checksum + "|" + m.checksum)
-      def fireModelHook(h: Hook): Unit =
-        if (journal.get(modelHookKey(h)).contains(modelHookCs(h)))
-          skipped += s"$name.${h.name}"
-        else {
-          h.action()
-          journal += modelHookKey(h) -> modelHookCs(h)
-          wh.saveArtifact(artifactName, toJson(journal))
-          ran += s"$name.${h.name}"
+    val intents0 = wh.loadArtifact(intentArtifact).map(fromJson).getOrElse(Map.empty)
+    // submitter threads commit under one lock
+    val lock = new Object
+    var journal = journal0
+    var intents = intents0
+    def record(key: String, cs: String): Unit =
+      lock.synchronized { journal += key -> cs; commit(wh, journal) }
+    // each model and hook runs at most once per run, so "completed" is
+    // a question about the journal the run started from
+    def done(key: String, cs: String): Boolean = journal0.get(key).contains(cs)
+    def once(s: Step, h: Hook): Hook = h.copy(action = () =>
+      if (!done(s.key, s.cs)) { h.action(); record(s.key, s.cs) })
+    def persisted(m: Model) = m.materialization != Materialization.View
+    val order = graph.topoOrder.filter(n => only.forall(_(n)))
+    val skip = order.filter { n =>
+      val m = graph.byName(n)
+      persisted(m) && done(n, m.checksum) && wh.exists(m.targetSchema, n)
+    }.toSet
+    hooks.onRunStart.foreach(h => once(runStep(h), h).action())
+    // crash window: model journaled, post-hook not yet fired
+    for (n <- order if skip(n); m = graph.byName(n); (s, h) <- modelSteps(m, m.postHooks))
+      once(s, h).action()
+    val journaled = ModelGraph(graph.models.map(m => m.copy(
+      preHooks = modelSteps(m, m.preHooks).map((once _).tupled),
+      postHooks = modelSteps(m, m.postHooks).map((once _).tupled))))
+    Runner(mat, Runner.deferResolve(graph, wh, sources), fullRefresh, threads,
+      onModelStart = n => {
+        onModelStart(n)
+        val m = graph.byName(n)
+        if (persisted(m)) lock.synchronized {
+          intents += n -> m.checksum
+          commit(wh, intents, intentArtifact)
         }
-      if (completedBefore) {
-        acc += name -> wh.read(m.targetSchema, name)
-        skipped += name
-        // crash window: model journaled, post-hook not yet fired —
-        // a skipped model's remaining post-hooks still run
-        m.postHooks.foreach(fireModelHook)
-      } else {
-        m.preHooks.foreach(fireModelHook)
-        // the crash window: target written, journal not yet committed.
-        // An intent with NO journal entry means this append target may
-        // already hold the batch — rebuild it from scratch rather than
-        // double-append. Matched by NAME, not checksum: the
-        // fix-then-retry flow edits the model between crash and retry,
-        // and an edited model's target is just as ambiguous as an
-        // unedited one's. A journal entry at ANY checksum excludes the
-        // model: its last write committed, so the crash window never
-        // applied — an edited-but-completed append model re-runs as a
-        // normal incremental instead of wiping its accumulated
-        // history.
-        val ambiguousAppend = isAppend(m) &&
-          priorIntents.contains(name) && !journal.contains(name) &&
-          wh.exists(m.targetSchema, name)
-        if (!isView) {
-          intents += name -> m.checksum
-          wh.saveArtifact(intentArtifact, toJson(intents))
-        }
-        val out = mat.run(m, resolve, fullRefresh || ambiguousAppend)
-        acc += name -> out
-        if (!isView) {
-          journal += name -> m.checksum
-          wh.saveArtifact(artifactName, toJson(journal))
-        }
-        m.postHooks.foreach(fireModelHook)
-        ran += name
-      }
-    }
-    // on-run-end hooks fire once the whole DAG has completed — a
-    // failed run never reached them, so the resuming retry runs them
-    // unconditionally (they see the finished warehouse state)
-    for (h <- hooks.onRunEnd) { h.action(); ran += h.name }
-    wh.saveArtifact(artifactName, "{}")
-    wh.saveArtifact(intentArtifact, "{}")
-    (ran.result(), skipped.result())
+        // the crash window: an intent with NO journal entry means this
+        // append target may already hold the batch, so it rebuilds from
+        // scratch. Matched by NAME: the fix-then-retry flow edits the
+        // model between crash and retry. A journal entry at ANY checksum
+        // means its last write committed, so an edited-but-completed
+        // append model keeps its history.
+        if (isAppend(m) && intents0.contains(n) && !journal0.contains(n))
+          wh.drop(m.targetSchema, n)
+      },
+      onModelDone = (n, sec) => {
+        val m = graph.byName(n)
+        if (persisted(m)) record(n, m.checksum)
+        onModelDone(n, sec)
+      }).runSelected(journaled, order.filterNot(skip))
+    hooks.onRunEnd.foreach(_.action())
+    reset(wh)
+    def row(s: Step) = s.label -> done(s.key, s.cs)
+    val steps = hooks.onRunStart.map(h => row(runStep(h))) ++
+      order.flatMap { n =>
+        val m = graph.byName(n)
+        def hookRows(hs: Seq[Hook]) = modelSteps(m, hs).map(sh => row(sh._1))
+        if (skip(n)) (n -> true) +: hookRows(m.postHooks)
+        else hookRows(m.preHooks) ++ ((n -> false) +: hookRows(m.postHooks))
+      } ++ hooks.onRunEnd.map(_.name -> false)
+    val (skipped, ran) = steps.partition(_._2)
+    (ran.map(_._1), skipped.map(_._1))
   }
 }

@@ -1,8 +1,9 @@
 package graft.core
 
-/** dbt's `run_results.json`: what one `run` or `ci` invocation did to
-  * each persisted model, saved as a warehouse artifact beside the
-  * manifest. Each invocation replaces the previous record.
+/** dbt's `run_results.json`: what one `run`, `retry` or `ci`
+  * invocation did to each persisted model, saved as a warehouse
+  * artifact beside the manifest. Each invocation replaces the previous
+  * record.
   *
   * Statuses: `built` (the Runner wrote it), `reused` (CI copied prod's
   * table because its fingerprint matched), `cloned` (a CI clone target

@@ -28,6 +28,10 @@ import org.apache.spark.sql.DataFrame
   * threads only declare work. At 100 TB this is the difference between
   * the cluster idling through every per-model tail and keeping the
   * executors saturated across independent subtrees.
+  *
+  * Per-model hooks fire unjournaled here; [[Retry.run]] is the
+  * journaled run over this Runner that `graft.Main`'s `run` and `retry`
+  * go through.
   */
 final case class Runner(mat: Materializer, sources: String => DataFrame,
     fullRefresh: Boolean = false, threads: Int = 1,
@@ -37,10 +41,11 @@ final case class Runner(mat: Materializer, sources: String => DataFrame,
 
   private def runModel(model: Model,
       resolve: String => DataFrame): DataFrame = {
-    // fired IMMEDIATELY before the materialization — the journaling
-    // run records its pre-write intent here, so the intent marks
-    // exactly the models that may be written-but-unjournaled after a
-    // crash (never the ones the run hadn't reached)
+    // fired IMMEDIATELY before the model's hooks and materialization —
+    // the journaled run ([[Retry.run]]) records its pre-write intent
+    // here, so the intent marks exactly the models that may be
+    // written-but-unjournaled after a crash (never the ones the run
+    // hadn't reached)
     onModelStart(model.name)
     val t0 = System.nanoTime()
     // per-model hooks bracket the materialization (dbt pre_hook /
@@ -49,20 +54,23 @@ final case class Runner(mat: Materializer, sources: String => DataFrame,
     // sees the freshly written target (grants, audit rows)
     model.preHooks.foreach(_.action())
     val out = mat.run(model, resolve, fullRefresh)
-    model.postHooks.foreach(_.action())
-    // dbt-style per-model timing; called from submitter threads under
-    // `threads > 1`, so collectors must be thread-safe
+    // the model is done once its table is written: its seconds cover
+    // the pre-hooks and the build, and the journaled run commits the
+    // model here, so a post-hook that throws leaves it journaled.
+    // Called from submitter threads under `threads > 1`, so collectors
+    // must be thread-safe.
     onModelDone(model.name, (System.nanoTime() - t0) / 1e9)
+    model.postHooks.foreach(_.action())
     out
   }
 
   /** Run every model in topological order; returns name → output.
     * `on-run-start` hooks fire before the first model, `on-run-end`
     * hooks after the last completes (dbt_project.yml lifecycle hooks
-    * — the reference bootstraps its `raw_edu` DDL this way). Hooks
-    * attach to FULL runs only: a selected subset (`runSelected`, the
-    * CI closure path) is dbt's `--select`, which still fires hooks in
-    * dbt but here the CI caller owns its own setup.
+    * — the reference bootstraps its `raw_edu` DDL this way). These
+    * run-level hooks attach to FULL runs only: a selected subset
+    * (`runSelected`, the CI closure path) is dbt's `--select`, which
+    * still fires hooks in dbt but here the caller owns its own setup.
     */
   def runAll(graph: ModelGraph): Map[String, DataFrame] = {
     hooks.onRunStart.foreach(_.action())
@@ -120,12 +128,48 @@ final case class Runner(mat: Materializer, sources: String => DataFrame,
   }
 }
 
-/** A run-lifecycle hook (dbt `on-run-start` / `on-run-end`,
+object Runner {
+
+  /** dbt `--defer`, the resolver for every ref a run does not build: a
+    * model reads its warehouse state in its unsuffixed schema (views
+    * compose their plan in place), any other name is a raw source. The
+    * resolution `dbt ls --select modified+ --defer` sets up (reference:
+    * src/dbt_incremental_ci/dbt_helper.py:29-86).
+    */
+  def deferResolve(graph: ModelGraph, wh: Warehouse,
+      srcs: String => DataFrame): String => DataFrame = {
+    // memoized: CI's early-cutoff walk and its build resolve the same
+    // prod tables and sources, and each read is a footer read plus a
+    // listing. The walk and the Runner resolve from several threads, so
+    // each name gets one holder whose lazy value resolves it once; a
+    // view's refs resolve through other holders, never inside the map.
+    val memo = scala.collection.concurrent.TrieMap.empty[String, Once]
+    final class Once(name: String) { lazy val df: DataFrame = resolved(name) }
+    def resolve(name: String): DataFrame = memo.getOrElseUpdate(name, new Once(name)).df
+    def resolved(name: String): DataFrame = graph.byName.get(name) match {
+      case Some(m) =>
+        m.materialization match {
+          case Materialization.View =>
+            m.transform(new ModelCtx {
+              def source(n: String): DataFrame = resolve(n)
+              def ref(n: String): DataFrame = resolve(n)
+              def thisTable: Option[DataFrame] = None
+            })
+          case _ => wh.read(m.schema, m.name)
+        }
+      case None => srcs(name)
+    }
+    resolve
+  }
+}
+
+/** A lifecycle hook: run-level (dbt `on-run-start` / `on-run-end`,
   * dbt_project.yml — the reference uses on-run-start to bootstrap its
-  * `raw_edu` source DDL before any model runs). `body` stands in for
-  * the hook's SQL text: its hash is the journal checksum, so a
-  * retried run skips completed-and-unchanged hooks exactly as it
-  * skips models ([[Retry.run]]), and an EDITED hook re-fires.
+  * `raw_edu` source DDL before any model runs) or per-model
+  * (`Model.preHooks` / `postHooks`). `body` stands in for the hook's
+  * SQL text: its hash is the journal checksum, so a journaled run
+  * ([[Retry.run]]) skips completed-and-unchanged hooks exactly as it
+  * skips models, and an EDITED hook re-fires.
   */
 final case class Hook(name: String, body: String, action: () => Unit) {
   def checksum: String = Checksum.md5(name + "|" + body)

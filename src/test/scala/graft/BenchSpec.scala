@@ -42,4 +42,14 @@ class BenchSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(plan.flatMap(_.sketchKey) == keys("sketch_probe") ++
       Seq("1x", "10x", "100x", "200x").map(t => s"d02_decade_$t"))
   }
+
+  test("only the board's own configuration overwrites the tracked board") {
+    val out = "/tmp/graft_bench.json"
+    assert(Bench.outFiles(Map.empty) == Seq(out, Bench.boardFile))
+    assert(Bench.outFiles(Map("SPARK_GRAFT_SF_DIR" -> Bench.sfDirOf(Map.empty),
+      "SPARK_GRAFT_BENCH_OUT" -> "b.json")) == Seq("b.json", Bench.boardFile))
+    for (kv <- Seq("SPARK_GRAFT_BENCH_ONLY" -> "d02_dedup_minhash",
+        "SPARK_GRAFT_SF_DIR" -> "testdata/sf0.01", "SPARK_GRAFT_SCALE10X" -> "0"))
+      assert(Bench.outFiles(Map(kv, "SPARK_GRAFT_BENCH_OUT" -> "b.json")) == Seq("b.json"), kv)
+  }
 }

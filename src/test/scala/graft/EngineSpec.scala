@@ -1138,6 +1138,40 @@ class EngineSpec extends SparkSpec {
       s"$ran2 / $skipped2")
   }
 
+  test("threaded retry: threads 1 and 4 give the same journal, (ran, skipped) and tables") {
+    val src = df(Seq((1L, "a", 1), (2L, "b", 2), (3L, "c", 3)))
+    val noSrc: String => org.apache.spark.sql.DataFrame =
+      n => fail(s"unexpected source '$n'")
+    def crashAndRetry(threads: Int) = {
+      val wh = freshWh(s"retry_diamond_t$threads")
+      val mat = Materializer(wh)
+      @volatile var boom = true
+      // a diamond: b and c both read a, d joins them. c fails while its
+      // sibling branch b can run beside it.
+      val graph = ModelGraph(Seq(
+        Model("a", Nil, Materialization.Table, _ => src),
+        Model("b", Seq("a"), Materialization.Table,
+          ctx => ctx.ref("a").filter(col("wm") > 1)),
+        Model("c", Seq("a"), Materialization.Table, ctx => {
+          if (boom) throw new RuntimeException("planted mid-run failure")
+          ctx.ref("a").filter(col("wm") < 3) }),
+        Model("d", Seq("b", "c"), Materialization.Table,
+          ctx => ctx.ref("b").unionByName(ctx.ref("c")))))
+      intercept[RuntimeException](Retry.run(graph, mat, noSrc, wh, threads = threads))
+      val journal = Retry.loadJournal(wh)
+      boom = false
+      val ranSkipped = Retry.run(graph, mat, noSrc, wh, threads = threads)
+      val tables = graph.topoOrder.map(n =>
+        n -> wh.read("analytics", n).collect().map(_.toString).sorted.toSeq)
+      (journal, ranSkipped, tables)
+    }
+    val one = crashAndRetry(1)
+    assert(one._1.keySet == Set("a", "b"), one._1)
+    assert(one._2 == ((Seq("c", "d"), Seq("a", "b"))), one._2)
+    assert(one._3.last._2.size == 4)
+    assert(crashAndRetry(4) == one)
+  }
+
   test("model contracts: conforming model builds, drifted schema fails before anything writes") {
     val wh = freshWh("contract")
     val mat = Materializer(wh)

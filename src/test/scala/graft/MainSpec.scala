@@ -714,6 +714,23 @@ class MainSpec extends SparkSpec {
     assert(jdbc.count("analytics_ci", "mart_recent_buyers") == rs.head.rows)
   }
 
+  test("hooks journal the same under run as under retry: a pre-hook fires once across a crash") {
+    val whRoot = graft.core.Scratch.dir("mainhookretry").toString
+    val cfg = CliConfig(command = "run", sfDir = sfDir, warehouseRoot = whRoot, slices = 3)
+    var fires = 0
+    @volatile var boom = true
+    val graph = ModelGraph(Seq(Model("t", Seq("nation"), graft.core.Materialization.Table,
+      ctx => { if (boom) sys.error("planted failure"); ctx.source("nation") },
+      body = "t", preHooks = Seq(Hook("pre_grant", "grant-ish ddl", () => fires += 1)))))
+    intercept[RuntimeException](Main.run(spark, cfg, graph))
+    boom = false
+    val w = wh(whRoot)
+    val (ran, skipped) =
+      graft.core.Retry.run(graph, Materializer(w), Main.sources(spark, cfg), w)
+    assert(fires == 1, s"the pre-hook fired $fires times")
+    assert(ran == Seq("t") && skipped == Seq("t.pre_grant"), s"$ran / $skipped")
+  }
+
   test("run journals each model; retry skips journaled-and-unchanged models") {
     val whRoot = graft.core.Scratch.dir("mainretry").toString
     val cfg = CliConfig(command = "run", sfDir = sfDir, warehouseRoot = whRoot,
