@@ -35,15 +35,17 @@ object Dedup {
     * next to the accumulated corpus (GBs vs 100 TB), and a plain
     * anti-join would shuffle the 100 TB side on digest. Instead a
     * Bloom filter is built over the BATCH digests (one distributed
-    * pass over the small side; `expectedItems`·~10 bits however large
-    * the corpus is), the corpus is scanned ONCE and filtered to
+    * aggregate over the small side; `expectedItems`·~10 bits however
+    * large the corpus is), the corpus is scanned ONCE and filtered to
     * digests that might be in the batch — fpp·|corpus| + true
-    * overlaps survive — and that sliver broadcasts into an exact
-    * anti-join. Bloom false positives only add rows to the broadcast
-    * sliver; they match no batch digest, so the result is EXACT (and
-    * oracle-gated as d11). No false negatives: every corpus digest
-    * equal to a batch digest passes `mightContain` by construction.
-    * Within-batch duplicates collapse keep-first like [[exact]].
+    * overlaps survive — and that sliver is grouped together WITH the
+    * batch on digest: one shuffle of batch + sliver rows, in which a
+    * group holding any sliver row is a corpus hit and is dropped.
+    * Bloom false positives only add sliver rows to groups that hold no
+    * batch row, so the result is EXACT (and oracle-gated as d11). No
+    * false negatives: every corpus digest equal to a batch digest
+    * passes the probe by construction. Within-batch duplicates
+    * collapse keep-first like [[exact]].
     *
     * `digest` canonicalizes before hashing — full text by default;
     * crawl pipelines commonly key on a prefix hash (near-exact dup
@@ -65,36 +67,39 @@ object Dedup {
   def incrementalAgainstDigests(newBatch: DataFrame, digests: DataFrame,
       digest: org.apache.spark.sql.Column,
       expectedItems: Long = 1 << 20, fpp: Double = 0.01): DataFrame = {
-    val newH = newBatch.select(col("doc_id"), digest.as("content_hash"))
+    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+    val newH = newBatch.select(col("doc_id"), digest.as("content_hash"),
+      lit(false).as("seen"))
     // The probe runs on the CORPUS-sized digest scan — at 100 TB that
     // scan IS the job, so it must stay inside whole-stage codegen. A
     // Scala UDF would pay per-row ser/de there; instead the filter is
     // built over xxhash64(content_hash) longs and probed through
-    // Catalyst's own codegen'd BloomFilterMightContain (the engine of
-    // q35's runtime-filter injection), fed as a Literal bloom. An
-    // xxhash64 collision only ADDS a sliver row (it matches no batch
-    // digest in the exact anti-join below); equal digests always
-    // collide, so no false negatives — exactness is unchanged.
-    val bf = newH.select(xxhash64(col("content_hash")).as("h"))
-      .stat.bloomFilter("h", expectedItems, fpp)
-    val bfBytes = {
-      val bos = new java.io.ByteArrayOutputStream()
-      bf.writeTo(bos)
-      bos.toByteArray
-    }
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    val mightMatch = ColumnBridge.column(
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        org.apache.spark.sql.catalyst.expressions.Literal
-          .create(bfBytes, BinaryType),
-        ColumnBridge.expression(xxhash64(col("content_hash")))))
+    // Catalyst's own codegen'd BloomFilterMightContain, fed by a scalar
+    // subquery over BloomFilterAggregate — Spark's own runtime-filter
+    // shape. The filter is built inside the query (no eager job) and
+    // never becomes a plan literal. An xxhash64 collision only ADDS a
+    // sliver row (a group with no batch row, which the grouping below
+    // drops); equal digests always collide, so no false negatives.
+    val h = expression(xxhash64(col("content_hash")))
+    val bloom = newH.select(column(new BloomFilterAggregate(h,
+        Literal(expectedItems), Literal(org.apache.spark.util.sketch
+          .BloomFilter.optimalNumOfBits(expectedItems, fpp)))
+      .toAggregateExpression())).scalar()
+    // a null digest never matches, as in an anti-join
     val sliver = digests
-      .select(col("content_hash"))
-      .filter(mightMatch)
-      .distinct()
-    newH.join(broadcast(sliver), Seq("content_hash"), "left_anti")
+      .filter(col("content_hash").isNotNull &&
+        column(BloomFilterMightContain(expression(bloom), h)))
+      .select(lit(null).cast(newH.schema("doc_id").dataType).as("doc_id"),
+        col("content_hash"), lit(true).as("seen"))
+    // the anti-join folded into the keep-first grouping: a kept group
+    // holds batch rows only, so count(1) is its batch copy count
+    newH.unionByName(sliver)
       .groupBy("content_hash")
-      .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_copies"))
+      .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_copies"),
+        max("seen").as("seen"))
+      .filter(!col("seen"))
       .select("doc_id", "content_hash", "n_copies")
   }
 

@@ -485,8 +485,8 @@ object DedupQueries extends QDsl {
   // d11 — incremental ingest dedup: the new batch (md5 doc_id bucket
   // >= 'c', ~25%) dedups against the accumulated corpus (the other
   // ~75%) via a Bloom filter built over the BATCH digests — the
-  // corpus side is scanned once, never shuffled, and only the
-  // fpp-sized sliver broadcasts into the exact anti-join (see
+  // corpus side is scanned once, never shuffled whole, and only the
+  // fpp-sized sliver is grouped with the batch on digest (see
   // Dedup.incremental). Result is exact despite the approximate
   // prefilter, so it is oracle-gated like d01. Digest = 64-char
   // prefix hash (the crawl-pipeline canonicalization: near-exact dup

@@ -232,8 +232,11 @@ object Streaming {
     * this to the landing window: bytes / bytesPerPartition, floored
     * at 1, capped at the session's configured shuffle partitions so
     * a genuinely large window keeps the cluster's parallelism. The
-    * derivation is deterministic from the landing files, so every
-    * restart of a memoized checkpoint re-derives the identical value.
+    * bytes are summed over the data files [[ParquetFooters.dataFiles]]
+    * lists (the listing the warehouse reads with; no recursive content
+    * summary). The derivation is deterministic from the landing files,
+    * so every restart of a memoized checkpoint re-derives the identical
+    * value.
     */
   private[graft] def streamShufflePartitions(
       spark: org.apache.spark.sql.SparkSession, landing: String*): Int = {
@@ -241,12 +244,8 @@ object Streaming {
       .getOption("spark.graft.stream.bytesPerShufflePartition")
       .map(_.toLong).getOrElse(32L << 20)
     val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val bytes = landing.map { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) 0L
-      else fs.getContentSummary(p).getLength
-    }.sum
+    val bytes = landing.map(d => ParquetFooters
+      .dataFiles(spark.sparkContext.hadoopConfiguration, d).map(_.getLen).sum).sum
     math.max(1, math.min(session.toLong,
       (bytes + perPart - 1) / perPart).toInt)
   }
@@ -326,23 +325,43 @@ object Streaming {
     }
   }
 
-  /** Land `slice` as the single file `<landing>/<name>.parquet` with
-    * modification time `mtime`. The file source admits files
-    * oldest-first, so the mtimes fix the micro-batch order the
-    * ordered-arrival entries (e11, e15, e16, e17) depend on for oracle
-    * equivalence — fail loudly on a filesystem that cannot set them
-    * rather than let the stream take the files in an arbitrary order.
+  /** Land each `(slice, name, mtime)` as the single file
+    * `<landing>/<name>.parquet` with modification time `mtime`, all in
+    * one write: the slices are unioned, each coalesced to one partition,
+    * so part `i` of the write is slice `i`. An empty slice past the
+    * first writes no part, so it lands alone as a schema-only file. The
+    * file source admits files oldest-first, so the mtimes fix the
+    * micro-batch order the ordered-arrival entries (e11, e15, e16, e17)
+    * depend on for oracle equivalence — fail loudly on a filesystem that
+    * cannot set them rather than let the stream take the files in an
+    * arbitrary order.
     */
-  private def landFile(slice: DataFrame, landing: Path, name: String,
-      mtime: Long): Unit = {
-    val stage = Scratch.dir(s"stage_$name")
-    slice.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-    val part = Files.list(stage).iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet")).get
-    val dst = landing.resolve(s"$name.parquet")
-    Files.move(part, dst)
-    require(dst.toFile.setLastModified(mtime),
-      s"could not set mtime on $dst; the stream needs ordered file arrival")
+  private[graft] def landFiles(landing: Path,
+      slices: (DataFrame, String, Long)*): Unit = {
+    val stage = Scratch.dir(s"stage_${slices.head._2}")
+    // a union of single-partition children otherwise keeps their
+    // SinglePartition and zips them into ONE partition
+    withConfs(slices.head._1.sparkSession, "spark.sql.unionOutputPartitioning" -> "false") {
+      slices.map(_._1.coalesce(1)).reduce(_ unionByName _)
+        .write.mode("overwrite").parquet(stage.toString)
+    }
+    val Part = """part-(\d+)-.*\.parquet""".r
+    val parts = Files.list(stage).iterator().asScala.flatMap { p =>
+      p.getFileName.toString match {
+        case Part(i) => Some(i.toInt -> p)
+        case _ => None
+      }
+    }.toMap
+    slices.zipWithIndex.foreach { case ((slice, name, mtime), i) =>
+      parts.get(i) match {
+        case Some(part) =>
+          val dst = landing.resolve(s"$name.parquet")
+          Files.move(part, dst)
+          require(dst.toFile.setLastModified(mtime),
+            s"could not set mtime on $dst; the stream needs ordered file arrival")
+        case None => landFiles(landing, (slice.limit(0), name, mtime))
+      }
+    }
     Scratch.remove(stage)
   }
 
@@ -388,9 +407,9 @@ object Streaming {
     * for both. */
   private def landJoinSentinels(raw: DataFrame, landing: Path): Unit = {
     val maxTs = raw.agg(max(col("ts"))).head.get(0)
-    for (i <- 1 to 2)
-      landFile(sentinelFrame(raw, maxTs, Seq("view", "purchase"), i), landing,
-        s"b_sentinel$i", 1700000000000L + i * 60000L)
+    landFiles(landing, (1 to 2).map(i =>
+      (sentinelFrame(raw, maxTs, Seq("view", "purchase"), i),
+        s"b_sentinel$i", 1700000000000L + i * 60000L)): _*)
   }
 
   // e08 — STREAM-STREAM time-bound join, run through the real
@@ -526,10 +545,10 @@ object Streaming {
   // e11 — streaming ingest dedup: the CONTINUOUS form of d11. The
   // corpus persists as a digest table; each arriving micro-batch
   // admits only novel documents (Bloom prefilter over the batch →
-  // sliver broadcast → exact anti-join, IngestDedup.step) and appends
-  // their digests, so an admitted doc blocks every later copy —
-  // first-batch-wins across batches, keep-first within. The ingest
-  // is staged as three doc_id-ranged files arriving oldest-first
+  // corpus sliver grouped with the batch on digest, IngestDedup.step)
+  // and appends their digests, so an admitted doc blocks every later
+  // copy — first-batch-wins across batches, keep-first within. The
+  // ingest is staged as three doc_id-ranged files arriving oldest-first
   // (one micro-batch each via maxFilesPerTrigger=1), which makes
   // sequential first-wins equal the oracle's global min-doc_id rule.
   val e11: Q = Q("e11_stream_ingest_dedup", (spark, dir) => {
@@ -553,12 +572,12 @@ object Streaming {
         .head.getSeq[Long](0)
       // arrival order == slice order: the oracle equivalence (global
       // min-doc_id == sequential first-batch-wins) depends on it
-      Seq(batch.filter(col("doc_id") <= bounds(0)),
+      landFiles(landing, Seq(batch.filter(col("doc_id") <= bounds(0)),
           batch.filter(col("doc_id") > bounds(0) && col("doc_id") <= bounds(1)),
           batch.filter(col("doc_id") > bounds(1)))
-        .zipWithIndex.foreach { case (s, i) =>
-          landFile(s, landing, s"b$i", 1700000000000L + i * 60000L)
-        }
+        .zipWithIndex.map { case (s, i) =>
+          (s, s"b$i", 1700000000000L + i * 60000L)
+        }: _*)
       wh.root
     }
     val wh = Warehouse(spark, fx.sink)
@@ -779,13 +798,13 @@ object Streaming {
       // filters against batch 0's far-future stats (+10 days − 1 h) —
       // every late row's window closed long ago, the same provable drop
       // set as before.
-      landFile(raw.filter(col("event_id") % 3 =!= 0)
+      landFiles(landing,
+        (raw.filter(col("event_id") % 3 =!= 0)
           .unionByName(sentinelFrame(raw, maxTs, Seq("sentinel"), 1)),
-        landing, "a_events", 1700000000000L)
-      landFile(sentinelFrame(raw, maxTs, Seq("sentinel"), 2), landing,
-        "b_sentinel2", 1700000120000L)
-      landFile(raw.filter(col("event_id") % 3 === 0), landing, "d_late",
-        1700000150000L)
+          "a_events", 1700000000000L),
+        (sentinelFrame(raw, maxTs, Seq("sentinel"), 2), "b_sentinel2",
+          1700000120000L),
+        (raw.filter(col("event_id") % 3 === 0), "d_late", 1700000150000L))
       Scratch.dir("e15_out").toString
     }
     // one file per trigger over the THREE landing files (sentinel 1
@@ -845,10 +864,10 @@ object Streaming {
         .select(expr(
           "percentile(unix_micros(cast(ts as timestamp)), array(0.34D, 0.67D))"))
         .first().getSeq[Double](0)
-      landFile(norm.filter(em < b(0)), landing, "b1", 1700000000000L)
-      landFile(norm.filter(em >= b(0) && em < b(1)), landing, "b2",
-        1700000001000L)
-      landFile(norm.filter(em >= b(1)), landing, "b3", 1700000002000L)
+      landFiles(landing,
+        (norm.filter(em < b(0)), "b1", 1700000000000L),
+        (norm.filter(em >= b(0) && em < b(1)), "b2", 1700000001000L),
+        (norm.filter(em >= b(1)), "b3", 1700000002000L))
       MergeOnRead.init(wh, "analytics", "user_mor",
         EventStream.latestPerUserCdc(norm.limit(0)).drop("op"))
       wh.root
@@ -902,11 +921,12 @@ object Streaming {
         .select(col("user_id")).distinct()
         .select(lit(-1L).as("event_id"), col("user_id"),
           lit("erase").as("kind"), lit(0L).as("vmicros"))
-      landFile(rec.filter(col("event_id") % 2 === 0).drop("event_id"),
-        landing, "a_events", 1700000000000L)
-      landFile(tomb.drop("event_id"), landing, "b_tombstones", 1700000001000L)
-      landFile(rec.filter(col("event_id") % 2 =!= 0).drop("event_id"),
-        landing, "c_events", 1700000002000L)
+      landFiles(landing,
+        (rec.filter(col("event_id") % 2 === 0).drop("event_id"), "a_events",
+          1700000000000L),
+        (tomb.drop("event_id"), "b_tombstones", 1700000001000L),
+        (rec.filter(col("event_id") % 2 =!= 0).drop("event_id"), "c_events",
+          1700000002000L))
       wh.root
     }
     val wh = Warehouse(spark, fx.sink)
@@ -1059,8 +1079,9 @@ object Streaming {
   // EXACTLY-ONCE with a left-anti join against the table's own
   // event_ids (order-free across micro-batches — unlike a max-ts
   // watermark append, out-of-order landing files cannot drop new
-  // rows), frozen via localCheckpoint before the append so the write
-  // never scans its own output (IngestDedup's discipline). Landing
+  // rows). The append needs no freeze: the read fixes the table's
+  // file listing when the plan is built, and the event_id scan runs
+  // before the write commits, so it never sees its own output. Landing
   // files split by event_id stripe so EVERY micro-batch carries both
   // seam duplicates and novel rows. The oracle states the invariant
   // declaratively: the unified table is every event exactly once.
@@ -1072,12 +1093,10 @@ object Streaming {
       val norm = Catalog(spark, dir).events
       wh.write(norm.filter(col("ts") < histEnd), "analytics", "events_unified")
       val live = norm.filter(col("ts") >= streamStart)
-      landFile(live.filter(col("event_id") % 3 === 0), landing, "a_stripe",
-        1700000000000L)
-      landFile(live.filter(col("event_id") % 3 === 1), landing, "b_stripe",
-        1700000001000L)
-      landFile(live.filter(col("event_id") % 3 === 2), landing, "c_stripe",
-        1700000002000L)
+      landFiles(landing,
+        (live.filter(col("event_id") % 3 === 0), "a_stripe", 1700000000000L),
+        (live.filter(col("event_id") % 3 === 1), "b_stripe", 1700000001000L),
+        (live.filter(col("event_id") % 3 === 2), "c_stripe", 1700000002000L))
       wh.root
     }
     val wh = Warehouse(spark, fx.sink)
@@ -1095,7 +1114,6 @@ object Streaming {
       stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
         val seen = wh.read("analytics", "events_unified").select("event_id")
         val fresh = batch.join(seen, Seq("event_id"), "left_anti")
-          .localCheckpoint(true)
         wh.write(fresh, "analytics", "events_unified", mode = "append")
         ()
       })

@@ -1164,7 +1164,7 @@ class LlmOpsSpec extends SparkSpec {
   test("d11 incremental dedup: Bloom prefilter is invisible in the result (exact vs plain anti-join)") {
     // split the corpus like the registered entry and compare against
     // the Bloom-free form: batch hashes anti-joined to ALL existing
-    // hashes. Bloom fpp only widens the broadcast sliver — any
+    // hashes. Bloom fpp only widens the corpus sliver — any
     // difference here means a false NEGATIVE, which the filter
     // guarantees cannot happen.
     val bucket = substring(md5(col("doc_id").cast("string").cast("binary")), 1, 1)

@@ -652,6 +652,51 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("incrementalAgainstDigests == brute-force left_anti + groupBy, with no broadcast and no large plan literal") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    // few texts and some nulls, so in-batch and corpus dups are common
+    val textGen: Gen[Option[String]] =
+      Gen.frequency(1 -> Gen.const(None), 6 -> Gen.oneOf("a", "b", "c", "d", "e", "f").map(Some(_)))
+    val batchGen = Gen.choose(0, 25).flatMap(n => Gen.listOfN(n, textGen))
+    val digest = md5(col("text").cast("binary"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (Option(r.get(0)), Option(r.getString(1)), r.getLong(2))).toSet
+    object Plans extends AdaptiveSparkPlanHelper
+    val cases = (Nil, List(Some("a"), None)) +:
+      (1 to 8).map(i => (sample(batchGen, 1100 + i), sample(batchGen, 1200 + i)))
+    for (((texts, corpusTexts), i) <- cases.zipWithIndex) {
+      val batch = texts.zipWithIndex.map { case (t, j) => (100L + (j * 7) % 31, t) }
+        .toDF("doc_id", "text")
+      val corpus = corpusTexts.toDF("text").select(digest.as("content_hash"))
+      val want = batch.select(col("doc_id"), digest.as("content_hash"))
+        .join(corpus, Seq("content_hash"), "left_anti")
+        .groupBy("content_hash")
+        .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_copies"))
+        .select("doc_id", "content_hash", "n_copies")
+      // a tiny filter on odd cases: false positives everywhere, still exact
+      val got =
+        if (i % 2 == 1) graft.operators.Dedup.incrementalAgainstDigests(batch, corpus, digest,
+          expectedItems = 4, fpp = 0.5)
+        else graft.operators.Dedup.incrementalAgainstDigests(batch, corpus, digest)
+      assert(rows(got) == rows(want), s"case $i")
+      val plan = got.queryExecution.executedPlan
+      assert(Plans.collectWithSubqueries(plan) {
+        case j: BroadcastHashJoinExec => j
+        case b: BroadcastExchangeExec => b
+      }.isEmpty, s"case $i broadcasts:\n$plan")
+      val literalBytes = Plans.collectWithSubqueries(plan) { case p => p }
+        .flatMap(_.expressions.flatMap(_.collect {
+          case Literal(b: Array[Byte], _) => b.length
+          case Literal(s: org.apache.spark.unsafe.types.UTF8String, _) => s.numBytes
+        }))
+      assert(literalBytes.forall(_ <= 1024), s"case $i holds a plan literal over 1 KB")
+    }
+  }
+
   test("Quota.foldDecisions: ANY ts-ordered split of a random event set folds to the batch window form, chunk by chunk") {
     import spark.implicits._
     import graft.streaming.Quota

@@ -548,19 +548,41 @@ class StreamingSpec extends SparkSpec {
     wh.write(Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
       .select(col("doc_id"), digest.as("content_hash")),
       "analytics", "corpus")
+    // a step freezes nothing: no RDD stays persisted behind it
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    def nothingPersisted(): Unit =
+      assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
+        "a step left an RDD persisted")
+    def step(batch: org.apache.spark.sql.DataFrame): Long = {
+      val admitted = IngestDedup.step(wh, "analytics", "corpus", batch, digest)
+      nothingPersisted()
+      admitted
+    }
     // batch 1: one corpus dup (dropped), one in-batch dup pair (keep
     // min id), one novel doc
     val b1 = Seq((10L, "alpha"), (11L, "gamma"), (12L, "gamma"),
       (13L, "delta")).toDF("doc_id", "text")
     assert(IngestDedup.step(wh, "analytics", "corpus", b1, digest) == 2L)
+    nothingPersisted()
     // batch 2: dups of batch-1 ADMISSIONS (blocked by accumulated
     // state, not by the original corpus), plus one novel doc
     val b2 = Seq((20L, "gamma"), (21L, "delta"), (22L, "epsilon"))
       .toDF("doc_id", "text")
     assert(IngestDedup.step(wh, "analytics", "corpus", b2, digest) == 1L)
+    nothingPersisted()
+    // batch 3: only known digests, from the corpus and from admissions
+    val b3 = Seq((30L, "alpha"), (31L, "epsilon"), (32L, "gamma"))
+      .toDF("doc_id", "text")
+    assert(step(b3) == 0L)
+    // a null-text doc has a null digest, which matches nothing — not
+    // even the null digest an earlier step admitted
+    val nullDoc = Seq((40L, "zeta")).toDF("doc_id", "text")
+      .select(col("doc_id"), lit(null).cast("string").as("text"))
+    assert(step(nullDoc) == 1L)
+    assert(step(nullDoc.select(lit(41L).as("doc_id"), col("text"))) == 1L)
     val ids = wh.read("analytics", "corpus")
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(ids == Set(1L, 2L, 11L, 13L, 22L), s"got $ids")
+    assert(ids == Set(1L, 2L, 11L, 13L, 22L, 40L, 41L), s"got $ids")
   }
 
   test("stream erasure is order-free: before / same-batch / after the tombstone all erase") {
@@ -1124,6 +1146,45 @@ class StreamingSpec extends SparkSpec {
       spark.conf.unset(confKey)
       graft.core.Scratch.remove(dir)
     }
+  }
+
+  test("landFiles: N slices land in one Spark job, one file per slice, mtimes ascending") {
+    import scala.jdk.CollectionConverters._
+    val ids = spark.range(0L, 300L).toDF("id")
+    def landed(landing: java.nio.file.Path): Seq[java.nio.file.Path] =
+      java.nio.file.Files.list(landing).iterator().asScala.toSeq
+        .sortBy(_.getFileName.toString)
+    def rows(f: java.nio.file.Path): Set[Long] =
+      spark.read.parquet(f.toString).collect().map(_.getLong(0)).toSet
+    val landing = graft.core.Scratch.dir("landfiles")
+    val group = s"landfiles-${System.nanoTime()}"
+    spark.sparkContext.setJobGroup(group, group)
+    try graft.queries.Streaming.landFiles(landing, (0 until 3).map(i =>
+        (ids.filter(col("id") % 3 === i), s"s$i", 1700000000000L + i * 1000L)): _*)
+    finally spark.sparkContext.clearJobGroup()
+    assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).length == 1)
+    val files = landed(landing)
+    assert(files.map(_.getFileName.toString) == Seq("s0.parquet", "s1.parquet", "s2.parquet"))
+    files.zipWithIndex.foreach { case (f, i) =>
+      assert(rows(f) == (0L until 300L).filter(_ % 3 == i).toSet, s"slice $i")
+      assert(f.toFile.lastModified == 1700000000000L + i * 1000L, s"mtime of slice $i")
+    }
+    // an empty slice still lands a file, schema and all
+    val withEmpty = graft.core.Scratch.dir("landfiles_empty")
+    graft.queries.Streaming.landFiles(withEmpty,
+      (ids.filter(col("id") < 10L), "a", 1700000000000L),
+      (ids.filter(col("id") < 0L), "b", 1700000001000L),
+      (ids.filter(col("id") >= 290L), "c", 1700000002000L))
+    val three = landed(withEmpty)
+    assert(three.map(_.getFileName.toString) == Seq("a.parquet", "b.parquet", "c.parquet"))
+    assert(three.map(rows) == Seq((0L until 10L).toSet, Set.empty[Long],
+      (290L until 300L).toSet))
+    assert(spark.read.parquet(three(1).toString).schema.map(f => f.name -> f.dataType) ==
+      Seq("id" -> org.apache.spark.sql.types.LongType))
+    assert(three.map(_.toFile.lastModified) ==
+      Seq(1700000000000L, 1700000001000L, 1700000002000L))
+    graft.core.Scratch.remove(landing)
+    graft.core.Scratch.remove(withEmpty)
   }
 
   test("RddBridge.checkpointBytes: frozen blocks report bytes, unfrozen report unknown") {
