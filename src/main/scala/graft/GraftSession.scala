@@ -11,7 +11,9 @@ import org.apache.spark.sql.SparkSession
   *    [[graft.sources.Catalog]] and every oracle assume it;
   *  - `spark.sql.legacy.parquet.nanosAsLong=true`, so INT64-nanos
   *    timestamps read as raw longs (the encoding the oracle relies on);
-  *  - no Spark UI, and the warehouse dir under the JVM tmpdir.
+  *  - no Spark UI, and the warehouse dir under the JVM tmpdir;
+  *  - `file:` paths go through [[graft.io.ForkFreeLocalFs]], which
+  *    starts no `chmod` or `readlink` process per file.
   */
 object GraftSession {
 
@@ -36,6 +38,7 @@ object GraftSession {
         s"${System.getProperty("java.io.tmpdir")}/graft_spark_warehouse")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
+    graft.io.ForkFreeLocalFs.install(s)
     s
   }
 

@@ -14,8 +14,16 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFooters
   * takes its schema from one footer, [[rowCount]] sums row-group
   * counts over every footer and [[footerMax]] reads row-group
   * statistics, so none of them launches a Spark job.
+  *
+  * Building one installs graft's `file:` filesystem on `spark`
+  * ([[graft.io.ForkFreeLocalFs.install]]; idempotent), so a local
+  * warehouse starts no `chmod` process per file or directory it
+  * creates and no `readlink` process per streaming-checkpoint rename,
+  * whoever built the session. Other schemes are untouched.
   */
 final case class Warehouse(spark: SparkSession, root: String) {
+  graft.io.ForkFreeLocalFs.install(spark)
+
   def path(schema: String, table: String): String = s"$root/$schema/$table"
 
   private def fs(p: org.apache.hadoop.fs.Path) =
@@ -244,22 +252,34 @@ final case class Warehouse(spark: SparkSession, root: String) {
   /** Small driver-side artifacts (the CI manifest, run metadata)
     * persisted beside the data under `<root>/_artifacts/` — the same
     * Hadoop FS layer as the tables, so on a cluster they land on the
-    * object store, not a local disk. Atomic via write-tmp + rename.
+    * object store, not a local disk. Committed in the tables' order:
+    * the content is written to `<name>.__tmp`, the live file moves
+    * aside to `<name>.__old`, the temp file takes its place, and the
+    * backup is dropped. A crash at any point leaves the old or the new
+    * content: a backup with no live file is restored by [[loadArtifact]],
+    * [[vacuum]] and the next save.
     */
   def saveArtifact(name: String, content: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/_artifacts/$name")
-    val tmp = new org.apache.hadoop.fs.Path(s"$root/_artifacts/$name.__tmp")
+    val p = artifactPath(name)
+    val tmp = artifactPath(name + ".__tmp")
+    val old = artifactPath(name + ".__old")
     val f = fs(p)
+    val had = healArtifact(f, p, old)
+    // past the heal, a backup beside the live file is a completed
+    // commit's leftover
+    if (f.exists(old)) f.delete(old, false)
     val out = f.create(tmp, true)
     try out.write(content.getBytes("UTF-8")) finally out.close()
-    if (f.exists(p)) f.delete(p, false)
-    require(f.rename(tmp, p), s"could not commit artifact $name")
+    if (had) require(f.rename(p, old), s"could not move artifact $name aside")
+    require(f.rename(tmp, p),
+      s"could not commit artifact $name; previous content intact at $old")
+    if (had) { f.delete(old, false); () }
   }
 
   def loadArtifact(name: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/_artifacts/$name")
+    val p = artifactPath(name)
     val f = fs(p)
-    if (!f.exists(p)) None
+    if (!healArtifact(f, p, artifactPath(name + ".__old"))) None
     else {
       val in = f.open(p)
       try {
@@ -271,6 +291,17 @@ final case class Warehouse(spark: SparkSession, root: String) {
       } finally in.close()
     }
   }
+
+  private def artifactPath(name: String) =
+    new org.apache.hadoop.fs.Path(s"$root/_artifacts/$name")
+
+  /** The artifact-level [[heal]]: true when the live file exists,
+    * after restoring the `.__old` backup a crash between
+    * [[saveArtifact]]'s two renames left as the only copy.
+    */
+  private def healArtifact(f: org.apache.hadoop.fs.FileSystem,
+      live: org.apache.hadoop.fs.Path, old: org.apache.hadoop.fs.Path): Boolean =
+    f.exists(live) || (f.exists(old) && f.rename(old, live))
 
   def drop(schema: String, table: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path(schema, table))
@@ -345,7 +376,9 @@ final case class Warehouse(spark: SparkSession, root: String) {
     *    (rename to live), never delete;
     *  - `partition_backup` — partition-level `.X.__old` leftovers
     *    inside live tables (m14's partition-scoped swaps);
-    *  - `artifact_tmp` — orphaned `_artifacts` temp files.
+    *  - `artifact_tmp` — orphaned `_artifacts` temp files; an
+    *    artifact's `.__old` backup is a `stale_backup` beside its live
+    *    file and an `interrupted_swap` (healed) without one.
     * Cost is O(#directory entries) driver-side metadata ops — no data
     * IO at any warehouse size — so this runs as a routine janitor job.
     */
@@ -403,13 +436,29 @@ final case class Warehouse(spark: SparkSession, root: String) {
         }
     }
     val art = new org.apache.hadoop.fs.Path(s"$root/_artifacts")
-    if (f.exists(art))
-      f.listStatus(art).filter(_.getPath.getName.endsWith(".__tmp")).foreach {
-        s =>
-          if (delete) { f.delete(s.getPath, false); () }
-          out += VacuumAction(s"_artifacts/${s.getPath.getName}", "_artifacts",
-            baseName(s.getPath.getName), "artifact_tmp", did("delete"))
+    if (f.exists(art)) {
+      val files = f.listStatus(art).map(_.getPath)
+      // backups first: one with no live file is the only copy of a
+      // half-committed artifact, restored before its temp file goes
+      files.filter(_.getName.endsWith(".__old")).foreach { p =>
+        val n = p.getName
+        val live = new org.apache.hadoop.fs.Path(art, n.stripSuffix(".__old"))
+        if (!f.exists(live)) {
+          if (delete) require(f.rename(p, live), s"could not restore artifact backup $n")
+          out += VacuumAction(s"_artifacts/$n", "_artifacts", baseName(n),
+            "interrupted_swap", did("heal"))
+        } else {
+          if (delete) { f.delete(p, false); () }
+          out += VacuumAction(s"_artifacts/$n", "_artifacts", baseName(n),
+            "stale_backup", did("delete"))
+        }
       }
+      files.filter(_.getName.endsWith(".__tmp")).foreach { p =>
+        if (delete) { f.delete(p, false); () }
+        out += VacuumAction(s"_artifacts/${p.getName}", "_artifacts",
+          baseName(p.getName), "artifact_tmp", did("delete"))
+      }
+    }
     out.result()
   }
 

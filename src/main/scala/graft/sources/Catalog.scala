@@ -18,8 +18,15 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * launches no Spark job (Spark's own inference runs a one-task job
   * per read). At 100 TB the same code works over a partitioned table
   * root; nothing here assumes single files.
+  *
+  * Building one puts graft's fork-free `file:` filesystem in place on
+  * `spark` ([[graft.io.ForkFreeLocalFs.install]]), as
+  * [[graft.core.Warehouse]] does: a caller may hand in a session graft
+  * did not build.
   */
 final case class Catalog(spark: SparkSession, dir: String) {
+  graft.io.ForkFreeLocalFs.install(spark)
+
   def table(name: String): DataFrame = ParquetFooters.read(spark, s"$dir/$name.parquet")
 
   def region: DataFrame     = table("region")

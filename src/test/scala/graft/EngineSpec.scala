@@ -1382,6 +1382,52 @@ class EngineSpec extends SparkSpec {
     assert(wh.read("s", "t2").count() == expected)
   }
 
+  test("saveArtifact: every crash state leaves the old or the new content, healed by load and vacuum") {
+    import scala.jdk.CollectionConverters._
+    val wh = Warehouse.scratch(spark, "artcrash")
+    val art = java.nio.file.Paths.get(wh.root, "_artifacts")
+    def plant(file: String, s: String) =
+      java.nio.file.Files.writeString(art.resolve(file), s)
+    def present = java.nio.file.Files.list(art).iterator().asScala
+      .map(_.getFileName.toString).filterNot(_.endsWith(".crc")).toSet
+    wh.saveArtifact("seed", "x") // makes the directory, then drop it
+    java.nio.file.Files.delete(art.resolve("seed"))
+    java.nio.file.Files.deleteIfExists(art.resolve(".seed.crc"))
+    // each state a crash can leave, in commit order:
+    plant("a.__tmp", "half-writ")                 // first save, temp file torn
+    plant("b", "b1"); plant("b.__tmp", "b2")      // temp written, live not yet aside
+    plant("c.__old", "c1"); plant("c.__tmp", "c2") // live aside, temp not yet in
+    plant("d", "d2"); plant("d.__old", "d1")      // temp in, backup not yet dropped
+    plant("e.__old", "e1"); plant("e.__tmp", "e2") // as c, for vacuum to find
+    // a load restores the backup a crash left as the only copy
+    assert(Seq("a", "b", "c", "d").map(wh.loadArtifact) ==
+      Seq(None, Some("b1"), Some("c1"), Some("d2")))
+    assert(present == Set("a.__tmp", "b", "b.__tmp", "c", "c.__tmp", "d", "d.__old",
+      "e.__old", "e.__tmp"))
+    // the dry run reports the heal as no deletion, and touches nothing
+    assert(wh.debris().toSet == Set("_artifacts/a.__tmp", "_artifacts/b.__tmp",
+      "_artifacts/c.__tmp", "_artifacts/d.__old", "_artifacts/e.__tmp"))
+    assert(present.contains("e.__old") && !present.contains("e"))
+    val acts = wh.vacuum().map(a => (a.path, a.kind, a.action)).toSet
+    assert(acts == Set(
+      ("_artifacts/a.__tmp", "artifact_tmp", "deleted"),
+      ("_artifacts/b.__tmp", "artifact_tmp", "deleted"),
+      ("_artifacts/c.__tmp", "artifact_tmp", "deleted"),
+      ("_artifacts/d.__old", "stale_backup", "deleted"),
+      ("_artifacts/e.__old", "interrupted_swap", "healed"),
+      ("_artifacts/e.__tmp", "artifact_tmp", "deleted")), acts)
+    assert(present == Set("b", "c", "d", "e"))
+    assert(Seq("b", "c", "d", "e").map(wh.loadArtifact) ==
+      Seq(Some("b1"), Some("c1"), Some("d2"), Some("e1")))
+    assert(wh.vacuum().isEmpty)
+    // a save over a half-committed artifact commits and leaves nothing behind
+    plant("c.__old", "c0"); java.nio.file.Files.delete(art.resolve("c"))
+    plant("c.__tmp", "torn")
+    wh.saveArtifact("c", "c3")
+    assert(wh.loadArtifact("c").contains("c3"))
+    assert(present == Set("b", "c", "d", "e"))
+  }
+
   test("SQL-text models: dep derivation, is_incremental gating, checksum = text") {
     val sql =
       """SELECT a.x FROM {{ ref('stg_a') }} a
